@@ -7,7 +7,6 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
-CPUS="${SPARK_GRAFT_CPUS:-8}"
 
 echo "== 1/4 SURVEY.md §2 inventory drift =="
 python3 dev/check_inventory.py
@@ -16,7 +15,7 @@ echo "== 2/4 sbt test =="
 sbt -batch test
 
 echo "== 3/4 Verify @ $SF =="
-SPARK_GRAFT_CPUS="$CPUS" sbt -batch "runMain graft.Verify $SF target/verify_out"
+sbt -batch "runMain graft.Verify $SF target/verify_out"
 
 echo "== 4/4 DuckDB oracle differential =="
 python3 dev/check_oracle.py "$SF" target/verify_out

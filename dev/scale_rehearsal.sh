@@ -24,33 +24,32 @@ SF1_SET=q_dedup_components,q_dedup_components_star,q_dedup_containment,q_dedup_k
 SF3_SET=q_dedup_semantic,q_graph_adamic_adar,q_dedup_components,q_dedup_components_star
 
 MEM=${SPARK_DRIVER_MEM:-32g}
-CPUS=${SPARK_GRAFT_CPUS:-32}
 
 case "${1:-sf1}" in
   gen_sf1)
-    SPARK_DRIVER_MEM=$MEM SPARK_GRAFT_CPUS=$CPUS \
+    SPARK_DRIVER_MEM=$MEM \
       sbt -batch "runMain graft.ScaleUp /root/testdata/sf0.1 target/sf1 10"
     ;;
   gen_sf3)
-    SPARK_DRIVER_MEM=$MEM SPARK_GRAFT_CPUS=$CPUS \
+    SPARK_DRIVER_MEM=$MEM \
       sbt -batch "runMain graft.ScaleUp /root/testdata/sf0.1 target/sf3 30"
     ;;
   sf1)
     SPARK_DRIVER_MEM=$MEM SPARK_GRAFT_SF_DIR=target/sf1 \
-      SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_BENCH_RUNS=3 \
+      SPARK_GRAFT_BENCH_RUNS=3 \
       SPARK_GRAFT_BENCH_ONLY=$SF1_SET \
       sbt -batch "runMain graft.Bench"
     ;;
   sf3)
     SPARK_DRIVER_MEM=$MEM SPARK_GRAFT_SF_DIR=target/sf3 \
-      SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_BENCH_RUNS=3 \
+      SPARK_GRAFT_BENCH_RUNS=3 \
       SPARK_GRAFT_BENCH_ONLY=$SF3_SET \
       sbt -batch "runMain graft.Bench"
     ;;
   verify_sf1)
     # Full 272-query oracle differential at sf1: Verify dump + DuckDB
     # replay. The committed artifact is CORRECTNESS_sf1.json.
-    SPARK_DRIVER_MEM=$MEM SPARK_GRAFT_CPUS=$CPUS \
+    SPARK_DRIVER_MEM=$MEM \
       sbt -batch "runMain graft.Verify target/sf1 target/verify_sf1"
     # --jobs 8: fan the heavy recursive-CTE oracles over workers.
     # --rtol 1e-12: double sums in the e10 range differ by last-ulp

@@ -1,58 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_BENCH_ONLY (dev-only; the driver leaves it unset →
     // all queries) restricts the run to a comma-separated name list —
     // the scale-rehearsal protocol benches the expensive tail at sf1
     // without paying for 270 queries per iteration.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // A typo in the list must abort, not silently bench a smaller set
-    // (the same silent-shrink failure mode the failed-query accounting
-    // exists to prevent).
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: " +
-          unknown.toSeq.sorted.mkString(", "))
-    }
-    val queries = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    // Session hygiene between queries (NOT inside any timed region):
-    // every pin (localCheckpoint) a query materialized and did not
-    // already release stays in the block store until driver GC happens
-    // to collect its wrapper — across a 324-query session that is
-    // hundreds of leaked persisted RDDs, storage fills, and whichever
-    // queries run after the cliff pay 10-70× (the r13 282 s → 1004 s
-    // full-bench collapse). Each query recomputes from parquet either
-    // way (pins are built inside the query's own timed region), so the
-    // sweep changes memory pressure only, never what is measured.
-    // blocking = true: the sweep runs outside the timed region, so
-    // waiting the few ms for block removal is free — and it guarantees
-    // the NEXT query starts with an empty block store instead of
-    // racing the async cleaner (observed: pin-heavy queries ran 2-3x
-    // slower mid-session than isolated while async removals lagged).
-    def sweepPins(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+    val queries = SparkEntry.select(only)
+    val spark = GraftSession()
     // Untimed warm-up pass: JVM/codegen JIT, parquet footer caches, and
     // broadcast paths all pay first-use costs that would otherwise land
     // on whichever query happens to run first (observed: +4 s on a
     // 0.4 s query). The timed pass below measures steady state.
     queries.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      sweepPins()
+      GraftSession.sweepPins(spark)
     }
     // SPARK_GRAFT_BENCH_RUNS > 1 (dev-only; the driver leaves it unset
     // → 1, identical behavior) times each query N times and reports
@@ -72,7 +35,7 @@ object Bench {
         try { fn(spark, sfDir).count() }
         catch { case _: Throwable => failed += name }
         val dt = (System.nanoTime() - t0) / 1e9
-        sweepPins() // after the clock stops; see above
+        GraftSession.sweepPins(spark) // after the clock stops
         dt
       }.min
       name -> best

@@ -1,15 +1,42 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-/** Dev tool: dump formatted physical plans of representative queries
-  * into PLANS.md so plan shape is reviewable without running Spark.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+/** Dev tool: dump formatted physical plans (AQE initial plans) in the
+  * GraftSession shape.
+  *
+  *   runMain graft.PlanDump
+  *     writes PLANS.md from the representative picks below at sf0.001,
+  *     so plan shape is reviewable without running Spark;
+  *   runMain graft.PlanDump <outDir> <suffix> <q1,q2,...>
+  *     writes <outDir>/<q>_<suffix>.txt per named query at
+  *     $SPARK_GRAFT_SF_DIR (default sf0.1, the bench's scale), e.g.
+  *     before/after an optimization.
   */
 object PlanDump {
+  private def plan(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    require(args.isEmpty || args.length == 3,
+      "usage: PlanDump [<outDir> <suffix> <q1,q2,...>]")
+    val spark = GraftSession()
+    if (args.isEmpty) writePlansMd(spark)
+    else {
+      val Array(outDir, suffix, names) = args
+      val sfDir =
+        sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+      Files.createDirectories(Paths.get(outDir))
+      SparkEntry.select(Some(names)).foreach { case (name, fn) =>
+        val out = Paths.get(outDir, s"${name}_$suffix.txt")
+        Files.writeString(out, plan(fn(spark, sfDir)))
+        println(s"[plandump] wrote $out")
+      }
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(spark: SparkSession): Unit = {
     val dir = "/root/testdata/sf0.001"
     val picks = Seq(
       "q_agg_pricing_summary" -> "flagship: scan with pushed filter -> two-phase hash-agg -> sort",
@@ -75,18 +102,16 @@ object PlanDump {
       "q_text_bpe_encode" -> "BPE encode: merges learn+apply on the vocab-bounded dict; word->count map broadcast onto the corpus",
       "q_multimodal_video" -> "video decode: container walk + per-frame BMP decode fused in one map stage, media never shuffles")
     val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans (sf0.001, AQE initial plans)\n\n")
+    sb.append(s"# PLANS — formatted physical plans ($dir, " +
+      s"${spark.sparkContext.master}, AQE initial plans)\n\n")
     sb.append("Generated by `graft.PlanDump`. What to look for: `PushedFilters`/`ReadSchema`\n")
     sb.append("on scans (pushdown + pruning), `BroadcastHashJoin` on dims, `partial_*`\n")
     sb.append("aggregates before every Exchange, `TakeOrderedAndProject` for top-k.\n")
     picks.foreach { case (name, note) =>
-      val df = SparkEntry.queries(name)(spark, dir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $name\n\n$note\n\n```\n$plan```\n")
+      val p = plan(SparkEntry.queries(name)(spark, dir))
+      sb.append(s"\n## $name\n\n$note\n\n```\n$p```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
-    spark.stop()
   }
 }

@@ -35,6 +35,22 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.flatMap(_.queries).toMap
 
+  /** The queries named in a comma-separated list (spaces and empty
+    * entries ignored), or all of them for `None`. An unknown name
+    * throws: a typo must abort, not silently run a smaller set.
+    */
+  def select(names: Option[String])
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    names.fold(all) { csv =>
+      val wanted = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = wanted -- all.keySet
+      require(unknown.isEmpty, "names not in SparkEntry.queries: " +
+        unknown.toSeq.sorted.mkString(", "))
+      all.filter(kv => wanted(kv._1))
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

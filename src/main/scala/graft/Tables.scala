@@ -63,31 +63,22 @@ object Norm {
     */
   def r4(c: Column): Column = round(c.cast("double"), 4)
 
-  /** Tie-proof 4dp rounding for NON-NEGATIVE doubles:
-    * floor(x*1e4 + 0.5)/1e4 on the same IEEE double in both engines.
-    * Use instead of [[r4]] whenever the value is an average (or any
-    * quotient) that could land exactly on a .00005 tie — Spark `round`
-    * is HALF_UP, DuckDB half-even, so a tie at the 4th decimal would
-    * hash-mismatch; floor of the identical double cannot. Rounds
-    * half-toward-+inf, which differs from round() for NEGATIVE inputs —
-    * callers must guarantee c >= 0. Oracle twin:
+  /** Tie-proof 4dp rounding: floor(x*1e4 + 0.5)/1e4 on the same IEEE
+    * double in both engines. Use instead of [[r4]] whenever the value
+    * is an average (or any quotient) that could land exactly on a
+    * .00005 tie — Spark `round` is HALF_UP, DuckDB half-even, so a tie
+    * at the 4th decimal would hash-mismatch; floor of the identical
+    * double cannot. Signed inputs (cosines in [-1, 1], differences,
+    * rank keys) are fine too: for negatives it rounds
+    * half-toward-+inf rather than HALF_UP, which does not matter
+    * wherever the requirement is that both engines emit the IDENTICAL
+    * double, not a specific half-tie convention. Oracle twin:
     * floor(x * 10000 + 0.5) / 10000.
     */
   def r4tie(c: Column): Column = floor(c * 10000 + 0.5) / 10000
 
-  /** Deterministic 4dp rounding for SIGNED rank keys and outputs:
-    * the same floor(x*1e4 + 0.5)/1e4 expression as [[r4tie]], but
-    * documented for inputs of either sign (cosines in [-1, 1]). For
-    * negatives it rounds half-toward-+inf rather than HALF_UP — fine
-    * wherever the requirement is that both engines emit the IDENTICAL
-    * double (rank ordering keys, audit outputs), not a specific
-    * half-tie convention. Oracle twin: floor(x * 10000 + 0.5) / 10000.
-    */
-  def r4s(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-
   /** Sign-safe deterministic 4dp truncation: floor(x*1e4)/1e4 — rounds
-    * toward -inf, so unlike [[r4tie]] it needs no non-negativity
-    * precondition and unlike [[r4]] it has no half-way tie (floor is a
+    * toward -inf, so unlike [[r4]] it has no half-way tie (floor is a
     * step function whose only sensitivity is an argument landing
     * exactly on an integer, which identical IEEE doubles on both
     * engines either both do or both don't). Use for signed outputs

@@ -1,44 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Optional 3rd arg: comma-separated query-name filter (dev-only
-    // fast path for iterating on one query; the driver passes 2 args).
+    // Optional 3rd arg: comma-separated query-name filter (iterating on
+    // one query; e2ebench/crosscheck.py checks its query set this way).
+    // A full correctness dump passes 2 args.
     val Array(sfDir, outDir) = args.take(2)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = SparkEntry.select(args.lift(2))
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // A query that throws must be LOUD: it is recorded in
     // verify_errors.json, counted on stdout, and fails the exit code —
     // otherwise a crashing query silently vanishes from the driver's
     // CORRECTNESS compare (round 7 lost 33 queries exactly this way).
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
       }
-      // Session hygiene: release the query's surviving pins so a
-      // 324-query session never accumulates leaked persisted RDDs
-      // (same sweep as Bench, same rationale — blocking, so the next
-      // query never runs under the async cleaner's backlog).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      GraftSession.sweepPins(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -58,8 +43,7 @@ object Verify {
     val errJson = errors
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
-    println(s"[verify] ${errors.size} failed of " +
-      s"${SparkEntry.queries.count { case (n, _) => only.forall(_.contains(n)) }} queries")
+    println(s"[verify] ${errors.size} failed of ${queries.size} queries")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -2100,12 +2100,12 @@ object ops {
         .select(id.as("id"), vec.as("_emb"))
         .crossJoin(broadcast(ev))
         .select(col("id"),
-          // r4s, not round: the max below ranks these values, and a
+          // r4tie, not round: the max below ranks these values, and a
           // cosine landing exactly on .xxxx5 would round differently
           // in Spark (HALF_UP) vs the replaying oracle — the r11
           // knife-edge class. floor(x*1e4+0.5)/1e4 is the same IEEE
           // expression in both engines for either sign.
-          graft.Norm.r4s(GraftFunctions.cosine_sim(col("_emb"),
+          graft.Norm.r4tie(GraftFunctions.cosine_sim(col("_emb"),
             col("_ev_emb"))).as("_c"))
         .groupBy("id")
         .agg(max(col("_c")).as("max_cos_eval"))

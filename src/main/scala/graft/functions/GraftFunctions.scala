@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions._
@@ -68,17 +68,11 @@ object GraftFunctions {
     aes_ecb_decrypt(wrapped, kek)
 
   /** SQL-name registration so `spark.sql("... hmac_sha256(k, d) ...")`
-    * works; injectable via SparkSession.builder.withExtensions or
-    * callable on an existing session.
+    * works; every [[graft.GraftSession]] injects it as a session
+    * extension.
     */
   def registerExtensions(ext: SparkSessionExtensions): Unit =
     allFunctions.foreach(ext.injectFunction)
-
-  def register(spark: SparkSession): Unit =
-    allFunctions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(ident, info, builder)
-    }
 
   private type FunctionEntry =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)

@@ -2185,9 +2185,9 @@ object Aggregates extends QueryModule {
     val zHi = (delta - (ma - mb)) / se
     w.select(col("na"), col("nb"),
         Norm.r4tie(ma).as("mean_a"), Norm.r4tie(mb).as("mean_b"),
-        Norm.r4s(ma - mb).as("diff"),
+        Norm.r4tie(ma - mb).as("diff"),
         Norm.r4tie(se).as("se"),
-        Norm.r4s(zLo).as("z_lower"), Norm.r4s(zHi).as("z_upper"))
+        Norm.r4tie(zLo).as("z_lower"), Norm.r4tie(zHi).as("z_upper"))
       .withColumn("equivalent",
         least(col("z_lower"), col("z_upper")) >= 1.645)
   }
@@ -2228,7 +2228,7 @@ object Aggregates extends QueryModule {
     val pe = d(peNum) / d(col("n") * col("n"))
     g.select(col("lang"), col("n"), col("n11"), col("n00"),
         Norm.r4tie(po).as("p_o"), Norm.r4tie(pe).as("p_e"),
-        Norm.r4s((po - pe) / (lit(1.0) - pe)).as("kappa"))
+        Norm.r4tie((po - pe) / (lit(1.0) - pe)).as("kappa"))
       .orderBy("lang")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Norm, QueryModule, Tables}
+import graft.{GraftSession, Norm, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** Scan / projection / filter / sink operators (SURVEY.md §2.B
@@ -325,14 +325,10 @@ object Scans extends QueryModule {
       .partitionBy("o_orderstatus").parquet(base)
     val corrected = orders.filter(col("o_orderstatus") === "F")
       .withColumn("o_totalprice", col("o_totalprice") * 0.9)
-    val confKey = "spark.sql.sources.partitionOverwriteMode"
-    val prior = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "dynamic")
-    try corrected.write.mode("overwrite")
-      .partitionBy("o_orderstatus").parquet(base)
-    finally prior match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
+    GraftSession.withConf(spark,
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      corrected.write.mode("overwrite")
+        .partitionBy("o_orderstatus").parquet(base)
     }
     spark.read.parquet(base)
       .select(col("o_orderkey"), col("o_custkey"),

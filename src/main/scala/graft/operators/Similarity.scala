@@ -117,7 +117,7 @@ object Similarity extends QueryModule {
       .orderBy(col("cos_sim").desc, col("hard_neg"))
     cands.join(broadcast(anchors), col("label") =!= col("neg_label"))
       .select(col("aid"), col("label"), col("hard_neg"), col("neg_label"),
-        Norm.r4s(cosine(col("ae"), col("be"))).as("cos_sim"))
+        Norm.r4tie(cosine(col("ae"), col("be"))).as("cos_sim"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("aid"), col("label"), col("hard_neg"), col("neg_label"),
@@ -149,7 +149,7 @@ object Similarity extends QueryModule {
       .orderBy(col("cos_sim").desc, col("dst"))
     cands.join(broadcast(anchors), col("src") =!= col("dst"))
       .select(col("src"), col("dst"),
-        Norm.r4s(cosine(col("ae"), col("be"))).as("cos_sim"))
+        Norm.r4tie(cosine(col("ae"), col("be"))).as("cos_sim"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 3)
       .select(col("src"), col("rank"), col("dst"), col("cos_sim"))
@@ -522,7 +522,7 @@ object Similarity extends QueryModule {
       .orderBy(col("cos_sim").desc, col("vec_id"))
     e.join(queries, "cell")
       .select(col("qid"), col("vec_id"),
-        Norm.r4s(cosine(col("emb"), col("qv"))).as("cos_sim"))
+        Norm.r4tie(cosine(col("emb"), col("qv"))).as("cos_sim"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
       .orderBy("qid", "rank")
@@ -578,21 +578,21 @@ object Similarity extends QueryModule {
     val agraph = anch.join(broadcast(anch.select(col("aid").as("nid"),
         col("aemb").as("nemb"))), col("aid") =!= col("nid"))
       .select(col("aid"), col("nid"),
-        Norm.r4s(cosine(col("aemb"), col("nemb"))).as("acs"))
+        Norm.r4tie(cosine(col("aemb"), col("nemb"))).as("acs"))
       .withColumn("rn", row_number().over(wA))
       .filter(col("rn") <= M).select("aid", "nid")
     val wL = Window.partitionBy("aid")
       .orderBy(col("lcs").desc, col("vec_id"))
     val leaves = e.crossJoin(broadcast(anch))
       .select(col("aid"), col("vec_id"),
-        Norm.r4s(cosine(col("emb"), col("aemb"))).as("lcs"))
+        Norm.r4tie(cosine(col("emb"), col("aemb"))).as("lcs"))
       .withColumn("rn", row_number().over(wL))
       .filter(col("rn") <= L)
       .select(col("aid"), col("vec_id").as("lid"))
     // query→pivot scores: AuditN × AnchorN rows, reused every round
     val qa = q.crossJoin(broadcast(anch))
       .select(col("qid"), col("aid"),
-        Norm.r4s(cosine(col("qv"), col("aemb"))).as("qac"))
+        Norm.r4tie(cosine(col("qv"), col("aemb"))).as("qac"))
       .localCheckpoint()
     val entry = anch
       .orderBy(md5(col("aid").cast("string")), col("aid")).limit(1)
@@ -618,12 +618,12 @@ object Similarity extends QueryModule {
       .join(e.select(col("vec_id"), col("emb")), "vec_id")
       .join(broadcast(q), "qid")
       .select(col("qid"), col("vec_id"),
-        Norm.r4s(cosine(col("emb"), col("qv"))).as("cs"))
+        Norm.r4tie(cosine(col("emb"), col("qv"))).as("cs"))
       .withColumn("rn", row_number().over(wTop))
       .filter(col("rn") <= 10).select("qid", "vec_id")
     val exact = e.crossJoin(broadcast(q))
       .select(col("qid"), col("vec_id"),
-        Norm.r4s(cosine(col("emb"), col("qv"))).as("cs"))
+        Norm.r4tie(cosine(col("emb"), col("qv"))).as("cs"))
       .withColumn("rn", row_number().over(wTop))
       .filter(col("rn") <= 10).select("qid", "vec_id")
     val hits = exact.join(nsw10, Seq("qid", "vec_id"), "left_semi")
@@ -661,7 +661,7 @@ object Similarity extends QueryModule {
       .orderBy(col("cos_sim").desc, col("vec_id"))
     val exact = e.crossJoin(broadcast(queries))
       .select(col("qid"), col("vec_id"),
-        Norm.r4s(cosine(col("emb"), col("qv"))).as("cos_sim"))
+        Norm.r4tie(cosine(col("emb"), col("qv"))).as("cos_sim"))
       .withColumn("rank", row_number().over(wq))
       .filter(col("rank") <= 10)
       .select(col("qid"), col("vec_id"))
@@ -719,7 +719,7 @@ object Similarity extends QueryModule {
       .orderBy(col("cos_sim").desc, col("vec_id"))
     val exact = e.crossJoin(broadcast(queries))
       .select(col("qid"), col("vec_id"),
-        Norm.r4s(cosine(col("emb"), col("qv"))).as("cos_sim"))
+        Norm.r4tie(cosine(col("emb"), col("qv"))).as("cos_sim"))
       .withColumn("rank", row_number().over(wq))
       .filter(col("rank") <= 10)
     val ann = annIvf(spark, dir, k = 16, nProbe = nProbe, topK = 10,
@@ -761,7 +761,7 @@ object Similarity extends QueryModule {
     val scored = e.crossJoin(broadcast(queries))
       .select(col("qid"), col("vec_id"),
         explode(array(dims.map(d => struct(lit(d).as("dim"),
-          Norm.r4s(cosine(slice(col("emb"), 1, d),
+          Norm.r4tie(cosine(slice(col("emb"), 1, d),
             slice(col("qv"), 1, d))).as("cs"))): _*)).as("x"))
       .select(col("qid"), col("vec_id"), col("x.dim").as("dim"),
         col("x.cs").as("cs"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Norm, QueryModule}
+import graft.{GraftSession, Norm, QueryModule}
 import graft.streaming.Streams
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -102,35 +102,28 @@ object StreamScored extends QueryModule {
     // that never terminated) would make start() throw on the duplicate
     // name — stop it first so reruns in one session are safe.
     spark.streams.active.filter(_.name == name).foreach(_.stop())
-    val confs = Seq(
-      "spark.sql.streaming.forceDeleteTempCheckpointLocation" -> "true",
-      "spark.sql.streaming.noDataMicroBatches.enabled" ->
-        finalize.toString,
-      "spark.sql.shuffle.partitions" -> streamStateParts)
-    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     // Fresh UUID subdir per drain: reusing a per-name dir would RESUME
     // from the prior run's committed offsets and emit nothing.
     val ckpt = ckptRoot.map(r =>
       s"$r/$name-${java.util.UUID.randomUUID()}")
-    try {
-      val w0 = out.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-      val q = ckpt.fold(w0)(c => w0.option("checkpointLocation", c))
-        .start()
-      q.awaitTermination()
-    } finally {
-      prior.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      // Restore rather than leak the session-wide conf mutations (the
-      // batch half of every scored query must keep the session's own
-      // parallelism), and reap the ephemeral checkpoint.
-      ckpt.foreach(c => deleteRec(new java.io.File(c)))
+    // Scoped rather than leaked session-wide conf mutations (the batch
+    // half of every scored query must keep the session's own
+    // parallelism); the ephemeral checkpoint is reaped either way.
+    GraftSession.withConf(spark,
+      "spark.sql.streaming.forceDeleteTempCheckpointLocation" -> "true",
+      "spark.sql.streaming.noDataMicroBatches.enabled" ->
+        finalize.toString,
+      "spark.sql.shuffle.partitions" -> streamStateParts) {
+      try {
+        val w0 = out.writeStream
+          .format("memory")
+          .queryName(name)
+          .outputMode(mode)
+          .trigger(Trigger.AvailableNow())
+        val q = ckpt.fold(w0)(c => w0.option("checkpointLocation", c))
+          .start()
+        q.awaitTermination()
+      } finally ckpt.foreach(c => deleteRec(new java.io.File(c)))
     }
     spark.table(name)
   }
@@ -163,28 +156,21 @@ object StreamScored extends QueryModule {
       s"$r/$name-${java.util.UUID.randomUUID()}")).getOrElse(
       Scans.tmpPath(spark, s"$name-ckpt-${java.util.UUID.randomUUID()}"))
     val ephemeralCkpt = ckpt == null
-    val confs = Seq(
+    GraftSession.withConf(spark,
       "spark.sql.streaming.noDataMicroBatches.enabled" ->
         finalize.toString,
-      "spark.sql.shuffle.partitions" -> streamStateParts)
-    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val q = out.writeStream
-        .format("parquet")
-        .queryName(name)
-        .outputMode(OutputMode.Append())
-        .option("path", sinkPath)
-        .option("checkpointLocation", ckptPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prior.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      if (ephemeralCkpt) deleteRec(new java.io.File(ckptPath))
+      "spark.sql.shuffle.partitions" -> streamStateParts) {
+      try {
+        val q = out.writeStream
+          .format("parquet")
+          .queryName(name)
+          .outputMode(OutputMode.Append())
+          .option("path", sinkPath)
+          .option("checkpointLocation", ckptPath)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      } finally if (ephemeralCkpt) deleteRec(new java.io.File(ckptPath))
     }
     spark.read.parquet(sinkPath)
   }
@@ -213,16 +199,11 @@ object StreamScored extends QueryModule {
     // blows past JIT limits; the marginal per-row cost is only
     // ~0.8 µs either way). Interpreted expression eval is the honest
     // winner for this one plan; every other query keeps codegen.
-    val key = "spark.sql.codegen.wholeStage"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    val drained =
-      try runToTable(counts, OutputMode.Complete(), "graft_stream_decrypt",
+    val drained = GraftSession.withConf(spark,
+        "spark.sql.codegen.wholeStage" -> "false") {
+      runToTable(counts, OutputMode.Complete(), "graft_stream_decrypt",
         finalize = false)
-      finally prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    }
     drained
       .select(Norm.tstr(col("wstart")).as("wstart"), col("n_messages"))
       .orderBy("wstart")
@@ -302,11 +283,9 @@ object StreamScored extends QueryModule {
     * faster side's clock is authoritative and `max` is exact, not a
     * relaxation. Restored after the drain.
     */
-  val streamJoinLeft: Q = (spark, dir) => {
-    val key = "spark.sql.streaming.multipleWatermarkPolicy"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "max")
-    try {
+  val streamJoinLeft: Q = (spark, dir) =>
+    GraftSession.withConf(spark,
+      "spark.sql.streaming.multipleWatermarkPolicy" -> "max") {
       val joined = Streams.clickPurchaseLeftJoin(
         Streams.eventsFileStream(spark, dir),
         Streams.eventsFileStream(spark, dir),
@@ -318,11 +297,7 @@ object StreamScored extends QueryModule {
           sum(when(col("purchase_id").isNull, 1L).otherwise(0L))
             .as("n_unmatched"),
           countDistinct(col("c_user")).as("n_users"))
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
-  }
 
   /** Shared body of the two stateful-counter scored queries: feed the
     * events stream with `value` pre-folded to integer cents
@@ -525,12 +500,9 @@ object StreamScored extends QueryModule {
       .filter(col("event_type") === "purchase")
       .select(col("user_id"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-    val confs = Seq(
+    GraftSession.withConf(spark,
       "spark.sql.streaming.forceDeleteTempCheckpointLocation" -> "true",
-      "spark.sql.shuffle.partitions" -> streamStateParts)
-    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.shuffle.partitions" -> streamStateParts) {
       val q = changes.writeStream.outputMode("append")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -542,11 +514,6 @@ object StreamScored extends QueryModule {
         }
         .start()
       q.awaitTermination()
-    } finally {
-      prior.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
     snapshot.orderBy("user_id")
   }

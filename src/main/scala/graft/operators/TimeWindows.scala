@@ -1623,7 +1623,7 @@ object TimeWindows extends QueryModule {
       .join(varPer, Seq("event_type"))
       .select(col("event_type"), col("n").as("n_days"),
         (col("var_cents").cast("double") / 100.0).as("var95_usd"),
-        Norm.r4s(col("tail_cents").cast("double")
+        Norm.r4tie(col("tail_cents").cast("double")
           / col("n_tail").cast("double") / 100.0).as("cvar95_usd"),
         col("n_tail"))
       .orderBy("event_type")
@@ -1703,7 +1703,7 @@ object TimeWindows extends QueryModule {
         Norm.r4tie(col("a30")).as("avg_rs_30"),
         Norm.r4tie(col("a60")).as("avg_rs_60"),
         Norm.r4tie(col("a120")).as("avg_rs_120"),
-        Norm.r4s((log(col("a120")) - log(col("a30"))) / lit(twoLn2))
+        Norm.r4tie((log(col("a120")) - log(col("a30"))) / lit(twoLn2))
           .as("hurst"))
       .orderBy("event_type")
   }

@@ -152,17 +152,11 @@ object Streams {
     * scoped here and the plan builders below never mutate session
     * conf themselves.
     */
-  def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T =
+    graft.GraftSession.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )(body)
 
   /** A1: unbounded source — file-based `readStream` over the events
     * table (the batch stand-in for a Pub/Sub/Kafka subscription).

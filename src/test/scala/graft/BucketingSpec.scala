@@ -20,9 +20,9 @@ class BucketingSpec extends SparkSpec {
       .sortBy("l_orderkey").saveAsTable("li_b")
     ord.write.mode("overwrite").bucketBy(8, "o_orderkey")
       .sortBy("o_orderkey").saveAsTable("ord_b")
-    try {
-      // Force the shuffle-join comparison point: no broadcast.
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // Force the shuffle-join comparison point: no broadcast.
+    try GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val bucketed = spark.table("li_b")
         .join(spark.table("ord_b"), col("l_orderkey") === col("o_orderkey"))
       val plan = bucketed.queryExecution.executedPlan.toString
@@ -36,7 +36,6 @@ class BucketingSpec extends SparkSpec {
       assert(math.abs(b.getDouble(0) - p.getDouble(0)) < 1e-6)
       assert(math.abs(b.getDouble(1) - p.getDouble(1)) < 1e-4)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.sql("DROP TABLE IF EXISTS li_b")
       spark.sql("DROP TABLE IF EXISTS ord_b")
     }

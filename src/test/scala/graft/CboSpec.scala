@@ -36,12 +36,11 @@ class CboSpec extends SparkSpec {
     val expected = Tables(spark, sfDir, "customer").count()
     // rowCount surfaces through the stats visitor only under CBO —
     // without it Catalyst plans on sizeInBytes alone.
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try {
+    GraftSession.withConf(spark, "spark.sql.cbo.enabled" -> "true") {
       val stats = spark.table("graft_cbo.customer")
         .queryExecution.optimizedPlan.stats
       assert(stats.rowCount.contains(BigInt(expected)), stats.toString)
-    } finally spark.conf.set("spark.sql.cbo.enabled", "false")
+    }
   }
 
   test("column statistics carry distinct counts for join estimation") {
@@ -57,9 +56,8 @@ class CboSpec extends SparkSpec {
 
   test("CBO propagates cardinality through a join plan") {
     setup()
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    try {
+    GraftSession.withConf(spark, "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true") {
       // Assert on the JOIN node itself — the aggregate above it
       // estimates ~NDV(c_mktsegment) rows, which would pass any bound
       // regardless of how wrong the join cardinality is.
@@ -80,9 +78,6 @@ class CboSpec extends SparkSpec {
       assert(est.get.toDouble >= trueCard / 10.0 &&
         est.get.toDouble <= trueCard * 10.0,
         s"est=${est.get} true=$trueCard")
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
     }
   }
 
@@ -97,7 +92,7 @@ class CboSpec extends SparkSpec {
     // SURVEY §4 records when this works vs when q_join_salted's
     // manual salting is still required.
     import org.apache.spark.sql.functions.{col, when, lit, md5, concat}
-    val confs = Seq(
+    GraftSession.withConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
@@ -105,10 +100,7 @@ class CboSpec extends SparkSpec {
       // factor=1.0: with only 4 shuffle partitions the hot one must
       // merely exceed the median, not 5x it, to be declared skewed.
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "50000")
-    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "50000") {
       // ~96 bytes of hash padding per row: two sorted longs lz4-compress
       // to almost nothing, so without it the 150k-row hot partition can
       // land UNDER the 100 kB shuffle-size threshold and the mechanism
@@ -146,9 +138,6 @@ class CboSpec extends SparkSpec {
       assert(smj.nonEmpty, adaptive.toString)
       assert(smj.exists(_.isSkewJoin),
         s"hot partition not split:\n${adaptive.executedPlan}")
-    } finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -22,21 +22,10 @@ class PlanSpec extends SparkSpec {
     * matters (the r13 lesson: these two pins held at bench scale and
     * failed in the test session).
     */
-  private def planLarge(name: String): String = {
-    val conf = spark.conf
-    val oldPin = conf.getOption("spark.graft.pin.targetPartitionBytes")
-    val oldBc = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    conf.set("spark.graft.pin.targetPartitionBytes", "1")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try plan(name)
-    finally {
-      oldPin match {
-        case Some(v) => conf.set("spark.graft.pin.targetPartitionBytes", v)
-        case None => conf.unset("spark.graft.pin.targetPartitionBytes")
-      }
-      conf.set("spark.sql.autoBroadcastJoinThreshold", oldBc)
-    }
-  }
+  private def planLarge(name: String): String =
+    GraftSession.withConf(spark,
+      "spark.graft.pin.targetPartitionBytes" -> "1",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(plan(name))
 
   private def countOcc(hay: String, needle: String): Int =
     hay.sliding(needle.length).count(_ == needle)
@@ -113,20 +102,14 @@ class PlanSpec extends SparkSpec {
     // The size heuristic vetoes DPP on a KB-scale fixture (pruning
     // benefit ∝ table size); disable it — the assertion is that the
     // MECHANISM fires, production scale supplies the benefit.
-    spark.conf.set(
-      "spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-    spark.conf.set(
-      "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio",
-      "100000")
-    try {
+    GraftSession.withConf(spark,
+      "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
+      "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" ->
+        "100000") {
       val q = fact.join(dim.filter(col("label") === "final"),
         fact("o_orderstatus") === dim("st"))
       val p = q.queryExecution.executedPlan.toString
       assert(p.toLowerCase.contains("dynamicpruning"), p)
-    } finally {
-      spark.conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
-      spark.conf.unset(
-        "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio")
     }
   }
 
@@ -169,12 +152,12 @@ class PlanSpec extends SparkSpec {
   test("q_hmac_verify stays inside whole-stage codegen") {
     // AQE defers stage creation, so the codegen explain is empty until
     // execution; disable it for this one planning-only check.
-    val s = try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val s = GraftSession.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "false") {
       SparkEntry.queries("q_hmac_verify")(spark, sfDir).queryExecution
         .explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     assert(s.contains("WholeStageCodegen"), s.take(500))
     // The generated code must call the kernel directly — proof the
     // custom expression fused instead of falling back to interpreted.
@@ -182,12 +165,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_sim_cosine_topk cosine fuses into whole-stage codegen") {
-    val s = try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val s = GraftSession.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "false") {
       SparkEntry.queries("q_sim_cosine_topk")(spark, sfDir).queryExecution
         .explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     // The generated code must call the native kernel — proof the vector
     // expression fused instead of interpreted zip_with/aggregate lambdas.
     assert(s.contains("VectorKernels"), s.take(500))
@@ -344,14 +327,11 @@ class PlanSpec extends SparkSpec {
     // partition exceeds the (lowered) threshold must come out of the
     // final adaptive plan split, visible as skew=true on the SMJ.
     import org.apache.spark.sql.functions._
-    val confs = Seq(
+    GraftSession.withConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB")
-    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB") {
       // Incompressible payload (md5) so the hot partition's SHUFFLE
       // bytes, not just row count, cross the lowered threshold; and
       // the downstream agg groups on a DIFFERENT key than the join --
@@ -370,9 +350,6 @@ class PlanSpec extends SparkSpec {
       j.collect() // drive to completion so the adaptive plan finalizes
       val p = j.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"), p)
-    } finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

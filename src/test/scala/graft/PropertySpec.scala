@@ -1258,10 +1258,8 @@ class PropertySpec extends SparkSpec {
     import graft.api.ops._
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    val conf = spark.conf
-    val oldPin = conf.getOption("spark.graft.pin.targetPartitionBytes")
-    conf.set("spark.graft.pin.targetPartitionBytes", "1") // force >1 part
-    try {
+    GraftSession.withConf(spark,
+        "spark.graft.pin.targetPartitionBytes" -> "1") { // force >1 part
       val left = (0L until 200L).map(i => (i, i % 7)).toDF("k", "v")
         .select(col("k").as("kk"), col("v")) // the alias under test
       val right = (0L until 200L by 2L).map(i => (i, i * 3)).toDF("kk", "w")
@@ -1292,11 +1290,6 @@ class PropertySpec extends SparkSpec {
       releasePin(pinned)
       assert(!spark.sparkContext.getPersistentRDDs.contains(rddId),
         "releasePin left the pin's RDD registered")
-    } finally {
-      oldPin match {
-        case Some(v) => conf.set("spark.graft.pin.targetPartitionBytes", v)
-        case None => conf.unset("spark.graft.pin.targetPartitionBytes")
-      }
     }
   }
 }

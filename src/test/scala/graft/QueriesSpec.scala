@@ -26,6 +26,17 @@ class QueriesSpec extends SparkSpec {
     assert(o.subsetOf(q), s"oracle keys without query: ${o.diff(q)}")
   }
 
+  test("select: an unknown name throws, a valid subset selects exactly it") {
+    val err = intercept[IllegalArgumentException] {
+      SparkEntry.select(Some("q_agg_pricing_summary,q_no_such_query"))
+    }
+    assert(err.getMessage.contains("q_no_such_query"))
+    val picked = SparkEntry.select(
+      Some(" q_agg_pricing_summary, q_msg_pipeline ,,"))
+    assert(picked.keySet === Set("q_agg_pricing_summary", "q_msg_pipeline"))
+    assert(SparkEntry.select(None).keySet === SparkEntry.queries.keySet)
+  }
+
   test("GraphSpine-backed builds match the inline per-query edge builds") {
     import graft.api.ops._
     val li = Tables(spark, sfDir, "lineitem")
