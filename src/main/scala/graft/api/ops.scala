@@ -326,19 +326,17 @@ object ops {
       s"(((($a >> $i) & 1) << ${2 * i}) | ((($b >> $i) & 1) << ${2 * i + 1}))"
     }.mkString("(", " | ", ")")
 
-  /** Lineage pin for iterative / multi-consumer frames. The default
-    * (`reliable = false`) is `localCheckpoint()`: executor-memory-
-    * backed, fast, and the right choice single-node — but NOT
-    * fault-tolerant. On a real cluster a lost executor makes the
-    * pinned partitions unrecoverable and fails the job, and at 100 TB
-    * on 1000 executors, executor loss is routine, not exceptional —
-    * so long-running iterative jobs (components, PageRank, dup-ngram
-    * corpora) pass `reliable = true`, which routes to `checkpoint()`
-    * under the SparkContext checkpoint directory (HDFS / object
-    * store): slower per round (a write + read of the frame) but the
-    * pinned state survives executor loss. Requires
-    * `sc.setCheckpointDir(...)` — enforced loudly here, because
-    * `checkpoint()` without a dir fails deep inside the job instead.
+  /** Lineage pin for iterative / multi-consumer frames. Durability
+    * is the session's, never the caller's: with no checkpoint dir the
+    * pin is `localCheckpoint()` — executor-memory-backed, fast, and the
+    * right choice single-node, but NOT fault-tolerant (a lost executor
+    * makes the pinned partitions unrecoverable and fails the job). On a
+    * real cluster, where executor loss at 100 TB on 1000 executors is
+    * routine, call `sc.setCheckpointDir(<HDFS / object store>)` and
+    * every pin — each iterative op's rounds, [[pinKeyed]], the shared
+    * graph and dedup spines — becomes a fault-tolerant `checkpoint()`
+    * under it: slower per round (a write + read of the frame) but the
+    * pinned state survives executor loss.
     *
     * The pin preserves the materialized hash LAYOUT on the returned
     * scan (see [[org.apache.spark.sql.graft.PinBridge.pin]] — the
@@ -352,18 +350,8 @@ object ops {
     * (coalesced hash buckets would falsify the claim, so PinBridge
     * refuses to record them).
     */
-  private[graft] def pinLineage(d: DataFrame, reliable: Boolean): DataFrame = {
-    if (reliable) require(
-      d.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable=true requires SparkContext.setCheckpointDir(<fault-tolerant dir>)")
-    org.apache.spark.sql.graft.PinBridge.pin(d, reliable)
-  }
-
-  /** [[pinLineage]] for the shared spine builders and operator-local
-    * multi-consumer pins: memory-backed, partitioning-preserving.
-    */
-  private[graft] def pinLocal(d: DataFrame): DataFrame =
-    pinLineage(d, reliable = false)
+  private[graft] def pinLineage(d: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.PinBridge.pin(d)
 
   /** Hash layout for a frame about to be pinned: repartition on `keys`
     * with an EXPLICIT partition count — AQE coalesces a count-less
@@ -443,20 +431,34 @@ object ops {
     }
     if (joinFree) {
       val n = sizeParts(d)
-      if (n * 2 <= maxN) pinLineage(d, reliable = false)
-      else pinLineage(d.repartition(n, keys: _*), reliable = false)
+      if (n * 2 <= maxN) pinLineage(d)
+      else pinLineage(d.repartition(n, keys: _*))
     } else {
-      val staged = pinLineage(d, reliable = false)
+      val staged = pinLineage(d)
       val fresh = reuse(staged)
       if (sizeParts(fresh) * 2 <= maxN) staged
       else {
-        val keyed = pinLineage(fresh.repartition(sizeParts(fresh), keys: _*),
-          reliable = false)
+        val keyed = pinLineage(fresh.repartition(sizeParts(fresh), keys: _*))
         releasePin(staged)
         keyed
       }
     }
   }
+
+  /** Symmetric adjacency of an undirected `(s, t)` edge list — the one
+    * edge build [[GraftDataFrameOps.kCore]], [[GraftDataFrameOps.bfsHops]],
+    * [[GraftDataFrameOps.pageRank]] and
+    * [[GraftDataFrameOps.labelPropagation]] iterate over: the half list
+    * plus its reverse, distinct, keyed on `s` and pinned ([[pinKeyed]]).
+    * The union runs BEFORE the distinct, so duplicate input pairs (a
+    * lazy fact-join half) collapse map-side in the same exchange that
+    * dedups the reversed copies.
+    */
+  private[graft] def symAdjacency(half: DataFrame): DataFrame =
+    pinKeyed(half
+      .unionByName(half.select(col("t").as("s"), col("s").as("t")))
+      .distinct(),
+      col("s"))
 
   /** Fresh reference to a pinned frame for a consumer site. Each call
     * yields a new scan of the same materialized blocks with its own
@@ -490,7 +492,7 @@ object ops {
                                   broadcastEdges: Boolean = true): DataFrame = {
     val hint: DataFrame => DataFrame =
       if (broadcastEdges) broadcast(_) else identity
-    val pairs = pinLocal(rawPairs.distinct())
+    val pairs = pinLineage(rawPairs.distinct())
     val deg = pairs.select(col("s1").as("s"))
       .unionAll(pairs.select(col("s2").as("s")))
       .groupBy("s").agg(count(lit(1)).as("d"))
@@ -724,11 +726,10 @@ object ops {
       * The dict is lineage-pinned per round (each round's plan embeds
       * the previous dict twice — once in the pair agg, once under the
       * winner's cross join — so an unpinned loop doubles the plan per
-      * round and re-derives the dict 2^k times). `reliable` as in
+      * round and re-derives the dict 2^k times); durability as in
       * [[graft.api.ops.pinLineage]].
       */
-    def bpeMergeTable(tokens: Column, numMerges: Int,
-                      reliable: Boolean = false): DataFrame = {
+    def bpeMergeTable(tokens: Column, numMerges: Int): DataFrame = {
       require(numMerges >= 1 && numMerges <= 64,
         s"numMerges must be in [1, 64], got $numMerges")
       var dict = pinLineage(df
@@ -738,7 +739,7 @@ object ops {
         // split(s, "") keeps a trailing empty token (Java split with
         // limit -1); filter it so symbols are exactly the characters.
         .select(filter(split(col("word"), ""), s => s =!= "").as("syms"),
-          col("freq")), reliable)
+          col("freq")))
       var merges: DataFrame = null
       for (r <- 1 to numMerges) {
         val idx = when(size(col("syms")) >= 2,
@@ -766,7 +767,7 @@ object ops {
               concat(slice(acc, lit(1), size(acc) - 1),
                 array(concat(col("_p1"), col("_p2")))))
               .otherwise(concat(acc, array(x)))).as("syms"),
-            col("freq")), reliable)
+            col("freq")))
       }
       merges.orderBy("merge_round")
     }
@@ -785,8 +786,8 @@ object ops {
       * partial-agg'd per-doc rollup. Same pinned-lineage rounds as the
       * train side.
       */
-    def bpeEncodeCounts(id: Column, tokens: Column, numMerges: Int,
-                        reliable: Boolean = false): DataFrame = {
+    def bpeEncodeCounts(id: Column, tokens: Column, numMerges: Int)
+        : DataFrame = {
       require(numMerges >= 1 && numMerges <= 64,
         s"numMerges must be in [1, 64], got $numMerges")
       val words = df.select(id.as("doc_id"), explode(tokens).as("word"))
@@ -795,7 +796,7 @@ object ops {
         .groupBy("word").agg(count(lit(1)).as("freq"))
         .select(col("word"),
           filter(split(col("word"), ""), s => s =!= "").as("syms"),
-          col("freq")), reliable)
+          col("freq")))
       for (_ <- 1 to numMerges) {
         val idx = when(size(col("syms")) >= 2,
           sequence(lit(1), size(col("syms")) - 1))
@@ -819,7 +820,7 @@ object ops {
                 concat(slice(acc, lit(1), size(acc) - 1),
                   array(concat(col("_p1"), col("_p2")))))
                 .otherwise(concat(acc, array(x)))).as("syms"),
-            col("freq")), reliable)
+            col("freq")))
         // Unlike bpeMergeTable (whose lazy merge-row union still
         // references every round's dict), nothing here reads round
         // N−1's dict once round N is pinned — release it.
@@ -967,28 +968,26 @@ object ops {
       * swap in alternating large-star/small-star contraction
       * (O(log²n) rounds, same join/agg shape). A lineage pin per
       * round truncates lineage — without it the iterative plan grows
-      * exponentially. `reliable = false` pins with `localCheckpoint`
-      * (memory-backed — fine single-node, but a lost executor kills
-      * the job); pass `reliable = true` on a real cluster to pin with
-      * `checkpoint()` under `sc.setCheckpointDir` so hours of
-      * propagation rounds survive executor loss. The driver
-      * coordinates but never holds data:
+      * exponentially. The pins follow the session ([[pinLineage]]):
+      * memory-backed `localCheckpoint` by default, fault-tolerant
+      * `checkpoint()` once `sc.setCheckpointDir` is set, so on a real
+      * cluster hours of propagation rounds survive executor loss. The
+      * driver coordinates but never holds data:
       * its only per-round action is an `isEmpty` convergence probe.
       * Raises if not converged within `maxIter` — an unconverged
       * labeling silently merges/splits clusters, so fail loudly.
       */
     def connectedComponents(a: String, b: String,
-                            maxIter: Int = 25,
-                            reliable: Boolean = false): DataFrame = {
+                            maxIter: Int = 25): DataFrame = {
       // Hash-partition the pinned edges on the per-round join key `t`
       // (pinLineage preserves the layout): every round's edges ⋈ labels
       // then satisfies its distribution from the pin, so the O(E) side
       // never re-exchanges — only the O(V) label frame moves per round.
       val edges = pinLineage(df.select(col(a).as("s"), col(b).as("t"))
         .unionByName(df.select(col(b).as("s"), col(a).as("t")))
-        .distinct().keyedBy(col("t")), reliable)
+        .distinct().keyedBy(col("t")))
       var labels = pinLineage(edges.select(col("s").as("id")).distinct()
-        .withColumn("comp", col("id")), reliable)
+        .withColumn("comp", col("id")))
       var it = 0
       var done = false
       while (!done && it < maxIter) {
@@ -1009,7 +1008,7 @@ object ops {
           .unionByName(labels.select(col("id"), col("comp"),
             col("comp").as("prev")))
           .groupBy("id").agg(min("comp").as("comp"),
-            min("prev").as("prev")), reliable)
+            min("prev").as("prev")))
         done = next.filter(col("comp") =!= col("prev")).isEmpty
         // `next` is materialized (pins are eager), so round N−1's label
         // blocks are dead — release them now instead of letting every
@@ -1044,12 +1043,10 @@ object ops {
       * set converges to min-rooted stars, read out as labels.
       * Convergence probe = row-count match, then an exact `except`
       * check (count equality alone could alias a swap). Lineage is
-      * pinned per round ([[pinLineage]]; `reliable` as in
-      * [[connectedComponents]]).
+      * pinned per round ([[pinLineage]]).
       */
     def connectedComponentsStar(a: String, b: String,
-                                maxIter: Int = 30,
-                                reliable: Boolean = false): DataFrame = {
+                                maxIter: Int = 30): DataFrame = {
       val verts = df.select(col(a).cast("long").as("id"))
         .unionByName(df.select(col(b).cast("long").as("id"))).distinct()
       // Orient child > parent; self-loops carry no connectivity. ONE
@@ -1060,8 +1057,7 @@ object ops {
       var e = pinLineage(df
         .select(greatest(col(a), col(b)).cast("long").as("u"),
           least(col(a), col(b)).cast("long").as("v"))
-        .filter(col("u") =!= col("v")).keyedBy(col("u")).distinct(),
-        reliable)
+        .filter(col("u") =!= col("v")).keyedBy(col("u")).distinct())
       var eCount = e.count()
       var it = 0
       var done = false
@@ -1091,7 +1087,7 @@ object ops {
           .filter(col("u") =!= col("v"))
           .unionByName(smins.select(col("u"), col("m").as("v")))
           .keyedBy(col("u")).distinct()
-        val next = pinLineage(small, reliable)
+        val next = pinLineage(small)
         // One count job per round (the previous round's count is
         // carried over); the exact `except` confirmation runs only
         // when the counts already agree.
@@ -1113,28 +1109,6 @@ object ops {
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
     }
 
-    /** Fixed-iteration PageRank over an undirected edge list (columns
-      * `a`, `b`; node ids must be globally unique across both columns).
-      * rank₀ = 1.0; rankᵢ₊₁(v) = (1−d) + d·Σ_{u∼v} rankᵢ(u)/deg(u).
-      * Undirected edges mean every node has deg ≥ 1, so there are no
-      * dangling nodes and no mass-leak correction term. Output:
-      * (id, rank) — UNROUNDED; callers round for oracle compares.
-      *
-      * Scale shape: the edge list is deduped + lineage-pinned once
-      * and reused every iteration (at 100 TB the edge build dominates;
-      * re-deriving it per iteration would rescan the fact table
-      * `iters` times); degrees ride along on the same checkpoint, so
-      * each iteration is exactly one shuffle-join (edges ⋈ ranks on
-      * the source id) + one partial-agg'd sum — the textbook
-      * distributed PageRank step. Ranks are checkpointed per iteration
-      * to cut the lineage (an uncheckpointed loop replans the whole
-      * prefix each time, quadratic plan growth). `reliable = true`
-      * swaps the memory-backed `localCheckpoint` pins for
-      * fault-tolerant `checkpoint()` under `sc.setCheckpointDir` —
-      * mandatory on a real cluster, where losing the one executor
-      * holding a pinned edge partition otherwise kills every
-      * remaining iteration.
-      */
     /** k-core decomposition by iterative degree peeling (Matula &
       * Beck's algorithm, distributed form): repeatedly delete every
       * node of degree < k until none remain; what survives is the
@@ -1154,25 +1128,13 @@ object ops {
       * sub-k nodes — same driver footprint as connectedComponents'
       * probe); rounds are data-bounded (≤ the peel depth, O(n) worst
       * case on a path, small on real degree-skewed graphs), capped by
-      * `maxRounds` as a runaway guard. `reliable` routes the per-round
-      * lineage pin to fault-tolerant `checkpoint()` for long peels on
-      * real clusters.
+      * `maxRounds` as a runaway guard.
       */
-    def kCore(a: String, b: String, k: Int, maxRounds: Int = 50,
-              reliable: Boolean = false,
-              preparedSym: Boolean = false): DataFrame = {
+    def kCore(a: String, b: String, k: Int, maxRounds: Int = 50): DataFrame = {
       require(k >= 1, s"k must be >= 1, got $k")
       require(maxRounds >= 1 && maxRounds <= 500,
         s"maxRounds must be in [1,500], got $maxRounds")
-      val half = df.select(col(a).as("s"), col(b).as("t"))
-      // preparedSym: the caller vouches `df` is ALREADY the symmetric
-      // deduped materialized (s, t) adjacency (GraphSpine.symSigned) —
-      // skip the per-query symmetrize+distinct+checkpoint.
-      val edges0 =
-        if (preparedSym) half
-        else pinLineage(half
-          .unionByName(half.select(col("t").as("s"), col("s").as("t")))
-          .distinct().keyedBy(col("s")), reliable)
+      val edges0 = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
       // The O(E) edge list is pinned exactly ONCE. Each round filters
       // it AT READ against the ACCUMULATED peel set (`removed`, a
       // node-sized pin rebuilt per round) — removing nodes is
@@ -1222,7 +1184,7 @@ object ops {
         // Broadcast anti joins preserve the pinned hash(s) layout, so
         // the degree rollup never re-exchanges the O(E) side.
         val deg = pinLineage(liveEdges(removed, nRemoved)
-          .groupBy("s").agg(count(lit(1)).as("_deg")), reliable)
+          .groupBy("s").agg(count(lit(1)).as("_deg")))
         val bad = deg.filter(col("_deg") < k).select(col("s").as("_bad"))
         val nBad = bad.count()
         if (nBad == 0) { converged = true; lastDeg = deg }
@@ -1230,7 +1192,7 @@ object ops {
           val nextRemoved = pinLineage(removed match {
             case None => bad
             case Some(r) => reuse(r).unionByName(bad)
-          }, reliable)
+          })
           removed.foreach(releasePin)
           releasePin(deg)
           removed = Some(nextRemoved)
@@ -1259,22 +1221,12 @@ object ops {
       * frontier-expansion join re-exchanges only the frontier
       * (O(frontier) ids), and the visited filter is an anti-join
       * against the node-sized distance table. Rounds are pinned like
-      * connectedComponents' loop so the plan prefix never regrows;
-      * `reliable = true` routes the pins to fault-tolerant
-      * `checkpoint()` for real-cluster runs.
+      * connectedComponents' loop so the plan prefix never regrows.
       */
-    def bfsHops(a: String, b: String, seed: Long, maxHops: Int,
-                reliable: Boolean = false,
-                preparedSym: Boolean = false): DataFrame = {
+    def bfsHops(a: String, b: String, seed: Long, maxHops: Int): DataFrame = {
       require(maxHops >= 1 && maxHops <= 50,
         s"maxHops must be in [1,50]: $maxHops")
-      val half = df.select(col(a).as("s"), col(b).as("t"))
-      // preparedSym: same GraphSpine.symSigned contract as [[kCore]].
-      val edges =
-        if (preparedSym) half
-        else pinLineage(half
-          .unionByName(half.select(col("t").as("s"), col("s").as("t")))
-          .distinct().keyedBy(col("s")), reliable)
+      val edges = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
       val spark = df.sparkSession
       var dist = spark.range(1)
         .select(lit(seed).as("id"), lit(0L).as("dist"))
@@ -1285,8 +1237,8 @@ object ops {
           .join(frontier.withColumnRenamed("id", "s"), "s")
           .select(col("t").as("id")).distinct()
           .join(dist, Seq("id"), "left_anti")
-          .select(col("id"), lit(k.toLong).as("dist")), reliable)
-        val newDist = pinLineage(dist.unionByName(next), reliable)
+          .select(col("id"), lit(k.toLong).as("dist")))
+        val newDist = pinLineage(dist.unionByName(next))
         // Both hop-k pins are now materialized: hop k−1's dist table
         // and frontier pin are dead — release instead of accumulating
         // two O(V) pins per hop until driver GC.
@@ -1299,30 +1251,36 @@ object ops {
       dist
     }
 
+    /** Fixed-iteration PageRank over an undirected edge list (columns
+      * `a`, `b`; node ids must be globally unique across both columns).
+      * rank₀ = 1.0; rankᵢ₊₁(v) = (1−d) + d·Σ_{u∼v} rankᵢ(u)/deg(u).
+      * Undirected edges mean every node has deg ≥ 1, so there are no
+      * dangling nodes and no mass-leak correction term. Output:
+      * (id, rank) — UNROUNDED; callers round for oracle compares.
+      *
+      * Scale shape: the edge list is symmetrized, deduped and
+      * lineage-pinned once ([[symAdjacency]]) and reused every
+      * iteration (at 100 TB the edge build dominates;
+      * re-deriving it per iteration would rescan the fact table
+      * `iters` times); degrees ride along on the same checkpoint, so
+      * each iteration is exactly one shuffle-join (edges ⋈ ranks on
+      * the source id) + one partial-agg'd sum — the textbook
+      * distributed PageRank step. Ranks are checkpointed per iteration
+      * to cut the lineage (an uncheckpointed loop replans the whole
+      * prefix each time, quadratic plan growth).
+      */
     def pageRank(a: String, b: String, iters: Int = 3,
-                 damping: Double = 0.85,
-                 reliable: Boolean = false,
-                 preparedSym: Boolean = false): DataFrame = {
+                 damping: Double = 0.85): DataFrame = {
       require(iters >= 1 && iters <= 50, s"iters must be in [1,50]: $iters")
-      // Hash-partition the checkpointed edges on the join key ONCE;
-      // every consumer site takes a `reuse(...)` scan so the pinned
-      // layout survives relation dedup (see [[reuse]]) and none of the
-      // `iters` joins below re-exchanges the (large) edge side — only
-      // the rank side (O(nodes)) shuffles per iteration.
-      // preparedSym: same GraphSpine.symSigned contract as [[kCore]].
-      val pinned =
-        if (preparedSym) df
-        else {
-          val half = df.select(col(a).as("s"), col(b).as("t"))
-          pinLineage(half
-            .unionByName(half.select(col("t").as("s"), col("s").as("t")))
-            .distinct().keyedBy(col("s")), reliable)
-        }
-      def edges: DataFrame =
-        if (preparedSym) reuse(pinned).select(col(a).as("s"), col(b).as("t"))
-        else reuse(pinned)
-      val deg = edges.groupBy("s").agg(count(lit(1)).as("_deg"))
-      val withDeg = pinLineage(edges.join(deg, "s"), reliable)
+      // Pin the edges ONCE, keyed on the join key when large enough
+      // (see [[pinKeyed]]); every consumer site takes a `reuse(...)`
+      // scan so the pinned layout survives relation dedup (see
+      // [[reuse]]) and none of the `iters` joins below re-exchanges the
+      // (large) edge side — only the rank side (O(nodes)) shuffles per
+      // iteration.
+      val edges = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
+      val deg = reuse(edges).groupBy("s").agg(count(lit(1)).as("_deg"))
+      val withDeg = pinLineage(reuse(edges).join(deg, "s"))
       // Lineage pinning is only needed when the loop is long: each
       // round's plan nests the previous one, so at small fixed `iters`
       // the whole rank recursion compiles into ONE multi-shuffle job
@@ -1330,8 +1288,8 @@ object ops {
       // quadratically growing prefix — checkpoint per round past the
       // threshold, exactly like connectedComponents' unbounded loop.
       val pin: DataFrame => DataFrame =
-        if (iters > 5) pinLineage(_, reliable) else identity
-      var ranks = pin(edges.select(col("s").as("id")).distinct()
+        if (iters > 5) pinLineage(_) else identity
+      var ranks = pin(reuse(edges).select(col("s").as("id")).distinct()
         .withColumn("rank", lit(1.0)))
       for (_ <- 1 to iters) {
         // reuse(): one fresh scan of the pinned edge+degree frame per
@@ -1372,27 +1330,14 @@ object ops {
       * label rows. Output: (id, label) — nodes sharing a label after
       * `iters` rounds form the community.
       */
-    def labelPropagation(a: String, b: String, iters: Int = 2,
-                         reliable: Boolean = false,
-                         preparedSym: Boolean = false): DataFrame = {
+    def labelPropagation(a: String, b: String, iters: Int = 2): DataFrame = {
       require(iters >= 1 && iters <= 20, s"iters must be in [1,20]: $iters")
-      // preparedSym: same GraphSpine.symSigned contract as [[kCore]];
-      // consumer sites take `reuse(...)` scans so the pinned hash
+      // Consumer sites take `reuse(...)` scans so the pinned hash
       // layout survives relation dedup (see [[reuse]]).
-      val pinned =
-        if (preparedSym) df
-        else {
-          val half = df.select(col(a).as("s"), col(b).as("t"))
-          pinLineage(half
-            .unionByName(half.select(col("t").as("s"), col("s").as("t")))
-            .distinct().keyedBy(col("s")), reliable)
-        }
-      def edges: DataFrame =
-        if (preparedSym) reuse(pinned).select(col(a).as("s"), col(b).as("t"))
-        else reuse(pinned)
+      val edges = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
       val pin: DataFrame => DataFrame =
-        if (iters > 5) pinLineage(_, reliable) else identity
-      var labels = pin(edges.select(col("s").as("id")).distinct()
+        if (iters > 5) pinLineage(_) else identity
+      var labels = pin(reuse(edges).select(col("s").as("id")).distinct()
         .withColumn("label", col("id")))
       for (_ <- 1 to iters) {
         // argmax-by-(count desc, label asc) as min(struct(−count,
@@ -1407,8 +1352,8 @@ object ops {
         // identical multiset as (s, label(t)), so the result is
         // byte-identical while the O(E) side never re-exchanges
         // (joining on `t` re-shuffled the whole edge list per round).
-        // `edges` is a def: each round takes a fresh reuse() scan.
-        val next = pin(edges
+        // Each round takes a fresh reuse() scan of the pinned edges.
+        val next = pin(reuse(edges)
           .join(labels.withColumnRenamed("id", "s"), "s")
           .groupBy(col("t").as("id"), col("label"))
           .agg(count(lit(1)).as("_c"))
@@ -1901,8 +1846,7 @@ object ops {
       * instances count toward every holder's n_dup (df ≥ 2 ⟺ "some
       * OTHER doc has it" for each holder individually).
       */
-    def dupNgramStats(id: Column, tokens: Column, n: Int,
-                      reliable: Boolean = false): DataFrame = {
+    def dupNgramStats(id: Column, tokens: Column, n: Int): DataFrame = {
       require(n >= 2 && n <= 32, s"n must be in [2, 32], got $n")
       // Three measured-at-sf0.1 performance rules shape this stage:
       // (1) `tokens` is projected to an attribute BEHIND the Generate
@@ -1919,9 +1863,8 @@ object ops {
       // rather than recomputed per consumer (same discipline as
       // simhash64's sketch). Net: ~9× end-to-end vs the naive plan.
       // At corpus scale the pinned instance table is n-grams × 32 B —
-      // large enough that `reliable = true` (fault-tolerant
-      // checkpoint() instead of memory-backed localCheckpoint) is the
-      // right call on a real cluster.
+      // large enough that a real cluster sets a checkpoint dir, so
+      // the pin is a fault-tolerant checkpoint() (see pinLineage).
       val grams = when(size(col("_t")) >= n,
         transform(sequence(lit(0), size(col("_t")) - n),
           i => concat_ws(" ",
@@ -1936,7 +1879,7 @@ object ops {
       val inst = pinLineage(df.select(id.as("doc_id"), tokens.as("_t"))
         .select(col("doc_id"), explode(grams).as("_gs"))
         .select(col("doc_id"), md5(col("_gs")).as("_g"))
-        .keyedBy(col("_g")), reliable)
+        .keyedBy(col("_g")))
       val dfreq = reuse(inst).distinct()
         .groupBy("_g").agg(count(lit(1)).as("_df"))
       reuse(inst).join(dfreq, "_g")
@@ -1971,8 +1914,7 @@ object ops {
       * reuse the window's doc_id partitioning (subset clustering: no
       * further exchange).
       */
-    def dupSpans(id: Column, tokens: Column, n: Int,
-                 reliable: Boolean = false): DataFrame = {
+    def dupSpans(id: Column, tokens: Column, n: Int): DataFrame = {
       require(n >= 2 && n <= 32, s"n must be in [2, 32], got $n")
       val grams = when(size(col("_t")) >= n,
         transform(sequence(lit(0), size(col("_t")) - n),
@@ -1988,7 +1930,7 @@ object ops {
           posexplode(grams).as(Seq("start", "_gs")))
         .select(col("doc_id"), col("n_tokens"), col("start"),
           md5(col("_gs")).as("_g"))
-        .keyedBy(col("_g")), reliable)
+        .keyedBy(col("_g")))
       val dup = reuse(inst).groupBy("_g").agg(count(lit(1)).as("_c"))
         .filter(col("_c") >= 2).select("_g")
       val w = Window.partitionBy("doc_id").orderBy("start")
@@ -2025,11 +1967,10 @@ object ops {
       * is the dirty subset, not the corpus.
       */
     def dupDocFilter(id: Column, tokens: Column, n: Int,
-                     maxDupFrac: Double,
-                     reliable: Boolean = false): DataFrame = {
+                     maxDupFrac: Double): DataFrame = {
       require(maxDupFrac >= 0 && maxDupFrac <= 1,
         s"maxDupFrac must be in [0, 1], got $maxDupFrac")
-      val stats = df.dupSpans(id, tokens, n, reliable)
+      val stats = df.dupSpans(id, tokens, n)
         .select(col("doc_id").as("_df_id"), col("dup_frac").as("_df_frac"))
       df.withColumn("_df_key", id)
         .join(stats, col("_df_key") === col("_df_id"), "left")
@@ -3068,7 +3009,7 @@ object ops {
       // shared-spine contract) — duplicate input edges would
       // overcount wedges, hence opt-in, never inferred.
       val pinned = if (assumeDistinct) df
-        else pinLocal(df.select(src.as("src"), dst.as("dst")).distinct())
+        else pinLineage(df.select(src.as("src"), dst.as("dst")).distinct())
       // One fresh scan per consumer site (degree rollup + both wedge
       // sides) so the pin's hash layout survives relation dedup —
       // see [[reuse]].
@@ -3115,7 +3056,7 @@ object ops {
       // assumeDistinct: same GraphSpine contract as [[adamicAdar]];
       // fresh scan per consumer site (see [[reuse]]).
       val pinned = if (assumeDistinct) df
-        else pinLocal(df.select(apex.as("a"), leaf.as("l")).distinct())
+        else pinLineage(df.select(apex.as("a"), leaf.as("l")).distinct())
       def edges: DataFrame =
         if (assumeDistinct) reuse(pinned).select(apex.as("a"), leaf.as("l"))
         else reuse(pinned)
@@ -3165,7 +3106,7 @@ object ops {
       // assumeDistinct: same GraphSpine contract as [[adamicAdar]];
       // fresh scan per consumer site (see [[reuse]]).
       val pinned = if (assumeDistinct) df
-        else pinLocal(df.select(src.as("src"), dst.as("dst")).distinct())
+        else pinLineage(df.select(src.as("src"), dst.as("dst")).distinct())
       def edges: DataFrame =
         if (assumeDistinct) reuse(pinned).select(src.as("src"), dst.as("dst"))
         else reuse(pinned)

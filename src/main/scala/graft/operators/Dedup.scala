@@ -32,7 +32,7 @@ object DedupSpine {
   /** Jaccard ≥ 0.8 near-dup pairs (d1, d2, jaccard) over `documents`,
     * blocked by (source, lang), token df capped at 1000. */
   def pairs08(spark: SparkSession, dir: String): DataFrame =
-    graft.api.ops.pinLocal(Tables(spark, dir, "documents")
+    graft.api.ops.pinLineage(Tables(spark, dir, "documents")
       .withColumn("tokset", array_distinct(split(col("text"), " ")))
       .jaccardPairs(col("doc_id"), col("tokset"),
         struct(col("source"), col("lang")), threshold = 0.8,
@@ -162,7 +162,7 @@ object Dedup extends QueryModule {
     */
   val dedupThresholdSweep: Q = (spark, dir) => {
     val d = docsWithTokens(spark, dir).filter(col("doc_id") % 5 === 0)
-    val pairs = graft.api.ops.pinLocal(
+    val pairs = graft.api.ops.pinLineage(
       d.jaccardPairs(col("doc_id"), col("tokset"), col("lang"),
         threshold = 0.7, maxDf = 1000)) // feeds one agg + one explode per τ
     val nDocs = d.agg(count(lit(1)).as("n_sample"))
@@ -318,7 +318,7 @@ object Dedup extends QueryModule {
     * semantic check.
     */
   val dedupSimhash: Q = (spark, dir) =>
-    graft.api.ops.pinLocal(docsWithTokens(spark, dir)
+    graft.api.ops.pinLineage(docsWithTokens(spark, dir)
       .simhash64(col("doc_id"), col("tokset")))
       .simhashPairs(maxHamming = 3, tables = 4)
       .orderBy("d1", "d2")

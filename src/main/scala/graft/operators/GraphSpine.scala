@@ -22,75 +22,48 @@ import org.apache.spark.sql.functions._
   * per-query cost out of the timed region — the bench's per-query
   * numbers must each reflect a from-parquet computation — so every
   * call here builds fresh; reuse is scoped to one query plan via
-  * `localCheckpoint`, the same lineage-pinning discipline as
-  * [[graft.api.ops]]. Queries needing BOTH the raw and the symmetric
-  * form derive the second from the first via the `*From` projections
+  * a lineage pin, the same discipline as [[graft.api.ops]]. The
+  * symmetric adjacency the iterative ops consume is built inside each
+  * op ([[graft.api.ops.symAdjacency]]) from a half list: the lazy
+  * [[factHalf]] when the query needs only that shape, or
+  * [[signedHalfFrom]] a built spine when it also consumes the raw one
   * (injective column maps commute with distinct, so results are
-  * byte-identical to private builds).
+  * byte-identical either way).
   *
   * Scale notes (100 TB): the spine is O(distinct edges), not O(fact
   * rows) — the fact join partial-aggregates its duplicate pairs
-  * map-side in the distinct. On a real cluster `localCheckpoint`
-  * becomes `checkpoint()` to survive executor loss (same switch as
-  * [[graft.api.ops]]' pinLineage `reliable` flag).
+  * map-side in the distinct.
   */
 object GraphSpine {
 
   /** Canonical distinct co-purchase edge list: (cust, supp), both keys
     * positive, hash-partitioned on `cust` (the wedge-apex/join key of
-    * adamicAdar/neighborJaccard/profile) and localCheckpointed. */
-  def coPurchase(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables(spark, dir, "lineitem")
-    val ord = Tables(spark, dir, "orders")
-    graft.api.ops.pinKeyed(
-      li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-        .distinct(),
+    * adamicAdar/neighborJaccard/profile) and pinned. */
+  def coPurchase(spark: SparkSession, dir: String): DataFrame =
+    graft.api.ops.pinKeyed(factJoin(spark, dir)
+      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
+      .distinct(),
       col("cust"))
-  }
 
-  /** The signed HALF edge list (cust, −supp) the iterative ops
-    * historically consumed — customers positive, suppliers negated so
-    * the two id spaces never collide. A projection of a built
-    * co-purchase spine (injective, so distinctness is preserved), NOT
-    * a second spine. */
+  /** The signed HALF edge list (cust, −supp) — customers positive,
+    * suppliers negated so the two id spaces never collide. A
+    * projection of a built co-purchase spine (injective, so
+    * distinctness is preserved), NOT a second spine. */
   def signedHalfFrom(coPurchase: DataFrame): DataFrame =
     coPurchase.select(col("cust"), (-col("supp")).as("supp"))
 
-  def signedHalf(spark: SparkSession, dir: String): DataFrame =
-    signedHalfFrom(coPurchase(spark, dir))
+  /** The signed half edge list (s = cust, t = −supp) straight off the
+    * fact join — lazy and NOT deduped: the iterative ops' symmetric
+    * build collapses its duplicate pairs map-side in the same exchange
+    * that dedups the reversed copies, so no co-purchase spine is
+    * materialized first. */
+  def factHalf(spark: SparkSession, dir: String): DataFrame =
+    factJoin(spark, dir)
+      .select(col("o_custkey").as("s"), (-col("l_suppkey")).as("t"))
 
-  /** Symmetric signed adjacency (s, t) derived from an already-built
-    * co-purchase spine: the half list plus its reverse, distinct,
-    * hash-partitioned on `s`, localCheckpointed — the exact edge shape
-    * pageRank/kCore/labelPropagation/bfsHops consume. Use this form
-    * when the query also consumes the raw spine, so the fact join runs
-    * once in that query. */
-  def symSignedFrom(coPurchase: DataFrame): DataFrame = {
-    val half = signedHalfFrom(coPurchase)
-      .select(col("cust").as("s"), col("supp").as("t"))
-    graft.api.ops.pinKeyed(half
-      .unionByName(half.select(col("t").as("s"), col("s").as("t")))
-      .distinct(),
-      col("s"))
-  }
-
-  /** Symmetric signed adjacency built directly from the fact join —
-    * the form for queries that need ONLY the symmetric shape
-    * (pageRank/kCore/LPA/BFS/walks): one distinct, one repartition,
-    * one checkpoint, no intermediate co-purchase materialization. The
-    * union runs BEFORE the distinct, so the duplicate fact pairs
-    * collapse map-side in the same exchange that dedups the reversed
-    * copies — same result set as [[symSignedFrom]] ∘ [[coPurchase]]
-    * (union and injective projections commute with distinct). */
-  def symSigned(spark: SparkSession, dir: String): DataFrame = {
+  private def factJoin(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables(spark, dir, "lineitem")
     val ord = Tables(spark, dir, "orders")
-    val half = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-      .select(col("o_custkey").as("s"), (-col("l_suppkey")).as("t"))
-    graft.api.ops.pinKeyed(half
-      .unionByName(half.select(col("t").as("s"), col("s").as("t")))
-      .distinct(),
-      col("s"))
+    li.join(ord, li("l_orderkey") === ord("o_orderkey"))
   }
 }

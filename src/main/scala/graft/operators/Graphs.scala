@@ -31,12 +31,8 @@ object Graphs extends QueryModule {
     */
   val graphPagerank: Q = (spark, dir) => {
     import graft.api.ops._
-    // Shared-spine form: the symmetric signed adjacency builds via the
-    // family-wide GraphSpine.symSigned builder — identical edge set to
-    // the private fact-join build it replaced.
-    GraphSpine.symSigned(spark, dir)
-      .pageRank("s", "t", iters = 3, damping = 0.85,
-        preparedSym = true)
+    GraphSpine.factHalf(spark, dir)
+      .pageRank("s", "t", iters = 3, damping = 0.85)
       .select(col("id"), Norm.r4tie(col("rank")).as("rank"))
       .orderBy("id")
   }
@@ -110,8 +106,8 @@ object Graphs extends QueryModule {
     */
   val graphKcore: Q = (spark, dir) => {
     import graft.api.ops._
-    GraphSpine.symSigned(spark, dir)
-      .kCore("s", "t", k = 8, preparedSym = true)
+    GraphSpine.factHalf(spark, dir)
+      .kCore("s", "t", k = 8)
       .orderBy("id")
   }
 
@@ -123,8 +119,8 @@ object Graphs extends QueryModule {
     */
   val graphLpa: Q = (spark, dir) => {
     import graft.api.ops._
-    GraphSpine.symSigned(spark, dir)
-      .labelPropagation("s", "t", iters = 2, preparedSym = true)
+    GraphSpine.factHalf(spark, dir)
+      .labelPropagation("s", "t", iters = 2)
       .orderBy("id")
   }
 
@@ -137,8 +133,8 @@ object Graphs extends QueryModule {
     */
   val graphBfs: Q = (spark, dir) => {
     import graft.api.ops._
-    GraphSpine.symSigned(spark, dir)
-      .bfsHops("s", "t", seed = 1L, maxHops = 3, preparedSym = true)
+    GraphSpine.factHalf(spark, dir)
+      .bfsHops("s", "t", seed = 1L, maxHops = 3)
       .orderBy("id")
   }
 
@@ -270,8 +266,7 @@ object Graphs extends QueryModule {
     // same checkpointed co-purchase edge list within this query.
     val co = GraphSpine.coPurchase(spark, dir)
     val edges0 = GraphSpine.signedHalfFrom(co)
-    val labels = GraphSpine.symSignedFrom(co)
-      .labelPropagation("s", "t", iters = 2, preparedSym = true)
+    val labels = edges0.labelPropagation("cust", "supp", iters = 2)
     val sym = edges0.select(col("cust").as("u"))
       .unionByName(edges0.select(col("supp").as("u")))
     val deg = sym.groupBy("u").agg(count(lit(1)).as("d"))
@@ -334,7 +329,7 @@ object Graphs extends QueryModule {
     * instead of broadcasting, same plan otherwise.
     */
   val graphRandomWalks: Q = (spark, dir) => {
-    val adj = GraphSpine.symSigned(spark, dir)
+    val adj = graft.api.ops.symAdjacency(GraphSpine.factHalf(spark, dir))
       .select(col("s").as("src"), col("t").as("dst"))
     // seeds derive from the checkpointed adjacency (src > 0 ⇔
     // customer side) — no second fact join for the seed list

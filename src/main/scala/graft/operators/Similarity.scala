@@ -1107,7 +1107,7 @@ object Similarity extends QueryModule {
     // Pinned hash(o) layout: the basket collect (groupBy o) and the
     // distinct-basket count both consume it shuffle-free; reuse() keeps
     // the layout for all three consumer sites.
-    val op = graft.api.ops.pinLocal(
+    val op = graft.api.ops.pinLineage(
       li.select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .keyedBy(col("o")).distinct())
     def opRef = graft.api.ops.reuse(op)

@@ -48,8 +48,7 @@ object StreamScored extends QueryModule {
     * baked into the checkpoint at first run, so production re-sizing
     * means a new checkpoint.
     */
-  private val streamStateParts =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")
+  private val streamStateParts = "4"
 
   /** Memory-backed scratch root for drain checkpoints, when the host
     * offers one. A one-shot AvailableNow drain's checkpoint (offset

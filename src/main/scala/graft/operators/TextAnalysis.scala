@@ -1320,10 +1320,10 @@ object TextAnalysis extends QueryModule {
     // repartition colocates (doc_id, g) so the distinct needs no
     // second exchange (hash(g) clusters every (doc_id, g) duplicate),
     // and the pinned layout then feeds BOTH the first-doc aggregate
-    // and the join back shuffle-free (pinLocal keeps the layout —
+    // and the join back shuffle-free (pinLineage keeps the layout —
     // the bare localCheckpoint dropped it and every consumer
     // re-exchanged).
-    val inst = graft.api.ops.pinLocal(docs(spark, dir)
+    val inst = graft.api.ops.pinLineage(docs(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("_t"))
       .select(col("doc_id"), explode(grams).as("_gs"))
       .select(col("doc_id"), md5(col("_gs")).as("g"))

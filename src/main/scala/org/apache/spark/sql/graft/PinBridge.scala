@@ -92,9 +92,12 @@ object PinBridge {
       case other => UnknownPartitioning(other.numPartitions)
     }
 
-  /** Checkpoint `d` (memory-backed or reliable) and return a scan that
-    * carries the materialized layout keyed on ITS OWN output
-    * attributes. Runs under AQE: the layout is read from the FINAL
+  /** Checkpoint `d` and return a scan that carries the materialized
+    * layout keyed on ITS OWN output attributes. The session decides
+    * durability, as MLlib and GraphX do: with `sc.setCheckpointDir` set
+    * the pin is a fault-tolerant `checkpoint()` under that dir (pinned
+    * state survives executor loss); without one it is the memory-backed
+    * `localCheckpoint()`. Runs under AQE: the layout is read from the FINAL
     * adaptive physical plan after the checkpoint executed (the stock
     * capture reads the AdaptiveSparkPlanExec wrapper pre-finalization
     * and records UnknownPartitioning). Only a plain HashPartitioning
@@ -104,8 +107,10 @@ object PinBridge {
     * `repartition(numPartitions, key)`, whose explicit count AQE never
     * coalesces.
     */
-  def pin(d: org.apache.spark.sql.DataFrame, reliable: Boolean): org.apache.spark.sql.DataFrame = {
-    val ck = if (reliable) d.checkpoint() else d.localCheckpoint()
+  def pin(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val ck =
+      if (d.sparkSession.sparkContext.getCheckpointDir.isDefined) d.checkpoint()
+      else d.localCheckpoint()
     ck.queryExecution.analyzed match {
       case l: LogicalRDD =>
         val spark = d.sparkSession.asInstanceOf[SparkSession]
@@ -174,7 +179,7 @@ object PinBridge {
     * full bench; a real cluster's workload sequence) fills the block
     * store and degrades every query after the cliff (the r13 282 s →
     * 1004 s full-bench collapse). No-op for non-pinned frames and for
-    * reliable checkpoints (whose data lives in files, not blocks).
+    * `checkpoint()` pins (whose data lives in files, not blocks).
     */
   def release(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed match {

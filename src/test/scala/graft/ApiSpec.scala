@@ -244,36 +244,46 @@ class ApiSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
-  test("connectedComponents reliable=true pins via fault-tolerant checkpoint") {
+  test("pins follow the session's checkpoint dir") {
     import spark.implicits._
-    // reliable=false pins lineage with localCheckpoint (memory-backed:
-    // a lost executor kills a 100 TB job mid-propagation); reliable=
-    // true routes to checkpoint() under the configured dir so iterative
-    // state survives executor loss. Same labels either way — and the
-    // knob must fail LOUDLY when no checkpoint dir is set, because
-    // checkpoint() without one otherwise dies deep inside the job.
+    import org.apache.spark.sql.execution.LogicalRDD
+    // Durability is the session's, never the op's: with no checkpoint
+    // dir every pin is a memory-backed localCheckpoint (a lost executor
+    // kills a 100 TB job mid-propagation); once sc.setCheckpointDir is
+    // set, every pin — an iterative op's rounds and a pinKeyed spine
+    // alike — is a fault-tolerant checkpoint() under that dir. Same
+    // labels either way.
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("d1", "d2")
-    val sc = spark.sparkContext
-    val priorDir = sc.getCheckpointDir
-    assert(priorDir.isEmpty || priorDir.exists(_.nonEmpty))
-    if (priorDir.isEmpty) {
-      val ex = intercept[IllegalArgumentException] {
-        pairs.connectedComponents("d1", "d2", reliable = true)
+    val expected = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L)
+    def labels() = pairs.connectedComponents("d1", "d2")
+      .orderBy("id").collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    def keyedPinFile() =
+      pinKeyed(pairs, col("d1")).queryExecution.analyzed match {
+        case l: LogicalRDD => l.rdd.getCheckpointFile
+        case p => fail(s"pinKeyed returned no pinned scan: $p")
       }
-      assert(ex.getMessage.contains("setCheckpointDir"))
-    }
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable")
+    val sc = spark.sparkContext
+    assert(sc.getCheckpointDir.isEmpty)
+    val dir = java.nio.file.Files.createTempDirectory("graft-pins")
+    def written() = java.nio.file.Files.walk(dir).count() - 1 // minus dir
     try {
+      assert(labels() === expected)
+      assert(keyedPinFile().isEmpty, "a pin without a dir has a file")
+      assert(written() === 0)
       sc.setCheckpointDir(dir.toString)
-      val rel = pairs.connectedComponents("d1", "d2", reliable = true)
-        .orderBy("id").collect().map(r => r.getLong(0) -> r.getLong(1))
-      assert(rel.toSeq === Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-        10L -> 10L, 11L -> 10L))
-      // The pins actually landed in the fault-tolerant dir.
-      val files = java.nio.file.Files.walk(dir).count()
-      assert(files > 1, "checkpoint dir is empty — reliable pin did not run")
-    } finally sc.setCheckpointDir(null)
+      assert(labels() === expected)
+      assert(written() > 1,
+        "checkpoint dir is empty — the op's pins did not land there")
+      val f = keyedPinFile()
+      assert(f.exists(_.contains(dir.getFileName.toString)),
+        s"pinKeyed pin is not under the checkpoint dir: $f")
+    } finally {
+      sc.setCheckpointDir(null)
+      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+    }
   }
 
   test("semanticDecontaminate + vocabSketch run on a foreign schema") {

@@ -1266,7 +1266,7 @@ class PropertySpec extends SparkSpec {
       val joined = left.join(right, "kk")
       val expected = joined.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-      val pinned = pinLineage(byKey(joined, col("kk")), reliable = false)
+      val pinned = pinLineage(byKey(joined, col("kk")))
       // (a) claimed layout is a hash layout over the pin's own output
       val lrdd = pinned.queryExecution.analyzed.asInstanceOf[LogicalRDD]
       lrdd.outputPartitioning match {

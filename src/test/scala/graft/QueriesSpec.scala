@@ -52,7 +52,8 @@ class QueriesSpec extends SparkSpec {
         maxDeg = 1000, assumeDistinct = true)
       .collect().toSeq
     assert(aaSpine === aaInline)
-    // iterative op: preparedSym spine vs the op's internal symmetrize.
+    // iterative op: the distinct spine's half vs the raw fact half,
+    // whose duplicate pairs the op's symmetric build must collapse.
     // Ranks are float sums whose partial-agg order may differ between
     // the two (identically-partitioned but differently-ordered) edge
     // builds — compare at the 4dp the scored query emits.
@@ -62,8 +63,9 @@ class QueriesSpec extends SparkSpec {
       .select(col("id"), Norm.r4tie(col("rank")).as("rank"))
       .orderBy("id").collect().toSeq
     val prInline = r4(half.pageRank("cust", "supp", iters = 3))
-    val prSpine = r4(operators.GraphSpine.symSigned(spark, sfDir)
-      .pageRank("s", "t", iters = 3, preparedSym = true))
+    val prSpine = r4(operators.GraphSpine.signedHalfFrom(
+        operators.GraphSpine.coPurchase(spark, sfDir))
+      .pageRank("cust", "supp", iters = 3))
     assert(prSpine === prInline)
   }
 
