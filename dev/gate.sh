@@ -8,16 +8,23 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 
-echo "== 1/4 SURVEY.md §2 inventory drift =="
+echo "== 1/5 SURVEY.md §2 inventory drift =="
 python3 dev/check_inventory.py
 
-echo "== 2/4 sbt test =="
+echo "== 2/5 one pin path: no checkpoint call outside PinBridge =="
+if grep -rnE "\.(localCheckpoint|checkpoint)\(" src/main --include=*.scala \
+    | grep -v "/PinBridge.scala:"; then
+  echo "direct pin above: route it through graft.api.ops.pinLineage"
+  exit 1
+fi
+
+echo "== 3/5 sbt test =="
 sbt -batch test
 
-echo "== 3/4 Verify @ $SF =="
+echo "== 4/5 Verify @ $SF =="
 sbt -batch "runMain graft.Verify $SF target/verify_out"
 
-echo "== 4/4 DuckDB oracle differential =="
+echo "== 5/5 DuckDB oracle differential =="
 python3 dev/check_oracle.py "$SF" target/verify_out
 
 echo "GATE GREEN"

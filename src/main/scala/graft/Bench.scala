@@ -14,8 +14,7 @@ object Bench {
     // on whichever query happens to run first (observed: +4 s on a
     // 0.4 s query). The timed pass below measures steady state.
     queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      GraftSession.sweepPins(spark)
+      GraftSession.runQuery(spark)(fn(spark, sfDir).count())
     }
     // SPARK_GRAFT_BENCH_RUNS > 1 (dev-only; the driver leaves it unset
     // → 1, identical behavior) times each query N times and reports
@@ -31,11 +30,8 @@ object Bench {
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val results = queries.map { case (name, fn) =>
       val best = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
-        catch { case _: Throwable => failed += name }
-        val dt = (System.nanoTime() - t0) / 1e9
-        GraftSession.sweepPins(spark) // after the clock stops
+        val (dt, err) = GraftSession.runQuery(spark)(fn(spark, sfDir).count())
+        if (err.isDefined) failed += name
         dt
       }.min
       name -> best

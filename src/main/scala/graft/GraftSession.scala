@@ -46,6 +46,17 @@ object GraftSession {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
 
+  /** The query loop body Bench and Verify share: runs `body`, returns
+    * its seconds and error, and sweeps the pins after the clock stops. */
+  private[graft] def runQuery(spark: SparkSession)(body: => Any)
+      : (Double, Option[Throwable]) = {
+    val t0 = System.nanoTime()
+    val err = try { body; None } catch { case e: Throwable => Some(e) }
+    val dt = (System.nanoTime() - t0) / 1e9
+    sweepPins(spark)
+    (dt, err)
+  }
+
   /** Runs `body` with the given session conf values set, then — also
     * when `body` throws — puts every key back as it was: restored to
     * its prior value, or unset if it had none. Keys are restored in

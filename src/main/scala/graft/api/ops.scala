@@ -333,10 +333,9 @@ object ops {
     * makes the pinned partitions unrecoverable and fails the job). On a
     * real cluster, where executor loss at 100 TB on 1000 executors is
     * routine, call `sc.setCheckpointDir(<HDFS / object store>)` and
-    * every pin — each iterative op's rounds, [[pinKeyed]], the shared
-    * graph and dedup spines — becomes a fault-tolerant `checkpoint()`
-    * under it: slower per round (a write + read of the frame) but the
-    * pinned state survives executor loss.
+    * every pin, in every query — this is the only pin path — becomes a
+    * fault-tolerant `checkpoint()` under it: slower per round (a write
+    * + read of the frame) but the pinned state survives executor loss.
     *
     * The pin preserves the materialized hash LAYOUT on the returned
     * scan (see [[org.apache.spark.sql.graft.PinBridge.pin]] — the
@@ -1796,7 +1795,7 @@ object ops {
     def bigramSurprisal(id: Column, tokens: Column,
                         lambda: Double = 0.5): DataFrame = {
       require(lambda > 0 && lambda < 1, s"lambda must be in (0,1): $lambda")
-      val pairs = df.select(id.as("doc_id"), tokens.as("_t"))
+      val pairs = pinLineage(df.select(id.as("doc_id"), tokens.as("_t"))
         .filter(size(col("_t")) >= 2)
         .select(col("doc_id"),
           explode(transform(sequence(lit(0), size(col("_t")) - 2),
@@ -1805,8 +1804,7 @@ object ops {
               element_at(col("_t"), (i + lit(2)).cast("int")).as("cur"))))
             .as("b"))
         .select(col("doc_id"), col("b.prev").as("prev"),
-          col("b.cur").as("cur"))
-        .localCheckpoint()
+          col("b.cur").as("cur")))
       val cbig = pairs.groupBy("prev", "cur").agg(count(lit(1)).as("cbig"))
       val cctx = pairs.groupBy("prev").agg(count(lit(1)).as("cctx"))
       val tok = df.select(explode(tokens).as("term"))
@@ -2007,11 +2005,10 @@ object ops {
             (0 until n).map(j =>
               element_at(col("_t"), (i + lit(j + 1)).cast("int"))): _*)))
         .otherwise(array().cast("array<string>"))
-      val inst = df
+      val inst = pinLineage(df
         .select(id.as("doc_id"), isEval.as("_ev"), tokens.as("_t"))
         .select(col("doc_id"), col("_ev"), explode(grams).as("_gs"))
-        .select(col("doc_id"), col("_ev"), md5(col("_gs")).as("_g"))
-        .localCheckpoint()
+        .select(col("doc_id"), col("_ev"), md5(col("_gs")).as("_g")))
       val evalGrams = inst.filter(col("_ev")).select("_g").distinct()
         .withColumn("_hit", lit(1L))
       inst.filter(!col("_ev")).select("doc_id", "_g").distinct()
@@ -2707,10 +2704,9 @@ object ops {
       val n = if (numParts > 0) numParts
         else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
       val localMask = (1L << 33) - 1
-      val parted = df.repartitionByRange(n, sortCols: _*)
+      val parted = pinLineage(df.repartitionByRange(n, sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
-        .withColumn("_gr_mono", monotonically_increasing_id())
-        .localCheckpoint()
+        .withColumn("_gr_mono", monotonically_increasing_id()))
       val counts = parted
         .groupBy(shiftright(col("_gr_mono"), 33).as("_pid"))
         .agg(count(lit(1)).as("_cnt"))
@@ -2995,27 +2991,21 @@ object ops {
       * value-neutral).
       */
     def adamicAdar(src: Column, dst: Column, topK: Int,
-                   maxDeg: Int = Int.MaxValue,
-                   assumeDistinct: Boolean = false): DataFrame = {
+                   maxDeg: Int = Int.MaxValue): DataFrame = {
       require(maxDeg >= 2, s"maxDeg must be >= 2, got $maxDeg")
       // distinct first (duplicate edges partial-aggregate away
-      // MAP-SIDE), then checkpoint: the edge list feeds THREE
-      // consumers (degree rollup + both join sides) whose upstream
-      // filters differ enough that ReuseExchange misses — without the
-      // checkpoint the scan→join→distinct subtree runs three times
-      // (measured 1.8 s → 1.3 s min-of-3 at sf0.1 with it).
-      // `assumeDistinct` skips both: the caller vouches the input is
-      // already a deduped, materialized edge list (the GraphSpine
-      // shared-spine contract) — duplicate input edges would
-      // overcount wedges, hence opt-in, never inferred.
-      val pinned = if (assumeDistinct) df
-        else pinLineage(df.select(src.as("src"), dst.as("dst")).distinct())
+      // MAP-SIDE, and would overcount wedges), then pin keyed on the
+      // wedge apex: the edge list feeds THREE consumers (degree rollup
+      // + both join sides) whose upstream filters differ enough that
+      // ReuseExchange misses — without the pin the scan→join→distinct
+      // subtree runs three times (measured 1.8 s → 1.3 s min-of-3 at
+      // sf0.1 with it).
+      val pinned =
+        pinKeyed(df.select(src.as("src"), dst.as("dst")).distinct(), col("src"))
       // One fresh scan per consumer site (degree rollup + both wedge
       // sides) so the pin's hash layout survives relation dedup —
       // see [[reuse]].
-      def edges: DataFrame =
-        if (assumeDistinct) reuse(pinned).select(src.as("src"), dst.as("dst"))
-        else reuse(pinned)
+      def edges: DataFrame = reuse(pinned)
       val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d").between(2, maxDeg))
         .select(col("src"),
@@ -3050,16 +3040,13 @@ object ops {
       * BIGINTs — C(k,2) via (k·(k−1)) div 2, no doubles anywhere.
       */
     def butterflyCount(apex: Column, leaf: Column,
-                       maxDeg: Int = Int.MaxValue,
-                       assumeDistinct: Boolean = false): DataFrame = {
+                       maxDeg: Int = Int.MaxValue): DataFrame = {
       require(maxDeg >= 2, s"maxDeg must be >= 2, got $maxDeg")
-      // assumeDistinct: same GraphSpine contract as [[adamicAdar]];
-      // fresh scan per consumer site (see [[reuse]]).
-      val pinned = if (assumeDistinct) df
-        else pinLineage(df.select(apex.as("a"), leaf.as("l")).distinct())
-      def edges: DataFrame =
-        if (assumeDistinct) reuse(pinned).select(apex.as("a"), leaf.as("l"))
-        else reuse(pinned)
+      // same distinct, apex-keyed pin as [[adamicAdar]]; fresh scan per
+      // consumer site (see [[reuse]]).
+      val pinned =
+        pinKeyed(df.select(apex.as("a"), leaf.as("l")).distinct(), col("a"))
+      def edges: DataFrame = reuse(pinned)
       val deg = edges.groupBy("a").agg(count(lit(1)).as("d"))
       val capped = deg.agg(
         sum(when(col("d") > maxDeg, 1L).otherwise(0L))
@@ -3100,16 +3087,13 @@ object ops {
       * every shuffle carries id pairs, never adjacency lists.
       */
     def neighborJaccard(src: Column, dst: Column, topK: Int,
-                        maxDeg: Int = Int.MaxValue,
-                        assumeDistinct: Boolean = false): DataFrame = {
+                        maxDeg: Int = Int.MaxValue): DataFrame = {
       require(maxDeg >= 2, s"maxDeg must be >= 2, got $maxDeg")
-      // assumeDistinct: same GraphSpine contract as [[adamicAdar]];
-      // fresh scan per consumer site (see [[reuse]]).
-      val pinned = if (assumeDistinct) df
-        else pinLineage(df.select(src.as("src"), dst.as("dst")).distinct())
-      def edges: DataFrame =
-        if (assumeDistinct) reuse(pinned).select(src.as("src"), dst.as("dst"))
-        else reuse(pinned)
+      // same distinct, apex-keyed pin as [[adamicAdar]]; fresh scan per
+      // consumer site (see [[reuse]]).
+      val pinned =
+        pinKeyed(df.select(src.as("src"), dst.as("dst")).distinct(), col("src"))
+      def edges: DataFrame = reuse(pinned)
       val degDst = edges.groupBy("dst").agg(count(lit(1)).as("deg"))
       val srcDeg = edges.groupBy("src").agg(count(lit(1)).as("sd"))
       val hub = srcDeg.filter(col("sd").between(2, maxDeg)).select("src")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Norm, QueryModule, Tables}
+import graft.api.ops.pinLineage
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -560,10 +561,9 @@ object Aggregates extends QueryModule {
     * form here is what the oracle can verify.
     */
   val aggHeavyHitters: Q = (spark, dir) => {
-    val counts = Tables(spark, dir, "documents")
+    val counts = pinLineage(Tables(spark, dir, "documents")
       .select(explode(split(col("text"), " ")).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy("term").agg(count(lit(1)).as("cnt")))
     val total = counts.agg(sum("cnt").as("total"))
     counts.crossJoin(broadcast(total))
       .filter(col("cnt") * 50 > col("total"))
@@ -1183,9 +1183,8 @@ object Aggregates extends QueryModule {
       .select(when(col("user_id") % 2 === 0, "A").otherwise("B")
         .as("variant"), col("conv"))
     // the 2-row rollup feeds both variant branches — pin it
-    val s = u.groupBy("variant")
-      .agg(count(lit(1)).as("n"), sum(col("conv")).as("k"))
-      .localCheckpoint()
+    val s = pinLineage(u.groupBy("variant")
+      .agg(count(lit(1)).as("n"), sum(col("conv")).as("k")))
     val a = s.filter(col("variant") === "A")
       .select(col("n").as("n_a"), col("k").as("k_a"))
     val b = s.filter(col("variant") === "B")
@@ -1209,12 +1208,11 @@ object Aggregates extends QueryModule {
       .select(when(col("user_id") % 2 === 0, "A").otherwise("B")
         .as("variant"),
         floor(col("value") * 100 + 0.5).cast("long").as("c"))
-    // localCheckpoint: the 2-row moment frame feeds both variant
-    // branches — without the pin each branch re-runs the event scan.
-    val s = p.groupBy("variant")
+    // pin: the 2-row moment frame feeds both variant branches —
+    // without the pin each branch re-runs the event scan.
+    val s = pinLineage(p.groupBy("variant")
       .agg(count(lit(1)).as("n"), sum(col("c")).as("sx"),
-        sum(col("c") * col("c")).as("sx2"))
-      .localCheckpoint()
+        sum(col("c") * col("c")).as("sx2")))
     val a = s.filter(col("variant") === "A")
       .select(col("n").as("n_a"), col("sx").as("sx_a"),
         col("sx2").as("sx2_a"))
@@ -1619,12 +1617,11 @@ object Aggregates extends QueryModule {
                        dir: String,
                        mergeSpanHours: Int): org.apache.spark.sql.DataFrame = {
     val e = Tables(spark, dir, "events")
-    val hourly = e.groupBy(col("event_type"),
+    // both the span probe and the chosen form read this; the pin
+    // keeps the events scan from running twice
+    val hourly = pinLineage(e.groupBy(col("event_type"),
         date_trunc("hour", col("ts")).as("hr"))
-      .agg(count(lit(1)).as("x"))
-      // both the span probe and the chosen form read this; the pin
-      // keeps the events scan from running twice
-      .localCheckpoint()
+      .agg(count(lit(1)).as("x")))
     val aT = hourly.select(col("event_type").as("type_a"), col("hr"),
       col("x"))
     val bT = hourly.select(col("event_type").as("type_b"),
@@ -1918,7 +1915,7 @@ object Aggregates extends QueryModule {
   val aggSpearman: Q = (spark, dir) => {
     import graft.api.ops._
     val e = Tables(spark, dir, "events")
-    val m = e.groupBy("user_id").agg(
+    val m = pinLineage(e.groupBy("user_id").agg(
       sum(when(col("event_type") === "click", 1L).otherwise(0L))
         .as("clicks"),
       sum(when(col("event_type") === "view", 1L).otherwise(0L))
@@ -1927,7 +1924,7 @@ object Aggregates extends QueryModule {
         .as("purchases"),
       sum(when(col("event_type") === "purchase",
         floor(col("value") * 100 + 0.5).cast("long")).otherwise(0L))
-        .as("spend")).localCheckpoint()
+        .as("spend")))
     // nUsers is a driver scalar over the checkpointed rollup — the
     // same bounded footprint globalRowNumber's offset map holds.
     val nUsers = m.count()

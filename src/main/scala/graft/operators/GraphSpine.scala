@@ -11,9 +11,13 @@ import org.apache.spark.sql.functions._
   * distinct (o_custkey, l_suppkey) pairs of the lineitem ⋈ orders fact
   * join — then diverges (wedge joins, rank/label/core iteration,
   * degree rollups). This object is the single implementation of that
-  * build: hash-partitioned on the wedge/join key and localCheckpointed
-  * so that a query with several consumers of the spine (degree rollup
-  * + wedge join + audit) computes it once WITHIN that query.
+  * build, [[factPairs]], and of the spines derived from it: hash-
+  * partitioned on the join key and pinned
+  * ([[graft.api.ops.pinKeyed]]) so that a query with several consumers
+  * of the spine (degree rollups + joins + audit) computes it once
+  * WITHIN that query. The wedge ops (adamicAdar, neighborJaccard,
+  * butterflyCount) take the lazy [[factPairs]] and pin their own
+  * distinct edge list, keyed on their wedge apex.
   *
   * Deliberately NOT memoized across queries: an earlier draft cached
   * the built spine in a module-level map keyed on the sf-dir, which
@@ -37,13 +41,10 @@ import org.apache.spark.sql.functions._
 object GraphSpine {
 
   /** Canonical distinct co-purchase edge list: (cust, supp), both keys
-    * positive, hash-partitioned on `cust` (the wedge-apex/join key of
-    * adamicAdar/neighborJaccard/profile) and pinned. */
+    * positive, hash-partitioned on `cust` (the join key of the profile,
+    * assortativity and modularity rollups) and pinned. */
   def coPurchase(spark: SparkSession, dir: String): DataFrame =
-    graft.api.ops.pinKeyed(factJoin(spark, dir)
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct(),
-      col("cust"))
+    graft.api.ops.pinKeyed(factPairs(spark, dir).distinct(), col("cust"))
 
   /** The signed HALF edge list (cust, −supp) — customers positive,
     * suppliers negated so the two id spaces never collide. A
@@ -58,12 +59,14 @@ object GraphSpine {
     * that dedups the reversed copies, so no co-purchase spine is
     * materialized first. */
   def factHalf(spark: SparkSession, dir: String): DataFrame =
-    factJoin(spark, dir)
-      .select(col("o_custkey").as("s"), (-col("l_suppkey")).as("t"))
+    factPairs(spark, dir).select(col("cust").as("s"), (-col("supp")).as("t"))
 
-  private def factJoin(spark: SparkSession, dir: String): DataFrame = {
+  /** The (cust, supp) pairs of the fact join — lazy, NOT deduped: the
+    * one build every spine above derives from; the wedge ops take it. */
+  private[graft] def factPairs(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables(spark, dir, "lineitem")
     val ord = Tables(spark, dir, "orders")
     li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
   }
 }

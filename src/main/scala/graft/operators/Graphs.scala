@@ -163,9 +163,8 @@ object Graphs extends QueryModule {
     */
   val graphAdamicAdar: Q = (spark, dir) => {
     import graft.api.ops._
-    GraphSpine.coPurchase(spark, dir)
-      .adamicAdar(col("cust"), col("supp"), topK = 20,
-        maxDeg = 1000, assumeDistinct = true)
+    GraphSpine.factPairs(spark, dir)
+      .adamicAdar(col("cust"), col("supp"), topK = 20, maxDeg = 1000)
       .select(col("d1").as("s1"), col("d2").as("s2"), col("n_common"),
         Norm.r4tie(col("score_int").cast("double") / lit(1000000.0))
           .as("aa_score"))
@@ -299,9 +298,8 @@ object Graphs extends QueryModule {
     */
   val graphJaccard: Q = (spark, dir) => {
     import graft.api.ops._
-    GraphSpine.coPurchase(spark, dir)
-      .neighborJaccard(col("cust"), col("supp"), topK = 20,
-        maxDeg = 1000, assumeDistinct = true)
+    GraphSpine.factPairs(spark, dir)
+      .neighborJaccard(col("cust"), col("supp"), topK = 20, maxDeg = 1000)
       .select(col("d1").as("s1"), col("d2").as("s2"), col("n_common"),
         Norm.r4tie(col("jacc_int").cast("double") / lit(1000000.0))
           .as("jaccard"),
@@ -364,9 +362,8 @@ object Graphs extends QueryModule {
     */
   val graphButterflies: Q = (spark, dir) => {
     import graft.api.ops._
-    GraphSpine.coPurchase(spark, dir)
-      .butterflyCount(col("supp"), col("cust"), maxDeg = 1000,
-        assumeDistinct = true)
+    GraphSpine.factPairs(spark, dir)
+      .butterflyCount(col("supp"), col("cust"), maxDeg = 1000)
   }
 
   val queries: Map[String, Q] = Map(

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Norm, QueryModule, Tables}
+import graft.api.ops.pinLineage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -145,7 +146,7 @@ object Multimodal extends QueryModule {
     */
   val multimodalPhash: Q = (spark, dir) => {
     val maxBucket = 64
-    val h = MediaDecode.phashBands(media(spark, dir)).localCheckpoint()
+    val h = pinLineage(MediaDecode.phashBands(media(spark, dir)))
     val bands = h.select(col("doc_id"), explode(map(
         lit(0), col("b0"), lit(1), col("b1"),
         lit(2), col("b2"), lit(3), col("b3"))))
@@ -184,8 +185,7 @@ object Multimodal extends QueryModule {
     * distinct fingerprints — no pair expansion at any scale.
     */
   val multimodalAudioFp: Q = (spark, dir) => {
-    val f = MediaDecode.audioFingerprint(media(spark, dir))
-      .localCheckpoint()
+    val f = pinLineage(MediaDecode.audioFingerprint(media(spark, dir)))
     val classes = f.groupBy("fp").agg(count(lit(1)).as("class_n"))
     f.join(broadcast(classes), "fp")
       .select(col("doc_id"), col("fp"), col("class_n"),

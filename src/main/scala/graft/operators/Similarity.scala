@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Norm, QueryModule, Tables}
+import graft.api.ops.pinLineage
 import graft.functions.CentroidAgg
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -181,8 +182,8 @@ object Similarity extends QueryModule {
     */
   def kmeansLloyd(spark: org.apache.spark.sql.SparkSession, dir: String,
                   k: Int, iters: Int): DataFrame = {
-    val e = emb(spark, dir).select(col("vec_id"), col("emb"))
-      .localCheckpoint() // feeds init + every assignment pass
+    // pinned: feeds init + every assignment pass
+    val e = pinLineage(emb(spark, dir).select(col("vec_id"), col("emb")))
     def d2i(v: Column, cLit: Column): Column =
       floor(aggregate(zip_with(v, cLit, (a, b) => (a - b) * (a - b)),
         lit(0.0), _ + _) * 1000000).cast("long")
@@ -272,9 +273,8 @@ object Similarity extends QueryModule {
     // pin the scan→join→rollup subtree runs twice (caught by the plan
     // dump: two full Generate+join branches). 4 096 integer cells, so
     // the checkpoint itself is free.
-    val gram = a.join(b, col("vec_id") === col("vid_b"))
-      .groupBy("i", "j").agg(sum(col("qa") * col("qb")).as("g"))
-      .localCheckpoint()
+    val gram = pinLineage(a.join(b, col("vec_id") === col("vid_b"))
+      .groupBy("i", "j").agg(sum(col("qa") * col("qb")).as("g")))
     val w1 = gram.groupBy(col("i").as("wi"))
       .agg(sum("g").as("w1"))
     // decimal(38,0) products overflow to NULL under non-ANSI mode
@@ -568,9 +568,9 @@ object Similarity extends QueryModule {
     val M = 3 // pivot out-degree
     val L = 8 // leaves per pivot
     val e = emb(spark, dir)
-    val anch = auditBatch(e, AnchorN)
-      .select(col("vec_id").as("aid"), col("emb").as("aemb"))
-      .localCheckpoint() // bounded (AnchorN × dim); feeds 4 consumers
+    // pinned: bounded (AnchorN × dim); feeds 4 consumers
+    val anch = pinLineage(auditBatch(e, AnchorN)
+      .select(col("vec_id").as("aid"), col("emb").as("aemb")))
     val q = auditBatch(e, AuditN)
       .select(col("vec_id").as("qid"), col("emb").as("qv"))
     val wA = Window.partitionBy("aid")
@@ -590,10 +590,9 @@ object Similarity extends QueryModule {
       .filter(col("rn") <= L)
       .select(col("aid"), col("vec_id").as("lid"))
     // query→pivot scores: AuditN × AnchorN rows, reused every round
-    val qa = q.crossJoin(broadcast(anch))
+    val qa = pinLineage(q.crossJoin(broadcast(anch))
       .select(col("qid"), col("aid"),
-        Norm.r4tie(cosine(col("qv"), col("aemb"))).as("qac"))
-      .localCheckpoint()
+        Norm.r4tie(cosine(col("qv"), col("aemb"))).as("qac")))
     val entry = anch
       .orderBy(md5(col("aid").cast("string")), col("aid")).limit(1)
       .select("aid")
@@ -767,9 +766,9 @@ object Similarity extends QueryModule {
         col("x.cs").as("cs"))
     val w = Window.partitionBy("qid", "dim")
       .orderBy(col("cs").desc, col("vec_id"))
-    val top = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
-      .localCheckpoint() // tiny; feeds truth + probe
+    // pinned: tiny; feeds truth + probe
+    val top = pinLineage(scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 10))
     val truth = top.filter(col("dim") === 64)
       .select(col("qid").as("tq"), col("vec_id").as("tv"))
     val hits = top.join(truth,
@@ -1286,8 +1285,7 @@ object Similarity extends QueryModule {
     // One materialization: the k−1 greedy rounds below each scan `e`,
     // and without the pin every round re-reads parquet and re-derives
     // the emb projection (measured 2.6 s → sub-second at sf0.1).
-    val e = emb(spark, dir).select(col("vec_id"), col("emb"))
-      .localCheckpoint()
+    val e = pinLineage(emb(spark, dir).select(col("vec_id"), col("emb")))
     val k = 8
     val first = e.filter(col("vec_id") === 0)
       .select(col("emb")).head.getSeq[Double](0).toVector

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftSession, Norm, QueryModule}
+import graft.api.ops.pinLineage
 import graft.streaming.Streams
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -491,10 +492,9 @@ object StreamScored extends QueryModule {
     */
   val streamCdcApply: Q = (spark, dir) => {
     import graft.api.ops._
-    var snapshot = graft.Tables(spark, dir, "events")
+    var snapshot = pinLineage(graft.Tables(spark, dir, "events")
       .filter(col("event_type") === "click")
-      .groupBy("user_id").agg((count(lit(1)) * 10).as("cents"))
-      .localCheckpoint()
+      .groupBy("user_id").agg((count(lit(1)) * 10).as("cents")))
     val changes = Streams.eventsFileStream(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"),
@@ -507,8 +507,7 @@ object StreamScored extends QueryModule {
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val perKey = batch.groupBy("user_id")
             .agg(max("cents").as("cents"))
-          snapshot = snapshot.mergeUpsert(perKey, "user_id")
-            .localCheckpoint()
+          snapshot = pinLineage(snapshot.mergeUpsert(perKey, "user_id"))
           ()
         }
         .start()

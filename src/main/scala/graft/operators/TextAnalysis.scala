@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Norm, QueryModule, Tables}
+import graft.api.ops.pinLineage
 import graft.functions.TokenizePos
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -142,9 +143,10 @@ object TextAnalysis extends QueryModule {
           element_at(col("t"), (i + 2).cast("int")),
           element_at(col("t"), (i + 3).cast("int")))))
       .otherwise(array().cast("array<string>"))
-    val inst = d.select(col("lang"), col("split"), explode(grams).as("gs"))
-      .select(col("lang"), col("split"), md5(col("gs")).as("g"))
-      .localCheckpoint() // feeds the train and test legs
+    // pinned: feeds the train and test legs
+    val inst = pinLineage(d
+      .select(col("lang"), col("split"), explode(grams).as("gs"))
+      .select(col("lang"), col("split"), md5(col("gs")).as("g")))
     val train = inst.filter(col("split") === "train")
       .select("lang", "g").distinct()
       .withColumn("hit", lit(1L))
@@ -270,14 +272,14 @@ object TextAnalysis extends QueryModule {
     * from one hash-agg + max — no window over the exploded stream.
     */
   val textRepetition: Q = (spark, dir) => {
-    // localCheckpoint: d feeds both join sides (per-doc stats and the
-    // bigram explode) — materialize it once instead of scanning and
+    // pin: d feeds both join sides (per-doc stats and the bigram
+    // explode) — materialize it once instead of scanning and
     // re-splitting the corpus twice (same pattern as dedupSimhash).
-    val d = docs(spark, dir).withColumn("toks", split(col("text"), " "))
+    val d = pinLineage(docs(spark, dir)
+      .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"), col("toks"),
         size(col("toks")).cast("long").as("n"),
-        size(array_distinct(col("toks"))).cast("long").as("n_uniq"))
-      .localCheckpoint()
+        size(array_distinct(col("toks"))).cast("long").as("n_uniq")))
     // size >= 2 guard: sequence(0, -1) on a 1-token doc would infer a
     // NEGATIVE step and emit [0, -1] — null bigrams and a 0-token
     // denominator downstream.
@@ -1264,7 +1266,7 @@ object TextAnalysis extends QueryModule {
       .withColumn("pid",
         sum(when(col("is_stop"), 1L).otherwise(0L)).over(wdoc))
       .filter(!col("is_stop"))
-    val phrases = phr.groupBy("doc_id", "pid")
+    val phrases = pinLineage(phr.groupBy("doc_id", "pid")
       .agg(array_sort(collect_list(struct(col("pos"), col("w"))))
         .as("pw"))
       .select(col("doc_id"), col("pid"),
@@ -1273,8 +1275,7 @@ object TextAnalysis extends QueryModule {
       // standard RAKE candidate cap: runs longer than 4 words are
       // almost never keyphrases (and the synthetic corpus's sparse
       // stopwords would otherwise make whole documents candidates)
-      .filter(col("len") <= 4)
-      .localCheckpoint()
+      .filter(col("len") <= 4))
     val wstats = phrases
       .select(explode(col("ws")).as("w"), col("len"))
       .groupBy("w")

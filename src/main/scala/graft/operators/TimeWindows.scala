@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Norm, QueryModule, Tables}
+import graft.api.ops.pinLineage
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -416,26 +417,24 @@ object TimeWindows extends QueryModule {
     */
   val rfm: Q = (spark, dir) => {
     val e = Tables(spark, dir, "events")
-    // localCheckpoint: the per-buyer frame feeds three consumers
-    // (quartile cuts, recency cuts, the scoring projection) — without
-    // the pin each branch would re-run the full event scan + agg.
-    val perUser = e.filter(col("event_type") === "purchase")
+    // pin: the per-buyer frame feeds three consumers (quartile cuts,
+    // recency cuts, the scoring projection) — without the pin each
+    // branch would re-run the full event scan + agg.
+    val perUser = pinLineage(e.filter(col("event_type") === "purchase")
       .groupBy("user_id")
       .agg(max(to_date(col("ts"))).as("last_d"),
         count(lit(1)).as("frequency"),
         sum(floor(col("value") * 100 + 0.5).cast("long"))
-          .as("monetary_cents"))
-      .localCheckpoint()
+          .as("monetary_cents")))
     val cuts = perUser.agg(
       max(col("last_d")).as("anchor"),
       percentile(col("frequency"), array(lit(0.25), lit(0.5), lit(0.75)))
         .as("fq"),
       percentile(col("monetary_cents"),
         array(lit(0.25), lit(0.5), lit(0.75))).as("mq"))
-    val scored = perUser.crossJoin(broadcast(cuts))
+    val scored = pinLineage(perUser.crossJoin(broadcast(cuts))
       .withColumn("recency_d",
-        datediff(col("anchor"), col("last_d")).cast("long"))
-      .localCheckpoint()
+        datediff(col("anchor"), col("last_d")).cast("long")))
     // Recency quartiles come from the recency values themselves, so
     // compute them on the same broadcast pass: rq = quantiles of
     // (anchor - last_d). Both engines derive them from the identical
@@ -476,11 +475,10 @@ object TimeWindows extends QueryModule {
   val churn: Q = (spark, dir) => {
     val e = Tables(spark, dir, "events")
     val cust = Tables(spark, dir, "customer")
-    // localCheckpoint: (user, last_seen) feeds both the anchor agg
-    // and the dim join — one event scan, not two.
-    val lastSeen = e.groupBy("user_id")
-      .agg(max(to_date(col("ts"))).as("last_seen"))
-      .localCheckpoint()
+    // pin: (user, last_seen) feeds both the anchor agg and the dim
+    // join — one event scan, not two.
+    val lastSeen = pinLineage(e.groupBy("user_id")
+      .agg(max(to_date(col("ts"))).as("last_seen")))
     val anchor = lastSeen.agg(max(col("last_seen")).as("anchor"))
     lastSeen.crossJoin(broadcast(anchor))
       .withColumn("churned",

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, Expression, NamedExpression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Project, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection, SinglePartition, UnknownPartitioning}
@@ -7,7 +9,10 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Layout-preserving checkpoint bridge for pinned frames.
+/** The one pin path: every pinned frame in every query is materialized
+  * by [[pin]] (as `graft.api.ops.pinLineage`) and nowhere else, so the
+  * session decides durability and every pin carries its layout claim
+  * and true size.
   *
   * Two Spark gaps defeat the partition-once-iterate-free design this
   * engine's iterative operators rely on (verified against the shipped
@@ -34,7 +39,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   *     own scan with fresh ids and a correctly rewritten partitioning,
   *     so nothing is left for the dedup to break.
   *
-  * Neither function moves data; both are metadata fixes.
+  * Beyond the checkpoint itself neither fix moves data; both are
+  * metadata.
   */
 object PinBridge {
 
@@ -52,18 +58,26 @@ object PinBridge {
     if (rewritten.references.subsetOf(outSet)) Some(rewritten) else None
   }
 
-  /** The ACTUAL byte size of a checkpointed RDD's blocks, from the
-    * block manager. Logical size estimates are useless for pinned
-    * frames (a stats-less join estimate multiplies its inputs), and
-    * every downstream decision — broadcast choice, [[graft.api.ops]]'
+  /** The ACTUAL byte size of a pinned RDD: the summed length of its
+    * checkpoint part files for a `checkpoint()` pin (which holds no
+    * blocks), its block-manager bytes for a `localCheckpoint()` one.
+    * Logical size estimates are useless for pinned frames (a
+    * stats-less join estimate multiplies its inputs), and every
+    * downstream decision — broadcast choice, [[graft.api.ops]]'
     * size-adaptive pin layout — improves when the pin carries the
     * truth it just materialized.
     */
-  private def trueStats(spark: SparkSession, rddId: Int): Option[Statistics] =
-    spark.sparkContext.getRDDStorageInfo.find(_.id == rddId)
-      .map(i => BigInt(i.memSize + i.diskSize))
-      .filter(_ > 0)
-      .map(sz => Statistics(sizeInBytes = sz))
+  private def trueStats(spark: SparkSession, rdd: RDD[_]): Option[Statistics] = {
+    val bytes = rdd.getCheckpointFile match {
+      case Some(file) =>
+        val dir = new Path(file)
+        dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+          .filter(_.getPath.getName.startsWith("part-")).map(_.getLen).sum
+      case None => spark.sparkContext.getRDDStorageInfo
+        .find(_.id == rdd.id).fold(0L)(i => i.memSize + i.diskSize)
+    }
+    Option.when(bytes > 0)(Statistics(sizeInBytes = bytes))
+  }
 
   /** Only plain hash partitionings (or collections of them) are ever
     * claimed: an AQE-coalesced read (CoalescedHashPartitioning) or any
@@ -145,7 +159,7 @@ object PinBridge {
           }
         Dataset.ofRows(spark,
           LogicalRDD(l.output, l.rdd, part, ord, l.isStreaming,
-            l.stream)(spark, trueStats(spark, l.rdd.id)))
+            l.stream)(spark, trueStats(spark, l.rdd)))
       case _ => ck
     }
   }
@@ -161,21 +175,20 @@ object PinBridge {
     val outSet = AttributeSet(fresh.output)
     val part = remapPartitioning(l.outputPartitioning, assoc, outSet)
     // The original's origin stats sit in a private second parameter
-    // list; re-derive the TRUE size from the block manager instead —
-    // same source [[pin]] used.
+    // list; re-derive the TRUE size instead — same source [[pin]] used.
     (LogicalRDD(fresh.output, fresh.rdd, part, fresh.outputOrdering,
       fresh.isStreaming, fresh.stream)(spark,
-        trueStats(spark, fresh.rdd.id)), assoc)
+        trueStats(spark, fresh.rdd)), assoc)
   }
 
-  /** Release a pin's materialized blocks (async). A localCheckpoint's
-    * lineage is TRUNCATED, so a released pin can never be read again —
-    * callers release only pins provably dead: an iterative loop's
-    * round N−1 state once round N has materialized, or a staged pin
-    * once its keyed re-layout is pinned. Pins that survive to the end
-    * of a query are swept by the session owner (Bench/Verify unpersist
-    * all persistent RDDs between queries) — without either release the
-    * blocks live until driver GC, and a long session (the driver's
+  /** Release a [[pin]]'s materialized blocks (async). A pin's lineage
+    * is TRUNCATED, so a released pin can never be read again — callers
+    * release only pins provably dead: an iterative loop's round N−1
+    * state once round N has materialized, or a staged pin once its
+    * keyed re-layout is pinned. Pins that survive to the end of a
+    * query are swept by the session owner (`GraftSession.runQuery`
+    * unpersists all persistent RDDs after each query) — without either
+    * release the blocks live until driver GC, and a long session (the
     * full bench; a real cluster's workload sequence) fills the block
     * store and degrades every query after the cliff (the r13 282 s →
     * 1004 s full-bench collapse). No-op for non-pinned frames and for

@@ -250,20 +250,29 @@ class ApiSpec extends SparkSpec {
     // Durability is the session's, never the op's: with no checkpoint
     // dir every pin is a memory-backed localCheckpoint (a lost executor
     // kills a 100 TB job mid-propagation); once sc.setCheckpointDir is
-    // set, every pin — an iterative op's rounds and a pinKeyed spine
-    // alike — is a fault-tolerant checkpoint() under that dir. Same
-    // labels either way.
+    // set, every pin — an iterative op's rounds, a pinKeyed spine and
+    // globalRowNumber's id pin alike — is a fault-tolerant checkpoint()
+    // under that dir. Same labels and row numbers either way.
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("d1", "d2")
     val expected = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L)
     def labels() = pairs.connectedComponents("d1", "d2")
       .orderBy("id").collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
-    def keyedPinFile() =
-      pinKeyed(pairs, col("d1")).queryExecution.analyzed match {
+    def pinFile(pin: org.apache.spark.sql.DataFrame) =
+      pin.queryExecution.analyzed match {
         case l: LogicalRDD => l.rdd.getCheckpointFile
-        case p => fail(s"pinKeyed returned no pinned scan: $p")
+        case p => fail(s"no pinned scan: $p")
       }
+    def keyedPinFile() = pinFile(pinKeyed(pairs, col("d1")))
+    def rowNumbers() = pairs.globalRowNumber(Seq(col("d1"), col("d2")), "rn")
+    val expectedRn = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 3L),
+      (10L, 11L, 4L))
+    def rn() = rowNumbers().orderBy("rn").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    def rowNumberPinFile() = rowNumbers().queryExecution.analyzed
+      .collectFirst { case l: LogicalRDD => l.rdd.getCheckpointFile }
+      .getOrElse(fail("globalRowNumber has no pinned scan"))
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty)
     val dir = java.nio.file.Files.createTempDirectory("graft-pins")
@@ -271,6 +280,8 @@ class ApiSpec extends SparkSpec {
     try {
       assert(labels() === expected)
       assert(keyedPinFile().isEmpty, "a pin without a dir has a file")
+      assert(rn() === expectedRn)
+      assert(rowNumberPinFile().isEmpty, "a pin without a dir has a file")
       assert(written() === 0)
       sc.setCheckpointDir(dir.toString)
       assert(labels() === expected)
@@ -279,6 +290,20 @@ class ApiSpec extends SparkSpec {
       val f = keyedPinFile()
       assert(f.exists(_.contains(dir.getFileName.toString)),
         s"pinKeyed pin is not under the checkpoint dir: $f")
+      assert(rn() === expectedRn)
+      val g = rowNumberPinFile()
+      assert(g.exists(_.contains(dir.getFileName.toString)),
+        s"globalRowNumber pin is not under the checkpoint dir: $g")
+      // A checkpoint() pin holds no blocks, so its true size is the
+      // summed length of its part files — not Long.MaxValue.
+      val big = pinLineage(spark.range(200000).toDF("id")
+        .withColumn("v", col("id") * 3))
+      val parts = new java.io.File(new org.apache.hadoop.fs.Path(
+          pinFile(big).get).toUri.getPath)
+        .listFiles().filter(_.getName.startsWith("part-"))
+      assert(parts.nonEmpty)
+      assert(big.queryExecution.optimizedPlan.stats.sizeInBytes ===
+        BigInt(parts.map(_.length).sum))
     } finally {
       sc.setCheckpointDir(null)
       java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())

@@ -42,14 +42,14 @@ class QueriesSpec extends SparkSpec {
     val li = Tables(spark, sfDir, "lineitem")
     val ord = Tables(spark, sfDir, "orders")
     val fact = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-    // wedge op: shared distinct spine vs the op's own distinct+checkpoint
+    // wedge op: the inline fact join vs the GraphSpine lazy pairs the
+    // scored query passes (the op distincts and pins either one)
     val aaInline = fact
       .adamicAdar(col("o_custkey"), col("l_suppkey"), topK = 20,
         maxDeg = 1000)
       .collect().toSeq
-    val aaSpine = operators.GraphSpine.coPurchase(spark, sfDir)
-      .adamicAdar(col("cust"), col("supp"), topK = 20,
-        maxDeg = 1000, assumeDistinct = true)
+    val aaSpine = operators.GraphSpine.factPairs(spark, sfDir)
+      .adamicAdar(col("cust"), col("supp"), topK = 20, maxDeg = 1000)
       .collect().toSeq
     assert(aaSpine === aaInline)
     // iterative op: the distinct spine's half vs the raw fact half,
