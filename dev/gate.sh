@@ -11,10 +11,17 @@ SF="${1:-/root/testdata/sf0.01}"
 echo "== 1/5 SURVEY.md §2 inventory drift =="
 python3 dev/check_inventory.py
 
-echo "== 2/5 one pin path: no checkpoint call outside PinBridge =="
+echo "== 2/5 one pin path, one owner per query =="
 if grep -rnE "\.(localCheckpoint|checkpoint)\(" src/main --include=*.scala \
     | grep -v "/PinBridge.scala:"; then
   echo "direct pin above: route it through graft.api.ops.pinLineage"
+  exit 1
+fi
+# A context-wide sweep frees the pins of a query running next to this
+# one, and a fixed scratch root is shared by concurrent queries: what a
+# query allocates belongs to its fork (PinBridge.close releases it).
+if grep -rnE "getPersistentRDDs|/dev/shm" src/main --include=*.scala; then
+  echo "global sweep or fixed scratch root above: use the query's fork"
   exit 1
 fi
 

@@ -14,7 +14,7 @@ object Bench {
     // on whichever query happens to run first (observed: +4 s on a
     // 0.4 s query). The timed pass below measures steady state.
     queries.foreach { case (_, fn) =>
-      GraftSession.runQuery(spark)(fn(spark, sfDir).count())
+      GraftSession.runQuery(fn(spark, sfDir))(_.count())
     }
     // SPARK_GRAFT_BENCH_RUNS > 1 (dev-only; the driver leaves it unset
     // → 1, identical behavior) times each query N times and reports
@@ -30,7 +30,7 @@ object Bench {
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val results = queries.map { case (name, fn) =>
       val best = (1 to runs).map { _ =>
-        val (dt, err) = GraftSession.runQuery(spark)(fn(spark, sfDir).count())
+        val (dt, err) = GraftSession.runQuery(fn(spark, sfDir))(_.count())
         if (err.isDefined) failed += name
         dt
       }.min

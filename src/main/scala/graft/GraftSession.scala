@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PinBridge
 import graft.functions.GraftFunctions
 
 /** The one session shape every main and the test suite run in:
@@ -29,38 +30,28 @@ object GraftSession {
     spark
   }
 
-  /** Session hygiene between queries, outside any timed region: every
-    * pin (localCheckpoint) a query materialized and did not release
-    * stays in the block store until driver GC happens to collect its
-    * wrapper — across a 324-query session that is hundreds of leaked
-    * persisted RDDs, storage fills, and whichever queries run after
-    * the cliff pay 10-70× (the r13 282 s → 1004 s full-bench
-    * collapse). Each query recomputes from parquet either way, so the
-    * sweep changes memory pressure only, never a result or a timing.
-    * Blocking: waiting the few ms for block removal is free here, and
-    * it guarantees the NEXT query starts with an empty block store
-    * instead of racing the async cleaner (observed: pin-heavy queries
-    * ran 2-3× slower mid-session while async removals lagged).
+  /** The query loop body Bench and Verify share: builds the query's
+    * frame, runs `action` on it, returns the seconds and the error, and
+    * after the clock stops closes the frame's session — the query's own
+    * fork (`SparkEntry.queries`; see `PinBridge.close`).
     */
-  def sweepPins(spark: SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-
-  /** The query loop body Bench and Verify share: runs `body`, returns
-    * its seconds and error, and sweeps the pins after the clock stops. */
-  private[graft] def runQuery(spark: SparkSession)(body: => Any)
+  private[graft] def runQuery(build: => DataFrame)(action: DataFrame => Any)
       : (Double, Option[Throwable]) = {
     val t0 = System.nanoTime()
-    val err = try { body; None } catch { case e: Throwable => Some(e) }
+    var df: DataFrame = null
+    val err = try { df = build; action(df); None }
+      catch { case e: Throwable => Some(e) }
     val dt = (System.nanoTime() - t0) / 1e9
-    sweepPins(spark)
+    if (df != null) PinBridge.close(df.sparkSession)
     (dt, err)
   }
 
   /** Runs `body` with the given session conf values set, then — also
     * when `body` throws — puts every key back as it was: restored to
     * its prior value, or unset if it had none. Keys are restored in
-    * reverse order, so nested scopes unwind innermost first.
+    * reverse order, so nested scopes unwind innermost first. A query's
+    * session is its own fork, so this is only for a setting that must
+    * not reach the rest of the same query (a streaming drain's conf).
     */
   def withConf[T](spark: SparkSession, kvs: (String, String)*)(
       body: => T): T = {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PinBridge
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -31,9 +32,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Aggregates.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2, each built
+    * on its own fork of the given session (`PinBridge.scoped`). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.flatMap(_.queries).toMap
+    modules.flatMap(_.queries).toMap.map { case (name, fn) =>
+      name -> ((spark: SparkSession, dir: String) =>
+        PinBridge.scoped(spark)(fn(_, dir)))
+    }
 
   /** The queries named in a comma-separated list (spaces and empty
     * entries ignored), or all of them for `None`. An unknown name

@@ -17,7 +17,7 @@ object Verify {
     // CORRECTNESS compare (round 7 lost 33 queries exactly this way).
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     queries.foreach { case (name, fn) =>
-      GraftSession.runQuery(spark)(fn(spark, sfDir).coalesce(1).write
+      GraftSession.runQuery(fn(spark, sfDir))(_.coalesce(1).write
         .mode("overwrite").parquet(s"$outDir/$name"))._2.foreach { e =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"

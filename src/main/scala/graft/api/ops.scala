@@ -398,9 +398,8 @@ object ops {
     * provably never read again (a loop's round N−1 state once round N
     * is materialized; a staged pin once its keyed re-layout is
     * pinned): localCheckpoint truncates lineage, so a released pin
-    * cannot be recomputed. Pins alive at the end of a query are the
-    * session owner's job (Bench/Verify sweep all persistent RDDs
-    * between queries).
+    * cannot be recomputed. Pins alive at the end of a query are freed
+    * when its fork closes (`GraftSession.runQuery`).
     */
   private[graft] def releasePin(d: DataFrame): Unit =
     org.apache.spark.sql.graft.PinBridge.release(d)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftSession, Norm, QueryModule, Tables}
+import graft.{Norm, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** Scan / projection / filter / sink operators (SURVEY.md §2.B
@@ -16,36 +16,17 @@ import org.apache.spark.sql.functions._
   */
 object Scans extends QueryModule {
 
-  /** Per-session sink root: suffixing the Spark application id keeps
-    * two concurrent harness/bench runs on one machine from overwriting
-    * each other's sink mid-read (fixed names did exactly that). All
-    * sinks for one app live under a single root that a JVM shutdown
-    * hook deletes, so repeated bench/verify rounds don't accumulate
-    * dead per-app dirs in java.io.tmpdir.
+  /** `name` inside the session's scratch dir
+    * ([[org.apache.spark.sql.graft.PinBridge.scratch]]): a query's
+    * sinks, lake tables and stream checkpoints live in its own fork's
+    * dir, which closing the fork deletes. A query runs once per fork,
+    * so every path starts out absent — no pre-clean, and two
+    * concurrent runs of one query write to different dirs.
     */
-  private val cleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).sorted(
-          java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala
-        .foreach(p => try java.nio.file.Files.delete(p)
-          catch { case _: java.io.IOException => () })
-    }
-
   private[graft] def tmpPath(spark: org.apache.spark.sql.SparkSession,
-                             name: String): String = {
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_sinks_${spark.sparkContext.applicationId}")
-    if (cleanupRegistered.add(root.toString))
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => deleteRecursively(root)))
-    root.resolve(name).toString
-  }
+                             name: String): String =
+    new java.io.File(
+      org.apache.spark.sql.graft.PinBridge.scratch(spark), name).getPath
 
   /** Parquet scan + column pruning: read 3 of 11 lineitem columns. */
   val scanProject: Q = (spark, dir) => {
@@ -312,9 +293,9 @@ object Scans extends QueryModule {
     * overwritten in dynamic mode; the read-back proves 'F' changed
     * and 'O'/'P' survived byte-identical. At 100 TB this is the
     * difference between rewriting one day's partition and rewriting
-    * the table. The session conf flips around the write only and is
-    * restored (finally) — overwrite semantics are a write-time
-    * property, not a plan property.
+    * the table. The mode is the corrected write's own option (it
+    * takes precedence over the session conf): overwrite semantics are
+    * a write-time property, not a plan property.
     */
   val lakeDynOverwrite: Q = (spark, dir) => {
     val base = tmpPath(spark, "dyn_overwrite")
@@ -325,11 +306,9 @@ object Scans extends QueryModule {
       .partitionBy("o_orderstatus").parquet(base)
     val corrected = orders.filter(col("o_orderstatus") === "F")
       .withColumn("o_totalprice", col("o_totalprice") * 0.9)
-    GraftSession.withConf(spark,
-      "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
-      corrected.write.mode("overwrite")
-        .partitionBy("o_orderstatus").parquet(base)
-    }
+    corrected.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("o_orderstatus").parquet(base)
     spark.read.parquet(base)
       .select(col("o_orderkey"), col("o_custkey"),
         Norm.r4tie(col("o_totalprice")).as("totalprice"),
@@ -412,8 +391,6 @@ object Scans extends QueryModule {
   val lakeTimetravel: Q = (spark, dir) => {
     import graft.sources.TxnLog
     val base = tmpPath(spark, "lake_timetravel")
-    // reruns inside one session rebuild the full history from scratch
-    deleteRecursively(java.nio.file.Paths.get(base))
     val orders = Tables(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"))
@@ -466,7 +443,6 @@ object Scans extends QueryModule {
     import graft.sources.{LakeCatalog, TxnLog}
     val root = tmpPath(spark, "graft_lake_root")
     val base = s"$root/orders_tt"
-    deleteRecursively(java.nio.file.Paths.get(base))
     val orders = Tables(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"))
@@ -523,7 +499,6 @@ object Scans extends QueryModule {
   val lakeRestore: Q = (spark, dir) => {
     import graft.sources.TxnLog
     val base = tmpPath(spark, "lake_restore")
-    deleteRecursively(java.nio.file.Paths.get(base))
     val orders = Tables(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"))
@@ -580,7 +555,6 @@ object Scans extends QueryModule {
   val lakeVacuum: Q = (spark, dir) => {
     import graft.sources.TxnLog
     val base = tmpPath(spark, "lake_vacuum")
-    deleteRecursively(java.nio.file.Paths.get(base))
     val orders = Tables(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"))
@@ -636,7 +610,6 @@ object Scans extends QueryModule {
   val lakeCheckpoint: Q = (spark, dir) => {
     import graft.sources.TxnLog
     val base = tmpPath(spark, "lake_checkpoint")
-    deleteRecursively(java.nio.file.Paths.get(base))
     val orders = Tables(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"))

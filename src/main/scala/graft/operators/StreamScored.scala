@@ -51,36 +51,6 @@ object StreamScored extends QueryModule {
     */
   private val streamStateParts = "4"
 
-  /** Memory-backed scratch root for drain checkpoints, when the host
-    * offers one. A one-shot AvailableNow drain's checkpoint (offset
-    * WAL, commit log, state-store delta files) has NO durability
-    * value — the query is born, drained, and discarded in one call —
-    * yet on the default java.io.tmpdir every micro-batch pays disk
-    * fsyncs for it. tmpfs turns that fixed cost into memory writes. A
-    * production deployment that needs resume-on-crash sets a REAL
-    * checkpoint dir on durable storage; this path is only for the
-    * ephemeral drains this harness runs.
-    */
-  private lazy val ckptRoot: Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      // Per-user dir name: on a multi-user host another uid may own a
-      // shared path; and mkdirs() can race/fail, so fall back to the
-      // default temp location unless the dir verifiably exists AND is
-      // writable by us (r9 ADVICE finding).
-      val user = sys.props.getOrElse("user.name", "anon")
-      val d = new java.io.File(shm, s"graft-drain-ckpt-$user")
-      if ((d.isDirectory || d.mkdirs()) && d.canWrite)
-        Some(d.getAbsolutePath)
-      else None
-    } else None
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    f.delete(): Unit
-  }
-
   /** @param finalize whether the drain still needs NO-DATA
     *   micro-batches after the last data batch. They exist to advance
     *   the watermark with no new input — firing state timeouts/timers,
@@ -98,32 +68,20 @@ object StreamScored extends QueryModule {
                          name: String,
                          finalize: Boolean = true): DataFrame = {
     val spark = out.sparkSession
-    // A leaked active query with this name (e.g. a prior failed run
-    // that never terminated) would make start() throw on the duplicate
-    // name — stop it first so reruns in one session are safe.
-    spark.streams.active.filter(_.name == name).foreach(_.stop())
-    // Fresh UUID subdir per drain: reusing a per-name dir would RESUME
-    // from the prior run's committed offsets and emit nothing.
-    val ckpt = ckptRoot.map(r =>
-      s"$r/$name-${java.util.UUID.randomUUID()}")
-    // Scoped rather than leaked session-wide conf mutations (the batch
-    // half of every scored query must keep the session's own
-    // parallelism); the ephemeral checkpoint is reaped either way.
+    // The batch half of every scored query must keep the session's own
+    // parallelism, so the drain's conf is scoped to the drain.
     GraftSession.withConf(spark,
-      "spark.sql.streaming.forceDeleteTempCheckpointLocation" -> "true",
       "spark.sql.streaming.noDataMicroBatches.enabled" ->
         finalize.toString,
       "spark.sql.shuffle.partitions" -> streamStateParts) {
-      try {
-        val w0 = out.writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-        val q = ckpt.fold(w0)(c => w0.option("checkpointLocation", c))
-          .start()
-        q.awaitTermination()
-      } finally ckpt.foreach(c => deleteRec(new java.io.File(c)))
+      out.writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", Scans.tmpPath(spark, s"$name-ckpt"))
+        .start()
+        .awaitTermination()
     }
     spark.table(name)
   }
@@ -138,39 +96,27 @@ object StreamScored extends QueryModule {
     * transaction log is also what makes the read-back exactly-once:
     * only files recorded by a committed batch are visible.
     *
-    * `path`/`ckpt` default to fresh per-call dirs under the app's
-    * tmp sink root (reaped by the shutdown hook) and the tmpfs drain
-    * root respectively — pass BOTH explicitly to drain into a durable
-    * sink/checkpoint pair that a later call can RESUME (the
-    * crash-resume path q_stream_resume scores).
+    * Sink and checkpoint are named after the drain in the query's
+    * scratch dir, so a second drain under the same name RESUMES the
+    * first (the crash-resume path q_stream_resume scores).
     */
   private def runToParquet(out: DataFrame, name: String,
-                           finalize: Boolean = true,
-                           path: String = null,
-                           ckpt: String = null): DataFrame = {
+                           finalize: Boolean = true): DataFrame = {
     val spark = out.sparkSession
-    spark.streams.active.filter(_.name == name).foreach(_.stop())
-    val sinkPath = Option(path).getOrElse(
-      Scans.tmpPath(spark, s"$name-${java.util.UUID.randomUUID()}"))
-    val ckptPath = Option(ckpt).orElse(ckptRoot.map(r =>
-      s"$r/$name-${java.util.UUID.randomUUID()}")).getOrElse(
-      Scans.tmpPath(spark, s"$name-ckpt-${java.util.UUID.randomUUID()}"))
-    val ephemeralCkpt = ckpt == null
+    val sinkPath = Scans.tmpPath(spark, s"$name-sink")
     GraftSession.withConf(spark,
       "spark.sql.streaming.noDataMicroBatches.enabled" ->
         finalize.toString,
       "spark.sql.shuffle.partitions" -> streamStateParts) {
-      try {
-        val q = out.writeStream
-          .format("parquet")
-          .queryName(name)
-          .outputMode(OutputMode.Append())
-          .option("path", sinkPath)
-          .option("checkpointLocation", ckptPath)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally if (ephemeralCkpt) deleteRec(new java.io.File(ckptPath))
+      out.writeStream
+        .format("parquet")
+        .queryName(name)
+        .outputMode(OutputMode.Append())
+        .option("path", sinkPath)
+        .option("checkpointLocation", Scans.tmpPath(spark, s"$name-ckpt"))
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
     }
     spark.read.parquet(sinkPath)
   }
@@ -281,23 +227,22 @@ object StreamScored extends QueryModule {
     * have independent clocks (a slow stream may still deliver
     * matches); here both sides replay the SAME event log, so the
     * faster side's clock is authoritative and `max` is exact, not a
-    * relaxation. Restored after the drain.
+    * relaxation.
     */
-  val streamJoinLeft: Q = (spark, dir) =>
-    GraftSession.withConf(spark,
-      "spark.sql.streaming.multipleWatermarkPolicy" -> "max") {
-      val joined = Streams.clickPurchaseLeftJoin(
-        Streams.eventsFileStream(spark, dir),
-        Streams.eventsFileStream(spark, dir),
-        cutoff = "2024-01-28 00:00:00")
-        .select("click_id", "purchase_id", "c_user")
-      runToParquet(joined, "graft_stream_join_left")
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("purchase_id")).as("n_matched"),
-          sum(when(col("purchase_id").isNull, 1L).otherwise(0L))
-            .as("n_unmatched"),
-          countDistinct(col("c_user")).as("n_users"))
-    }
+  val streamJoinLeft: Q = (spark, dir) => {
+    spark.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "max")
+    val joined = Streams.clickPurchaseLeftJoin(
+      Streams.eventsFileStream(spark, dir),
+      Streams.eventsFileStream(spark, dir),
+      cutoff = "2024-01-28 00:00:00")
+      .select("click_id", "purchase_id", "c_user")
+    runToParquet(joined, "graft_stream_join_left")
+      .agg(count(lit(1)).as("n_rows"),
+        count(col("purchase_id")).as("n_matched"),
+        sum(when(col("purchase_id").isNull, 1L).otherwise(0L))
+          .as("n_unmatched"),
+        countDistinct(col("c_user")).as("n_users"))
+  }
 
   /** Shared body of the two stateful-counter scored queries: feed the
     * events stream with `value` pre-folded to integer cents
@@ -500,10 +445,11 @@ object StreamScored extends QueryModule {
       .select(col("user_id"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
     GraftSession.withConf(spark,
-      "spark.sql.streaming.forceDeleteTempCheckpointLocation" -> "true",
       "spark.sql.shuffle.partitions" -> streamStateParts) {
       val q = changes.writeStream.outputMode("append")
         .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation",
+          Scans.tmpPath(spark, "graft_stream_cdc-ckpt"))
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val perKey = batch.groupBy("user_id")
             .agg(max("cents").as("cents"))
@@ -596,8 +542,7 @@ object StreamScored extends QueryModule {
     *    n_rows == n_ids == the batch twin, which is what the oracle
     *    hashes.
     *
-    * The checkpoint deliberately lives on DURABLE storage (the app
-    * tmp root, not the tmpfs ephemeral-drain root — resume is the
+    * Both drains share one checkpoint and one sink (resume is the
     * entire point), and the parquet sink's `_spark_metadata` log is
     * what makes the cross-restart union exactly-once on the OUTPUT
     * side: a file written by an uncommitted batch is invisible to the
@@ -608,10 +553,6 @@ object StreamScored extends QueryModule {
     */
   val streamResume: Q = (spark, dir) => {
     val in = Scans.tmpPath(spark, "stream_resume_in")
-    val sink = Scans.tmpPath(spark, "stream_resume_sink")
-    val ckpt = Scans.tmpPath(spark, "stream_resume_ckpt")
-    // reruns in one session restage the whole two-batch history
-    Seq(in, sink, ckpt).foreach(p => deleteRec(new java.io.File(p)))
     val events = graft.Tables(spark, dir, "events")
       .select(col("event_id"), col("event_type"))
     // single-file landings with deterministic names: the file source
@@ -626,21 +567,16 @@ object StreamScored extends QueryModule {
         java.nio.file.Paths.get(in, s"$name.parquet"))
       ()
     }
-    def drain(): Unit = {
-      runToParquet(
-        spark.readStream.schema(events.schema).parquet(in)
-          .dropDuplicates("event_id"),
-        "graft_stream_resume", finalize = false,
-        path = sink, ckpt = ckpt)
-      ()
-    }
+    def drain() = runToParquet(
+      spark.readStream.schema(events.schema).parquet(in)
+        .dropDuplicates("event_id"),
+      "graft_stream_resume", finalize = false)
     land(events.filter(col("event_id") % 2 === 0), "b1")
     drain() // terminates — the "crash"
     // batch 2: the new half PLUS a full replay of batch 1's rows
     land(events.filter(col("event_id") % 2 =!= 0)
       .unionByName(events.filter(col("event_id") % 2 === 0)), "b2")
-    drain() // resumes: same checkpoint, same sink
-    spark.read.parquet(sink)
+    drain() // resumes: same name, so same checkpoint and sink
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("event_id")).as("n_ids"))

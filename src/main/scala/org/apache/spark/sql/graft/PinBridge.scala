@@ -1,6 +1,11 @@
 package org.apache.spark.sql.graft
 
+import java.io.File
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
+import org.apache.spark.{SparkContext, SparkFiles}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, Expression, NamedExpression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Project, Statistics}
@@ -8,11 +13,20 @@ import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partition
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.internal.SQLConf
 
-/** The one pin path: every pinned frame in every query is materialized
-  * by [[pin]] (as `graft.api.ops.pinLineage`) and nowhere else, so the
-  * session decides durability and every pin carries its layout claim
-  * and true size.
+/** The one pin path, and the one owner of what a query allocates.
+  *
+  * Every pinned frame in every query is materialized by [[pin]] (as
+  * `graft.api.ops.pinLineage`) and nowhere else, so the session decides
+  * durability and every pin carries its layout claim and true size.
+  *
+  * Every `graft.SparkEntry` query builds on its own [[scoped]] fork of
+  * the caller's session, which owns the query's pins, views, conf,
+  * streams and [[scratch]] dir until [[close]] releases them together;
+  * so nothing one query allocates reaches a query running beside it.
+  * (`cloneSession`, `withActive` and `unpersistRDD` are package-private
+  * to Spark, hence this package.)
   *
   * Two Spark gaps defeat the partition-once-iterate-free design this
   * engine's iterative operators rely on (verified against the shipped
@@ -43,6 +57,76 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * metadata.
   */
 object PinBridge {
+
+  /** One session's live pins (RDD id → checkpoint dir, if any) and its
+    * scratch dir, under the per-application local dir Spark deletes at
+    * exit. */
+  private final class Scope {
+    val pins = new ConcurrentHashMap[Int, Option[String]]()
+    val dir = new File(SparkFiles.getRootDirectory(), s"scope-${UUID.randomUUID()}")
+  }
+
+  /** Weak keys: a session nobody closes takes its scope along when it
+    * is collected, and the context cleaner frees its pins. */
+  private val scopes =
+    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, Scope]()
+
+  private def scopeOf(spark: org.apache.spark.sql.SparkSession): Scope =
+    scopes.synchronized(scopes.computeIfAbsent(spark, _ => new Scope))
+
+  /** Builds a query on a fresh `cloneSession()` of `spark` (same conf
+    * and temp views), active while `build` runs. Closed at once if
+    * `build` throws; else whoever runs the action closes it after.
+    * The fork is not artifact-isolated: an isolated session gets its
+    * own class loader, which Spark 4 keys the codegen cache by, so each
+    * query would recompile its generated classes (380 vs 280 compiles
+    * per pass of the 9 iterative queries, 10-40% more task CPU). A
+    * clone fixes its isolation while it is made, hence two clones.
+    */
+  def scoped(spark: org.apache.spark.sql.SparkSession)(
+      build: org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val shared = spark.asInstanceOf[SparkSession].cloneSession()
+    shared.sessionState.conf.setConf(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED, false)
+    val fork = shared.cloneSession()
+    try fork.withActive(build(fork))
+    catch { case e: Throwable => close(fork); throw e }
+  }
+
+  /** The session's scratch dir, created on first use: a query's
+    * sinks, lake tables and stream checkpoints. */
+  def scratch(spark: org.apache.spark.sql.SparkSession): String = {
+    val dir = scopeOf(spark).dir
+    dir.mkdirs()
+    dir.getPath
+  }
+
+  /** Releases what `spark` allocated: stops its streams, frees its
+    * live pins and deletes its scratch dir (views and conf go with the
+    * session object). Blocking, so the next query starts with the
+    * block store this one found; keep it out of timed regions. */
+  def close(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val classic = spark.asInstanceOf[SparkSession]
+    classic.sharedState.activeStreamingQueries.values.asScala
+      .filter(_.sparkSession eq classic).foreach(_.stop())
+    val scope = scopes.synchronized(Option(scopes.remove(spark)))
+    scope.foreach { s =>
+      s.pins.forEach((id, file) => drop(classic.sparkContext, id, file, blocking = true))
+      org.apache.spark.util.Utils.deleteRecursively(s.dir)
+    }
+  }
+
+  /** Frees one pin's blocks and checkpoint files. `RDD.unpersist`
+    * would only add a WARN per local pin and reset a storage level
+    * nobody reads again. */
+  private def drop(sc: SparkContext, id: Int, file: Option[String],
+                   blocking: Boolean): Unit = {
+    sc.unpersistRDD(id, blocking)
+    file.foreach { f =>
+      val p = new Path(f)
+      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+    }
+  }
 
   /** Remap every attribute in `e` through `assoc`; None if the result
     * references anything outside the target output (an unprovable
@@ -128,6 +212,7 @@ object PinBridge {
     ck.queryExecution.analyzed match {
       case l: LogicalRDD =>
         val spark = d.sparkSession.asInstanceOf[SparkSession]
+        scopeOf(spark).pins.put(l.rdd.id, l.rdd.getCheckpointFile)
         // The checkpoint above already executed the plan, so the
         // adaptive wrapper holds its final physical plan and real
         // output layout.
@@ -181,25 +266,26 @@ object PinBridge {
         trueStats(spark, fresh.rdd)), assoc)
   }
 
-  /** Release a [[pin]]'s materialized blocks (async). A pin's lineage
-    * is TRUNCATED, so a released pin can never be read again — callers
-    * release only pins provably dead: an iterative loop's round N−1
-    * state once round N has materialized, or a staged pin once its
-    * keyed re-layout is pinned. Pins that survive to the end of a
-    * query are swept by the session owner (`GraftSession.runQuery`
-    * unpersists all persistent RDDs after each query) — without either
-    * release the blocks live until driver GC, and a long session (the
-    * full bench; a real cluster's workload sequence) fills the block
-    * store and degrades every query after the cliff (the r13 282 s →
-    * 1004 s full-bench collapse). No-op for non-pinned frames and for
-    * `checkpoint()` pins (whose data lives in files, not blocks).
+  /** Release a [[pin]] before its query ends: its blocks (async) and
+    * its checkpoint files. A pin's lineage is TRUNCATED, so a released
+    * pin can never be read again — callers release only pins provably
+    * dead: an iterative loop's round N−1 state once round N has
+    * materialized, or a staged pin once its keyed re-layout is pinned.
+    * That keeps a loop's footprint at O(1) rounds however many rounds
+    * it runs; every pin still alive when the query ends is freed by
+    * [[close]]. No-op for non-pinned frames.
     */
-  def release(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
-      case Project(_, l: LogicalRDD) => l.rdd.unpersist(blocking = false)
-      case _ => ()
+  def release(df: org.apache.spark.sql.DataFrame): Unit = {
+    val rdd = df.queryExecution.analyzed match {
+      case l: LogicalRDD => Some(l.rdd)
+      case Project(_, l: LogicalRDD) => Some(l.rdd)
+      case _ => None
     }
+    rdd.foreach { r =>
+      scopeOf(df.sparkSession).pins.remove(r.id)
+      drop(r.sparkContext, r.id, r.getCheckpointFile, blocking = false)
+    }
+  }
 
   def refresh(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession.asInstanceOf[SparkSession]

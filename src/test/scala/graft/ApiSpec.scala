@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import graft.api.ops._
 import org.apache.spark.sql.functions._
 
@@ -304,6 +305,25 @@ class ApiSpec extends SparkSpec {
       assert(parts.nonEmpty)
       assert(big.queryExecution.optimizedPlan.stats.sizeInBytes ===
         BigInt(parts.map(_.length).sum))
+      // A query's pins live as long as its scope: once runQuery closes
+      // the query's fork, none of their checkpoint dirs remain.
+      def rddDirs() = {
+        val w = java.nio.file.Files.walk(dir)
+        try w.iterator().asScala.filter(_.getFileName.toString
+          .startsWith("rdd-")).toSet
+        finally w.close()
+      }
+      val prior = rddDirs()
+      var made = Set.empty[java.nio.file.Path]
+      val (_, err) = GraftSession.runQuery(
+          SparkEntry.queries("q_graph_kcore")(spark, sfDir)) { df =>
+        made = rddDirs() -- prior
+        df.count()
+      }
+      assert(err.isEmpty, s"q_graph_kcore failed: $err")
+      assert(made.nonEmpty, "the query pinned nothing under the dir")
+      assert((rddDirs() intersect made).isEmpty,
+        "pin checkpoint dirs outlived the query's scope")
     } finally {
       sc.setCheckpointDir(null)
       java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())

@@ -47,8 +47,7 @@ class BucketingSpec extends SparkSpec {
     // o_orderdate interval, so footer min/max prunes a time-range
     // scan to ~1/N of the files. Verify from the data itself:
     // per-file [min, max] intervals must not overlap.
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_sorted_spec").toString
+    val tmp = graft.operators.Scans.tmpPath(spark, "graft_sorted_spec")
     try {
       Tables(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_orderdate"))
@@ -84,8 +83,8 @@ class BucketingSpec extends SparkSpec {
       .withColumn("ux", pmod(col("user_id"), lit(256)).cast("long"))
       .withColumn("vy", pmod(floor(col("value")).cast("long"), lit(256)))
     def rangeSums(sorted: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_zorder_spec").toString
+      val tmp = graft.operators.Scans.tmpPath(spark,
+        s"graft_zorder_spec-${java.util.UUID.randomUUID()}")
       try {
         sorted.write.mode("overwrite").parquet(tmp)
         val r = spark.read.parquet(tmp)
@@ -132,8 +131,8 @@ class BucketingSpec extends SparkSpec {
     val nDocs = Tables(spark, sfDir, "documents").count()
     val r = SparkEntry.queries("q_lake_compact")(spark, sfDir)
     assert(r.count() === nDocs, "compaction dropped or duplicated rows")
-    val frag = Scans.tmpPath(spark, "compact_frag")
-    val out = Scans.tmpPath(spark, "compact_out")
+    val frag = Scans.tmpPath(r.sparkSession, "compact_frag")
+    val out = Scans.tmpPath(r.sparkSession, "compact_out")
     assert(Scans.parquetFileCount(spark, frag) === 16,
       "fragmented copy should have 16 data files")
     // 500 docs is well under the 128 MB target -> exactly one file.

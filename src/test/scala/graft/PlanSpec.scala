@@ -88,7 +88,7 @@ class PlanSpec extends SparkSpec {
     // DPP: the dim's runtime filter prunes fact partitions the static
     // optimizer can't see — at 100 TB this is the difference between
     // scanning one partition and scanning the lake.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    val tmp = graft.operators.Scans.tmpPath(spark, "graft-dpp")
     Tables(spark, sfDir, "orders")
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(tmp)
     val fact = spark.read.parquet(tmp)

@@ -83,7 +83,7 @@ class QualitySpec extends SparkSpec {
     val docs = Tables(spark, sfDir, "documents")
     val clone = docs.filter(col("doc_id") === 0)
       .withColumn("doc_id", lit(999999L))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sim").toString
+    val tmp = graft.operators.Scans.tmpPath(spark, "graft-sim")
     docs.unionByName(clone).write.mode("overwrite")
       .parquet(s"$tmp/documents.parquet")
     val pairs = SparkEntry.queries("q_dedup_simhash")(spark, tmp)
@@ -317,7 +317,7 @@ class QualitySpec extends SparkSpec {
     val e = Tables(spark, sfDir, "embeddings")
     val clone = e.filter(col("vec_id") === 0)
       .withColumn("vec_id", lit(999999L))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ann").toString
+    val tmp = graft.operators.Scans.tmpPath(spark, "graft-ann")
     e.unionByName(clone).write.mode("overwrite")
       .parquet(s"$tmp/embeddings.parquet")
     val hits = graft.operators.Similarity.annLsh(spark, tmp, numPlanes = 12)
@@ -353,7 +353,7 @@ class QualitySpec extends SparkSpec {
     val tiny = docs.filter(col("doc_id") === 0)
       .withColumn("doc_id", lit(999999L))
       .withColumn("text", lit("single"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rep").toString
+    val tmp = graft.operators.Scans.tmpPath(spark, "graft-rep")
     docs.unionByName(tiny).write.mode("overwrite")
       .parquet(s"$tmp/documents.parquet")
     val r = SparkEntry.queries("q_text_repetition")(spark, tmp)

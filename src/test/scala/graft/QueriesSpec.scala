@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 /** Every SparkEntry query must execute at sf0.001 and return rows —
@@ -8,11 +9,46 @@ import org.apache.spark.sql.functions._
   */
 class QueriesSpec extends SparkSpec {
 
+  /** What the shared session holds that a query could have left: RDD
+    * ids of persistent RDDs, temp view names, stream execution threads
+    * and scope dirs under Spark's local dir. Persistent RDDs, threads
+    * and dirs are context-wide, so the pass is judged against what the
+    * suites before it left, not against zero.
+    */
+  private def residue(): Map[String, Set[String]] = Map(
+    "persistent RDDs" ->
+      spark.sparkContext.getPersistentRDDs.keySet.map(_.toString).toSet,
+    "temp views" -> spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet,
+    "active streams" -> Thread.getAllStackTraces.keySet.asScala
+      .map(_.getName).filter(_.startsWith("stream execution thread")).toSet,
+    "scope dirs" -> Option(new java.io.File(
+        org.apache.spark.SparkFiles.getRootDirectory()).listFiles())
+      .toSet.flatten.map(_.getName).filter(_.startsWith("scope-")))
+
+  private var before: Map[String, Set[String]] = Map.empty
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    before = residue()
+  }
+
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
-      val df = fn(spark, sfDir)
-      assert(df.columns.nonEmpty)
-      assert(df.count() > 0, s"$name returned 0 rows")
+      val (_, err) = GraftSession.runQuery(fn(spark, sfDir)) { df =>
+        assert(df.columns.nonEmpty)
+        assert(df.count() > 0, s"$name returned 0 rows")
+      }
+      err.foreach(throw _)
+    }
+  }
+
+  test("the query pass leaves nothing on the shared session") {
+    // Each query ran on its own fork, closed by runQuery; nothing
+    // sweeps between queries, so whatever a query leaves shows here.
+    val after = residue()
+    before.keys.foreach { k =>
+      assert(after(k) -- before(k) === Set.empty, s"$k left by the pass")
     }
   }
 

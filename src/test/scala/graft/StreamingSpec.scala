@@ -110,7 +110,7 @@ class StreamingSpec extends SparkSpec {
   test("stateful query recovers its state from the checkpoint on restart") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = graft.operators.Scans.tmpPath(spark, "graft-ckpt")
     val in = MemoryStream[Ev]
     // memory sink can't recover from a checkpoint; foreachBatch can.
     val seen = scala.collection.concurrent.TrieMap[(Long, Long), Double]()
@@ -588,7 +588,8 @@ class StreamingSpec extends SparkSpec {
     // into the same sink — exactly-once across the restart.
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files.createTempDirectory("graft-resume")
+    val root = java.nio.file.Paths.get(
+      graft.operators.Scans.tmpPath(spark, "graft-resume"))
     val in = root.resolve("in").toString
     val sink = root.resolve("sink").toString
     val ckpt = root.resolve("ckpt").toString
