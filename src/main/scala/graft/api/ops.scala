@@ -1,9 +1,10 @@
 package graft.api
 
 import graft.functions.{CentroidAgg, GraftFunctions}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The engine's user-facing, table-agnostic API: every operator takes
   * and returns a `DataFrame`, parameterized by `Column`s, so it runs on
@@ -392,6 +393,25 @@ object ops {
 
   private[graft] def byKey(d: DataFrame, keys: Column*): DataFrame =
     d.repartition(sizeParts(d), keys: _*)
+
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes;
+    * None ("never") when broadcasting is off (`-1` does not parse as a
+    * byte string) or the setting is not a positive size. */
+  private[graft] def broadcastBytes(spark: SparkSession): Option[Long] =
+    try Some(org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")))
+      .filter(_ > 0)
+    catch { case _: NumberFormatException => None }
+
+  /** Pins `d` and returns the named aggregates `metrics` over its rows,
+    * computed by the pin job itself (`Dataset.observe`): a convergence
+    * probe that runs no job of its own. */
+  private[graft] def pinObserved(d: DataFrame, metrics: Column*)
+      : (DataFrame, Map[String, Any]) = {
+    val probe = Observation()
+    val pin = pinLineage(d.observe(probe, metrics.head, metrics.tail: _*))
+    (pin, probe.get)
+  }
 
   /** Release a pinned frame's materialized blocks — see
     * [[org.apache.spark.sql.graft.PinBridge.release]]. Only for pins
@@ -970,10 +990,13 @@ object ops {
       * memory-backed `localCheckpoint` by default, fault-tolerant
       * `checkpoint()` once `sc.setCheckpointDir` is set, so on a real
       * cluster hours of propagation rounds survive executor loss. The
-      * driver coordinates but never holds data:
-      * its only per-round action is an `isEmpty` convergence probe.
-      * Raises if not converged within `maxIter` — an unconverged
-      * labeling silently merges/splits clusters, so fail loudly.
+      * driver coordinates but never holds data: each round's only
+      * job is its pin, which also counts the changed labels
+      * ([[pinObserved]]). When the pinned edge list fits one task
+      * ([[GraphKernels.fits]]), union-find finishes there instead of
+      * the rounds. Raises if the rounds do not converge within
+      * `maxIter` — an unconverged labeling silently merges/splits
+      * clusters, so fail loudly.
       */
     def connectedComponents(a: String, b: String,
                             maxIter: Int = 25): DataFrame = {
@@ -984,6 +1007,16 @@ object ops {
       val edges = pinLineage(df.select(col(a).as("s"), col(b).as("t"))
         .unionByName(df.select(col(b).as("s"), col(a).as("t")))
         .distinct().keyedBy(col("t")))
+      val s = edges.schema("s")
+      if (GraphKernels.fits(edges))
+        GraphKernels.finish(edges, StructType(Seq(
+          StructField("id", s.dataType, s.nullable),
+          StructField("comp", s.dataType))))(GraphKernels.components)
+      else propagateMinLabels(edges, maxIter)
+    }
+
+    private def propagateMinLabels(edges: DataFrame, maxIter: Int)
+        : DataFrame = {
       var labels = pinLineage(edges.select(col("s").as("id")).distinct()
         .withColumn("comp", col("id")))
       var it = 0
@@ -991,23 +1024,24 @@ object ops {
       while (!done && it < maxIter) {
         // The previous label rides through the same union + min-agg
         // (tagged rows; prev is unique per id, so min() recovers it),
-        // so the convergence probe is a cheap filter on the already-
-        // checkpointed result — NOT a second edges-sized join per
-        // round, which previously cost each iteration an extra
+        // so the convergence probe is a count of changed labels that
+        // the pin job itself computes — NOT a second edges-sized join
+        // per round, which previously cost each iteration an extra
         // shuffle of the whole label frame.
         // `labels` appears twice in this plan (join + carry-over
         // union): reuse() on the join side keeps its pinned hash
         // layout through relation dedup, and edges are pre-partitioned
         // on `t`, so the join moves nothing.
-        val next = pinLineage(reuse(edges)
+        val (next, probe) = pinObserved(reuse(edges)
           .join(reuse(labels).select(col("id").as("t"), col("comp")), "t")
           .select(col("s").as("id"), col("comp"),
             when(lit(false), col("comp")).as("prev"))
           .unionByName(labels.select(col("id"), col("comp"),
             col("comp").as("prev")))
           .groupBy("id").agg(min("comp").as("comp"),
-            min("prev").as("prev")))
-        done = next.filter(col("comp") =!= col("prev")).isEmpty
+            min("prev").as("prev")),
+          count_if(col("comp") =!= col("prev")).as("changed"))
+        done = probe("changed") == 0L
         // `next` is materialized (pins are eager), so round N−1's label
         // blocks are dead — release them now instead of letting every
         // round's O(V) pin accumulate until driver GC.
@@ -1039,27 +1073,40 @@ object ops {
       * small-star connects every neighbor v ≤ u (plus u itself) to m.
       * Both strictly reduce the potential Σ(edge stretch); the edge
       * set converges to min-rooted stars, read out as labels.
-      * Convergence probe = row-count match, then an exact `except`
-      * check (count equality alone could alias a swap). Lineage is
-      * pinned per round ([[pinLineage]]).
+      * Convergence probe = the round's pin job counts and hashes its
+      * own rows ([[pinObserved]]); only when both match the previous
+      * pin does an exact `exceptAll` check run. Lineage is pinned per
+      * round ([[pinLineage]]). Once the pinned edge set fits one task
+      * ([[GraphKernels.fits]], checked at entry and after every round),
+      * union-find finishes there.
       */
     def connectedComponentsStar(a: String, b: String,
                                 maxIter: Int = 30): DataFrame = {
       val verts = df.select(col(a).cast("long").as("id"))
         .unionByName(df.select(col(b).cast("long").as("id"))).distinct()
+      // Every pin also counts its rows and sums their xxhash64: a round
+      // whose pin matches the previous one on both is the only one
+      // that pays for the exact `exceptAll` confirmation (equal sums
+      // alone could alias a swap).
+      def pinSigned(d: DataFrame): (DataFrame, Map[String, Any]) =
+        pinObserved(d, count(lit(1)).as("n"),
+          sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("h"))
       // Orient child > parent; self-loops carry no connectivity. ONE
       // exchange establishes both the dedup and the hash(u) layout
       // (hash(u) clusters every (u, v) duplicate), which the per-round
       // min-child aggregate and small-star join then consume
       // shuffle-free off the pin.
-      var e = pinLineage(df
+      var (e, sig) = pinSigned(df
         .select(greatest(col(a), col(b)).cast("long").as("u"),
           least(col(a), col(b)).cast("long").as("v"))
         .filter(col("u") =!= col("v")).keyedBy(col("u")).distinct())
-      var eCount = e.count()
       var it = 0
       var done = false
-      while (!done && it < maxIter) {
+      // The edge set only shrinks toward the stars, so the one-task
+      // rule is checked again on every round's pin: on a big graph it
+      // fires only for the tail rounds.
+      var small = GraphKernels.fits(e)
+      while (!done && !small && it < maxIter) {
         // Large-star from the ORIENTED edges alone: over u > v,
         // min(N(c) ∪ {c}) = least(min-child(c), c) — every parent of
         // c is > c, so the symmetric 2E neighbor view the round used
@@ -1080,29 +1127,30 @@ object ops {
         // Small-star on the oriented (child > parent) edges — both
         // consumers (min rollup + join) read the keyed layout.
         val smins = large.groupBy("u").agg(min(col("v")).as("m"))
-        val small = large.join(smins, "u")
+        val stars = large.join(smins, "u")
           .select(col("v").as("u"), col("m").as("v"))
           .filter(col("u") =!= col("v"))
           .unionByName(smins.select(col("u"), col("m").as("v")))
           .keyedBy(col("u")).distinct()
-        val next = pinLineage(small)
-        // One count job per round (the previous round's count is
-        // carried over); the exact `except` confirmation runs only
-        // when the counts already agree.
-        val nextCount = next.count()
-        done = nextCount == eCount && next.exceptAll(e).isEmpty
+        val (next, nextSig) = pinSigned(stars)
+        small = GraphKernels.fits(next)
+        done = !small && nextSig == sig && next.exceptAll(e).isEmpty
         // The convergence probe above was the last read of round N−1's
         // edge pin — release its O(E) blocks before the next round.
         releasePin(e)
         e = next
-        eCount = nextCount
+        sig = nextSig
         it += 1
       }
-      require(done,
+      require(done || small,
         s"connectedComponentsStar: not converged after $maxIter rounds")
-      val lbl = e.select(col("u").as("id"), col("v").as("comp"))
-        .unionByName(e.select(col("v").as("id"), col("v").as("comp")))
-        .groupBy("id").agg(min("comp").as("comp"))
+      val lbl =
+        if (done) e.select(col("u").as("id"), col("v").as("comp"))
+          .unionByName(e.select(col("v").as("id"), col("v").as("comp")))
+          .groupBy("id").agg(min("comp").as("comp"))
+        else GraphKernels.finish(e, StructType(Seq(
+          StructField("id", LongType), StructField("comp", LongType))))(
+          GraphKernels.components)
       verts.join(lbl, Seq("id"), "left")
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
     }
@@ -1122,17 +1170,30 @@ object ops {
       * eligible) sub-k node set — edges shuffle at most once per
       * round, and the edge list is hash-partitioned once up front so
       * degree counting never re-exchanges it. The loop runs to
-      * FIXPOINT with one scalar convergence probe per round (count of
-      * sub-k nodes — same driver footprint as connectedComponents'
-      * probe); rounds are data-bounded (≤ the peel depth, O(n) worst
-      * case on a path, small on real degree-skewed graphs), capped by
-      * `maxRounds` as a runaway guard.
+      * FIXPOINT; its probe (the count of sub-k nodes) is computed by
+      * the round's degree pin job itself ([[pinObserved]]). Rounds are
+      * data-bounded (≤ the peel depth, O(n) worst case on a path,
+      * small on real degree-skewed graphs), capped by `maxRounds` as a
+      * runaway guard. When the pinned adjacency fits one task
+      * ([[GraphKernels.fits]]), the same rounds, under the same cap,
+      * peel there in memory instead.
       */
     def kCore(a: String, b: String, k: Int, maxRounds: Int = 50): DataFrame = {
       require(k >= 1, s"k must be >= 1, got $k")
       require(maxRounds >= 1 && maxRounds <= 500,
         s"maxRounds must be in [1,500], got $maxRounds")
       val edges0 = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
+      val s = edges0.schema("s")
+      if (GraphKernels.fits(edges0))
+        GraphKernels.finish(edges0, StructType(Seq(
+          StructField("id", s.dataType, s.nullable),
+          StructField("deg", LongType, nullable = false))))(
+          GraphKernels.peel(k, maxRounds))
+      else peelRounds(edges0, k, maxRounds)
+    }
+
+    private def peelRounds(edges0: DataFrame, k: Int, maxRounds: Int)
+        : DataFrame = {
       // The O(E) edge list is pinned exactly ONCE. Each round filters
       // it AT READ against the ACCUMULATED peel set (`removed`, a
       // node-sized pin rebuilt per round) — removing nodes is
@@ -1144,19 +1205,12 @@ object ops {
       //
       // Broadcast bound for the peel set: derived from the session's
       // autoBroadcastJoinThreshold at ~16 bytes per hashed long row —
-      // the probe just COUNTED the exact cardinality at the driver, so
-      // the decision never trusts a size estimate (a blind 5M-row hint
-      // here could OOM a constrained driver). Past the bound — a first
-      // peel removing most of a huge graph — fall back to the shuffled
-      // anti join.
-      // ("-1" — broadcast disabled — does not parse as a byte string;
-      // treat any unparseable/non-positive setting as "never broadcast")
-      val bcRows = try {
-        val b = org.apache.spark.network.util.JavaUtils
-          .byteStringAsBytes(df.sparkSession.conf
-            .get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
-        if (b <= 0) 0L else b / 16
-      } catch { case _: NumberFormatException => 0L }
+      // the probe just COUNTED the exact cardinality, so the decision
+      // never trusts a size estimate (a blind 5M-row hint here could
+      // OOM a constrained driver). Past the bound — a first peel
+      // removing most of a huge graph — or with broadcasting off, fall
+      // back to the shuffled anti join.
+      val bcRows = broadcastBytes(edges0.sparkSession).fold(0L)(_ / 16)
       def liveEdges(removed: Option[DataFrame], nRemoved: Long)
           : DataFrame = {
         val base = reuse(edges0)
@@ -1181,10 +1235,11 @@ object ops {
         round += 1
         // Broadcast anti joins preserve the pinned hash(s) layout, so
         // the degree rollup never re-exchanges the O(E) side.
-        val deg = pinLineage(liveEdges(removed, nRemoved)
-          .groupBy("s").agg(count(lit(1)).as("_deg")))
+        val (deg, probe) = pinObserved(liveEdges(removed, nRemoved)
+          .groupBy("s").agg(count(lit(1)).as("_deg")),
+          count_if(col("_deg") < k).as("bad"))
         val bad = deg.filter(col("_deg") < k).select(col("s").as("_bad"))
-        val nBad = bad.count()
+        val nBad = probe("bad").asInstanceOf[Long]
         if (nBad == 0) { converged = true; lastDeg = deg }
         else {
           val nextRemoved = pinLineage(removed match {
@@ -1220,12 +1275,25 @@ object ops {
       * (O(frontier) ids), and the visited filter is an anti-join
       * against the node-sized distance table. Rounds are pinned like
       * connectedComponents' loop so the plan prefix never regrows.
+      * When the pinned adjacency fits one task ([[GraphKernels.fits]]),
+      * a BFS queue capped at `maxHops` runs there instead.
       */
     def bfsHops(a: String, b: String, seed: Long, maxHops: Int): DataFrame = {
       require(maxHops >= 1 && maxHops <= 50,
         s"maxHops must be in [1,50]: $maxHops")
       val edges = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
-      val spark = df.sparkSession
+      // Integral ids widen to the long seed, as in the rounds' union.
+      if (GraphKernels.fits(edges))
+        GraphKernels.finish(edges, StructType(Seq(
+          StructField("id", LongType, edges.schema("t").nullable),
+          StructField("dist", LongType, nullable = false))))(
+          GraphKernels.bfs(seed, maxHops))
+      else expandHops(edges, seed, maxHops)
+    }
+
+    private def expandHops(edges: DataFrame, seed: Long, maxHops: Int)
+        : DataFrame = {
+      val spark = edges.sparkSession
       var dist = spark.range(1)
         .select(lit(seed).as("id"), lit(0L).as("dist"))
       var frontier = dist.select("id")
@@ -1339,11 +1407,13 @@ object ops {
         .withColumn("label", col("id")))
       for (_ <- 1 to iters) {
         // argmax-by-(count desc, label asc) as min(struct(−count,
-        // label)) — a second HASH aggregate (partial-aggs, no sort)
-        // instead of a row_number window, which costs a full
-        // per-id-partition SORT each round (measured 2.3 s → 2.1 s LPA,
-        // 3.4 s → 2.5 s modularity min-of-3 at sf0.1); negating
-        // the count is safe (it is bounded by the edge count).
+        // label)) — a second aggregate instead of a row_number window
+        // (measured 2.3 s → 2.1 s LPA, 3.4 s → 2.5 s modularity
+        // min-of-3 at sf0.1). It is NOT a hash aggregate: min over a
+        // struct has no hash-aggregate buffer, so Spark plans it as a
+        // SortAggregate behind a Sort, at both the partial and the
+        // final level; negating the count is safe (it is bounded by
+        // the edge count).
         // The label join keys on `s` — the key the edge list is
         // hash-partitioned on — and relabels `t`: over a SYMMETRIC
         // edge set {(u,v)} = {(v,u)} the (t, label(s)) pairs are the

@@ -434,12 +434,84 @@ class ApiSpec extends SparkSpec {
   test("connectedComponents raises loudly when maxIter is too small") {
     import spark.implicits._
     // A 6-chain needs ~5 propagation rounds; maxIter=2 must raise, not
-    // return a silently half-merged labeling.
+    // return a silently half-merged labeling. The cap guards the
+    // distributed rounds, so they run with the broadcast bound off: a
+    // graph this small otherwise finishes in one task, by union-find,
+    // which needs no rounds.
     val chain = (1L to 5L).map(i => (i, i + 1)).toDF("d1", "d2")
     val ex = intercept[IllegalArgumentException] {
-      chain.connectedComponents("d1", "d2", maxIter = 2)
+      GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        chain.connectedComponents("d1", "d2", maxIter = 2)
+      }
     }
     assert(ex.getMessage.contains("not converged"))
+  }
+
+  test("the distributed rounds probe convergence on their pin jobs") {
+    import spark.implicits._
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // A 6-chain and a triangle: every op runs several rounds.
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (10L, 11L), (11L, 12L), (12L, 10L)).toDF("a", "b")
+    val comp = (1L to 6L).map(_ -> 1L).toMap ++ (10L to 12L).map(_ -> 10L)
+    val sc = spark.sparkContext
+    // The actions `body` runs, by the call site Spark names each SQL
+    // execution after ("pin at …", "isEmpty at …"), and the number of
+    // jobs it starts. Under AQE the final stage of a collecting action
+    // runs on a pool thread and takes that thread's name, so the
+    // action is read from its execution, not its stages. Bus delivery
+    // is ordered: once a marker job submitted after `body` has been
+    // seen, so has everything `body` started.
+    def actionsOf(body: => Map[Long, Long]): (Map[Long, Long], List[String], Int) = {
+      val actions = new ConcurrentLinkedQueue[String]()
+      val jobs = new AtomicInteger()
+      val marker = new CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(_.getProperty("graft.test.marker") != null))
+            marker.countDown()
+          else jobs.incrementAndGet()
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case x: SparkListenerSQLExecutionStart => actions.add(x.description)
+          case _ =>
+        }
+      }
+      sc.addSparkListener(listener)
+      try {
+        val out = body
+        sc.setLocalProperty("graft.test.marker", "end")
+        try sc.parallelize(Seq(1), 1).count()
+        finally sc.setLocalProperty("graft.test.marker", null)
+        assert(marker.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+        (out, actions.asScala.toList, jobs.get)
+      } finally sc.removeSparkListener(listener)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cases = Seq[(String, () => Map[Long, Long], Map[Long, Long])](
+      ("connectedComponents", () => rows(edges.connectedComponents("a", "b")), comp),
+      ("connectedComponentsStar", () => rows(edges.connectedComponentsStar("a", "b")), comp),
+      ("kCore", () => rows(edges.kCore("a", "b", k = 2)),
+        Map(10L -> 2L, 11L -> 2L, 12L -> 2L)))
+    for ((name, run, expect) <- cases) {
+      val (dist, actions, distJobs) = actionsOf(GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(run()))
+      assert(dist === expect, name)
+      assert(actions.count(_.startsWith("pin at")) > 3, s"$name ran no rounds: $actions")
+      assert(!actions.exists(_.startsWith("count at")), s"$name: $actions")
+      // Only the star form may confirm a signature match exactly, once.
+      val confirmations = actions.count(_.startsWith("isEmpty at"))
+      assert(confirmations <= (if (name == "connectedComponentsStar") 1 else 0),
+        s"$name: $actions")
+      // With the bound on, the same graph finishes in one task.
+      val (one, _, oneJobs) = actionsOf(run())
+      assert(one === expect, name)
+      assert(oneJobs < distJobs,
+        s"$name: $oneJobs jobs on the one-task path, $distJobs distributed")
+    }
   }
 
   test("mergeUpsert fails loudly on a NULL merge key in the source") {

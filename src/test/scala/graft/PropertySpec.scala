@@ -224,13 +224,93 @@ class PropertySpec extends SparkSpec {
       val expect = dirty.flatMap(e => Seq(e._1, e._2)).distinct
         .map(x => x -> find(x)).toMap
       val df = dirty.toDF("a", "b")
-      val minLabel = df.connectedComponents("a", "b", maxIter = 100)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val star = df.connectedComponentsStar("a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(minLabel === expect, s"seed=$seed: min-label != union-find")
-      assert(star === expect, s"seed=$seed: star != union-find")
+      def check(path: String): Unit = {
+        val minLabel = df.connectedComponents("a", "b", maxIter = 100)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val star = df.connectedComponentsStar("a", "b")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(minLabel === expect, s"seed=$seed $path: min-label != union-find")
+        assert(star === expect, s"seed=$seed $path: star != union-find")
+      }
+      // Small graphs finish in one task; the rounds run only with the
+      // broadcast bound off, so each graph checks both paths.
+      check("one-task")
+      distributed(check("distributed"))
+      // Checkpoint pins carry their size from their part files: the
+      // same decision and the same labels with a checkpoint dir set.
+      if (seed == 1) withCheckpointDir {
+        check("one-task, checkpoint dir")
+        distributed(check("distributed, checkpoint dir"))
+      }
     }
+  }
+
+  /** Runs `body` with the one-task finish of the iterative graph ops
+    * off: with no broadcast bound, no pin is small enough for it. */
+  private def distributed[T](body: => T): T =
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+
+  private def withCheckpointDir[T](body: => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pins")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try body
+    finally {
+      spark.sparkContext.setCheckpointDir(null)
+      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+    }
+  }
+
+  test("bfsHops matches an in-memory BFS on seeded graphs, both paths") {
+    import spark.implicits._
+    import graft.api.ops._
+    // Dirty input: duplicate edges, reversals and a self-loop; seed 99
+    // has no edge at all, so only it is reached, at distance 0.
+    for (seed <- 1 to 4; (from, hops) <- Seq((0L, 2), (5L, 4), (99L, 3))) {
+      val n = 30
+      val raw = (0 until 28 + 2 * seed).map { i =>
+        (sample(Gen.choose(0, n - 1), seed * 3000 + i).toLong,
+          sample(Gen.choose(0, n - 1), seed * 3000 + i + 700).toLong)
+      }
+      val dirty = raw ++ raw.take(4) ++ raw.take(3).map(_.swap) ++ Seq((2L, 2L))
+      val adj = dirty.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+        .groupMap(_._1)(_._2)
+      var expect = Map(from -> 0L)
+      var frontier = Set(from)
+      for (h <- 1 to hops) {
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil)) -- expect.keySet
+        expect ++= frontier.map(_ -> h.toLong)
+      }
+      val df = dirty.toDF("a", "b")
+      def got() = df.bfsHops("a", "b", seed = from, maxHops = hops)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got() === expect, s"seed=$seed from=$from: one-task != BFS")
+      assert(distributed(got()) === expect,
+        s"seed=$seed from=$from: distributed != BFS")
+    }
+  }
+
+  test("graph ops keep int ids and the same schema on both paths") {
+    import spark.implicits._
+    import graft.api.ops._
+    // A non-null and a nullable int id column: both paths must agree on
+    // type and nullability, not only on values.
+    val edges = Seq((1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (6, 7), (8, 8))
+    val frames = Seq(edges.toDF("a", "b"),
+      edges.map { case (a, b) => (a, Option(b)) }.toDF("a", "b"))
+    val graphOps: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "connectedComponents" -> (_.connectedComponents("a", "b")),
+      "connectedComponentsStar" -> (_.connectedComponentsStar("a", "b")),
+      "kCore" -> (_.kCore("a", "b", k = 2)),
+      "bfsHops" -> (_.bfsHops("a", "b", seed = 3L, maxHops = 2)))
+    for (df <- frames; (name, op) <- graphOps) {
+      val one = op(df)
+      val dist = distributed(op(df))
+      assert(one.schema === dist.schema, s"$name on ${df.schema.simpleString}")
+      assert(one.collect().toSet === dist.collect().toSet, name)
+    }
+    assert(frames.head.connectedComponents("a", "b").schema("id").dataType ===
+      org.apache.spark.sql.types.IntegerType)
   }
 
   test("triangleCount(exact) matches brute force on seeded random graphs") {
@@ -292,10 +372,26 @@ class PropertySpec extends SparkSpec {
             .filter(_._2.nonEmpty)
       }
       val expect = adj.map { case (v, ns) => v -> ns.size.toLong }
-      val got = dirty.toDF("a", "b").kCore("a", "b", k = k)
+      def got() = dirty.toDF("a", "b").kCore("a", "b", k = k)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === expect, s"seed=$seed k=$k: kCore != sequential peel")
+      assert(got() === expect, s"seed=$seed k=$k: kCore != sequential peel")
+      assert(distributed(got()) === expect,
+        s"seed=$seed k=$k: distributed kCore != sequential peel")
     }
+  }
+
+  test("a capped kCore returns the same live degrees on both paths") {
+    import spark.implicits._
+    import graft.api.ops._
+    // K4 {1,2,3,4} + chain 4-5-6-7 peels one chain node per round at
+    // k = 2; one round removes only 7, so 6 is left with degree 1.
+    val df = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+      (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L)).toDF("a", "b")
+    val expect = Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 4L, 5L -> 2L, 6L -> 1L)
+    def got() = df.kCore("a", "b", k = 2, maxRounds = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got() === expect)
+    assert(distributed(got()) === expect)
   }
 
   test("BottomKAgg equals the sort-take reference at every partitioning") {

@@ -509,11 +509,15 @@ class QualitySpec extends SparkSpec {
       // Keep isolated-vertex coverage honest: self-pairs only.
       val withIso = edges ++ Seq((n + 1L, n + 1L), (n + 2L, n + 2L))
       val df = withIso.toDF("a", "b")
-      val minLabel = df.connectedComponents("a", "b", maxIter = 200)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val star = df.connectedComponentsStar("a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star === minLabel, s"trial $trial: labelings differ")
+      // The two round algorithms run only with the broadcast bound off;
+      // otherwise both forms finish this graph in one task.
+      GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val minLabel = df.connectedComponents("a", "b", maxIter = 200)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val star = df.connectedComponentsStar("a", "b")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(star === minLabel, s"trial $trial: labelings differ")
+      }
     }
   }
 
@@ -523,15 +527,19 @@ class QualitySpec extends SparkSpec {
     // A 300-path has diameter 299: min-label needs ~300 rounds (its
     // default maxIter=25 raises), the alternating star form must
     // finish inside its DEFAULT 30-round budget — the O(log² n) claim
-    // as an executable bound, not a comment.
+    // as an executable bound, not a comment. Both bounds are on the
+    // distributed rounds, so they run with the broadcast bound off: a
+    // path this small otherwise finishes in one task, with no rounds.
     val chain = (0L until 300L).map(i => (i, i + 1)).toDF("a", "b")
-    intercept[IllegalArgumentException] {
-      chain.connectedComponents("a", "b") // default maxIter = 25
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      intercept[IllegalArgumentException] {
+        chain.connectedComponents("a", "b") // default maxIter = 25
+      }
+      val star = chain.connectedComponentsStar("a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(star.length === 301)
+      assert(star.forall(_._2 === 0L), "single path must collapse to comp 0")
     }
-    val star = chain.connectedComponentsStar("a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(star.length === 301)
-    assert(star.forall(_._2 === 0L), "single path must collapse to comp 0")
   }
 
   test("q_sim_pq: ADC top-3 recalls dot-product brute force; self survives") {
