@@ -39,7 +39,7 @@ private[api] object GraphKernels {
     val id = fromLong(schema(0).dataType)
     val value = fromLong(schema(1).dataType)
     val Array(a, b) = edges.columns
-    ops.pinLineage(ops.reuse(edges)
+    ops.pinLineage(edges
       .select(col(a).cast(LongType), col(b).cast(LongType)).na.drop()
       .coalesce(1)
       .mapPartitions(rows => kernel(rows.map(r => (r.getLong(0), r.getLong(1))))

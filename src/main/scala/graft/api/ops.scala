@@ -342,55 +342,52 @@ object ops {
     * scan (see [[org.apache.spark.sql.graft.PinBridge.pin]] — the
     * stock `Dataset.checkpoint` records `UnknownPartitioning` under
     * AQE, and a broken attribute mapping besides, so a spine carefully
-    * `repartition(key)`-ed for reuse came back unpartitioned and EVERY
-    * downstream join/agg re-exchanged it; the r13 plan audit found the
-    * pinned PageRank edge list re-shuffled on every one of its joins).
-    * A pin that needs its layout claimable ends in
+    * `repartition(key)`-ed for its consumers came back unpartitioned
+    * and EVERY downstream join/agg re-exchanged it; the r13 plan audit
+    * found the pinned PageRank edge list re-shuffled on every one of
+    * its joins). A pin that needs its layout claimable ends in
     * [[byKey]] — an explicit-count repartition AQE never coalesces
     * (coalesced hash buckets would falsify the claim, so PinBridge
-    * refuses to record them).
+    * refuses to record them). The returned frame is referenced like
+    * any other, as often as a plan needs: relation dedup carries the
+    * layout onto every re-aliased occurrence.
     */
   private[graft] def pinLineage(d: DataFrame): DataFrame =
     org.apache.spark.sql.graft.PinBridge.pin(d)
 
-  /** Hash layout for a frame about to be pinned: repartition on `keys`
-    * with an EXPLICIT partition count — AQE coalesces a count-less
-    * `repartition(cols)` (REPARTITION_BY_COL), after which the blocks
-    * are no longer a true HashPartitioning and the pin cannot claim
-    * them; an explicit count (REPARTITION_BY_NUM) is never coalesced,
-    * while AQE stays live for everything else in the build.
-    *
-    * The count is SIZE-ADAPTIVE (guide §2: derive partitioning from
-    * input size, never a constant tuned for one box): estimated bytes /
-    * the session's AQE advisory partition size, clamped to
-    * [1, spark.sql.shuffle.partitions]. A tiny pinned frame (an
-    * iterative round's label table) gets 1-2 partitions — the same
-    * shape AQE coalescing would have produced — instead of paying
-    * shuffle-partition-count task launches per consumer stage; a big
-    * one saturates the session's configured parallelism, which itself
-    * scales with the cluster. A stats-less frame estimates huge and
-    * lands on the cap — the safe side.
-    */
-  /** Size-derived partition count for a frame: estimated bytes over
-    * the pin grain, clamped to [1, spark.sql.shuffle.partitions]. The
-    * grain defaults to the AQE advisory / 16 (4 MB): finer than the
+  /** Size-derived partition count for a frame (guide §2: derive
+    * partitioning from input size, never a constant tuned for one
+    * box): estimated bytes over the pin grain, clamped to
+    * [1, spark.sql.shuffle.partitions]. The grain is the AQE advisory
+    * partition size / 16 (4 MB by default): finer than the
     * I/O-oriented advisory because pinned frames feed CPU-heavy
     * multi-consumer operators (wedge expansion, iterative joins) that
-    * want parallel reads of blocks far smaller than a scan split.
-    * Overridable via spark.graft.pin.targetPartitionBytes.
+    * want parallel reads of blocks far smaller than a scan split. A
+    * tiny pinned frame (an iterative round's label table) gets 1-2
+    * partitions instead of paying shuffle-partition-count task
+    * launches per consumer stage; a big one saturates the session's
+    * configured parallelism, which itself scales with the cluster. A
+    * stats-less frame estimates huge and lands on the cap — the safe
+    * side.
     */
   private[graft] def sizeParts(d: DataFrame): Int = {
     val conf = d.sparkSession.conf
     val maxN = conf.get("spark.sql.shuffle.partitions").toInt
     val grain = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      conf.get("spark.graft.pin.targetPartitionBytes",
-        (org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "64MB")) / 16).toString))
+      conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        "64MB")) / 16
     val est = d.queryExecution.optimizedPlan.stats.sizeInBytes
     ((est / grain.max(1L)) + 1).min(BigInt(maxN)).max(BigInt(1)).toInt
   }
 
+  /** Hash layout for a frame about to be pinned: repartition on `keys`
+    * with an EXPLICIT, [[sizeParts]]-derived partition count — AQE
+    * coalesces a count-less `repartition(cols)` (REPARTITION_BY_COL),
+    * after which the blocks are no longer a true HashPartitioning and
+    * the pin cannot claim them; an explicit count (REPARTITION_BY_NUM)
+    * is never coalesced, while AQE stays live for everything else in
+    * the build.
+    */
   private[graft] def byKey(d: DataFrame, keys: Column*): DataFrame =
     d.repartition(sizeParts(d), keys: _*)
 
@@ -424,8 +421,8 @@ object ops {
   private[graft] def releasePin(d: DataFrame): Unit =
     org.apache.spark.sql.graft.PinBridge.release(d)
 
-  /** Layout-claiming pin for a frame about to be reused from several
-    * consumer sites. When the optimizer's size estimate is CREDIBLE
+  /** Layout-claiming pin for a frame read by several consumer
+    * sites. When the optimizer's size estimate is CREDIBLE
     * (no join in the plan — scans and row-preserving ops estimate
     * sanely), the layout decision is made up front and the frame is
     * materialized exactly ONCE: laid out by `keys` when big enough
@@ -453,10 +450,10 @@ object ops {
       else pinLineage(d.repartition(n, keys: _*))
     } else {
       val staged = pinLineage(d)
-      val fresh = reuse(staged)
-      if (sizeParts(fresh) * 2 <= maxN) staged
+      val n = sizeParts(staged)
+      if (n * 2 <= maxN) staged
       else {
-        val keyed = pinLineage(fresh.repartition(sizeParts(fresh), keys: _*))
+        val keyed = pinLineage(staged.repartition(n, keys: _*))
         releasePin(staged)
         keyed
       }
@@ -477,19 +474,6 @@ object ops {
       .unionByName(half.select(col("t").as("s"), col("s").as("t")))
       .distinct(),
       col("s"))
-
-  /** Fresh reference to a pinned frame for a consumer site. Each call
-    * yields a new scan of the same materialized blocks with its own
-    * attribute ids AND the hash layout rewritten onto them — required
-    * because the analyzer's relation dedup drops a pinned scan's
-    * partitioning on every re-aliased occurrence (see
-    * [[org.apache.spark.sql.graft.PinBridge]]), which re-introduced a
-    * full exchange of the pinned side at every join/agg that was
-    * designed to be shuffle-free. Use one `reuse(pin)` per reference
-    * when a pin feeds several subtrees of ONE plan.
-    */
-  private[graft] def reuse(d: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.PinBridge.refresh(d)
 
   /** Shared core of [[GraftDataFrameOps.triangleCount]] and the
     * scored `q_graph_triangles` (whose edge build pre-filters colors
@@ -1027,13 +1011,10 @@ object ops {
         // so the convergence probe is a count of changed labels that
         // the pin job itself computes — NOT a second edges-sized join
         // per round, which previously cost each iteration an extra
-        // shuffle of the whole label frame.
-        // `labels` appears twice in this plan (join + carry-over
-        // union): reuse() on the join side keeps its pinned hash
-        // layout through relation dedup, and edges are pre-partitioned
+        // shuffle of the whole label frame. Edges are pre-partitioned
         // on `t`, so the join moves nothing.
-        val (next, probe) = pinObserved(reuse(edges)
-          .join(reuse(labels).select(col("id").as("t"), col("comp")), "t")
+        val (next, probe) = pinObserved(edges
+          .join(labels.select(col("id").as("t"), col("comp")), "t")
           .select(col("s").as("id"), col("comp"),
             when(lit(false), col("comp")).as("prev"))
           .unionByName(labels.select(col("id"), col("comp"),
@@ -1112,15 +1093,14 @@ object ops {
         // c is > c, so the symmetric 2E neighbor view the round used
         // to aggregate contributes nothing to the minimum. m rides a
         // left join keyed on the child (least() skips the null for
-        // childless c), and each reference takes a reuse() scan so
-        // the pinned layout survives relation dedup.
-        val mn = reuse(e).groupBy("u").agg(min("v").as("_mn"))
+        // childless c).
+        val mn = e.groupBy("u").agg(min("v").as("_mn"))
           .select(col("u").as("_c"), col("_mn"))
         // `large` stays UN-pinned: it is referenced twice below, but
         // its keyedBy exchange is reused across the two references,
         // while a per-round materialization job costs more than the
         // one re-read it saves (measured on the r13 hot-set bench).
-        val large = reuse(e)
+        val large = e
           .join(mn, col("v") === col("_c"), "left")
           .select(col("u"), least(col("_mn"), col("v")).as("v"))
           .keyedBy(col("u")).distinct()
@@ -1213,16 +1193,15 @@ object ops {
       val bcRows = broadcastBytes(edges0.sparkSession).fold(0L)(_ / 16)
       def liveEdges(removed: Option[DataFrame], nRemoved: Long)
           : DataFrame = {
-        val base = reuse(edges0)
         removed match {
-          case None => base
+          case None => edges0
           case Some(r) =>
             val hint: DataFrame => DataFrame =
               if (nRemoved <= bcRows) broadcast(_) else identity
-            base
-              .join(hint(reuse(r).withColumnRenamed("_bad", "_bads")),
+            edges0
+              .join(hint(r.withColumnRenamed("_bad", "_bads")),
                 col("s") === col("_bads"), "left_anti")
-              .join(hint(reuse(r).withColumnRenamed("_bad", "_badt")),
+              .join(hint(r.withColumnRenamed("_bad", "_badt")),
                 col("t") === col("_badt"), "left_anti")
         }
       }
@@ -1244,7 +1223,7 @@ object ops {
         else {
           val nextRemoved = pinLineage(removed match {
             case None => bad
-            case Some(r) => reuse(r).unionByName(bad)
+            case Some(r) => r.unionByName(bad)
           })
           removed.foreach(releasePin)
           releasePin(deg)
@@ -1274,9 +1253,11 @@ object ops {
       * frontier-expansion join re-exchanges only the frontier
       * (O(frontier) ids), and the visited filter is an anti-join
       * against the node-sized distance table. Rounds are pinned like
-      * connectedComponents' loop so the plan prefix never regrows.
-      * When the pinned adjacency fits one task ([[GraphKernels.fits]]),
-      * a BFS queue capped at `maxHops` runs there instead.
+      * connectedComponents' loop so the plan prefix never regrows, and
+      * stop at the first empty frontier, which each frontier pin job
+      * counts itself ([[pinObserved]]). When the pinned adjacency fits
+      * one task ([[GraphKernels.fits]]), a BFS queue capped at
+      * `maxHops` runs there instead.
       */
     def bfsHops(a: String, b: String, seed: Long, maxHops: Int): DataFrame = {
       require(maxHops >= 1 && maxHops <= 50,
@@ -1298,21 +1279,30 @@ object ops {
         .select(lit(seed).as("id"), lit(0L).as("dist"))
       var frontier = dist.select("id")
       var prevFrontierPin: DataFrame = null
-      for (k <- 1 to maxHops) {
-        val next = pinLineage(edges
+      var k = 1
+      var empty = false
+      while (!empty && k <= maxHops) {
+        // The frontier pin job counts its own rows: an empty frontier
+        // leaves `dist` final, so the remaining hops are skipped.
+        val (next, probe) = pinObserved(edges
           .join(frontier.withColumnRenamed("id", "s"), "s")
           .select(col("t").as("id")).distinct()
           .join(dist, Seq("id"), "left_anti")
-          .select(col("id"), lit(k.toLong).as("dist")))
-        val newDist = pinLineage(dist.unionByName(next))
-        // Both hop-k pins are now materialized: hop k−1's dist table
-        // and frontier pin are dead — release instead of accumulating
-        // two O(V) pins per hop until driver GC.
-        releasePin(dist)
-        if (prevFrontierPin != null) releasePin(prevFrontierPin)
-        prevFrontierPin = next
-        dist = newDist
-        frontier = next.select("id")
+          .select(col("id"), lit(k.toLong).as("dist")),
+          count(lit(1)).as("n"))
+        empty = probe("n") == 0L
+        if (!empty) {
+          val newDist = pinLineage(dist.unionByName(next))
+          // Both hop-k pins are now materialized: hop k−1's dist table
+          // and frontier pin are dead — release instead of accumulating
+          // two O(V) pins per hop until driver GC.
+          releasePin(dist)
+          if (prevFrontierPin != null) releasePin(prevFrontierPin)
+          prevFrontierPin = next
+          dist = newDist
+          frontier = next.select("id")
+        }
+        k += 1
       }
       dist
     }
@@ -1339,14 +1329,12 @@ object ops {
                  damping: Double = 0.85): DataFrame = {
       require(iters >= 1 && iters <= 50, s"iters must be in [1,50]: $iters")
       // Pin the edges ONCE, keyed on the join key when large enough
-      // (see [[pinKeyed]]); every consumer site takes a `reuse(...)`
-      // scan so the pinned layout survives relation dedup (see
-      // [[reuse]]) and none of the `iters` joins below re-exchanges the
-      // (large) edge side — only the rank side (O(nodes)) shuffles per
-      // iteration.
+      // (see [[pinKeyed]]), so none of the `iters` joins below
+      // re-exchanges the (large) edge side — only the rank side
+      // (O(nodes)) shuffles per iteration.
       val edges = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
-      val deg = reuse(edges).groupBy("s").agg(count(lit(1)).as("_deg"))
-      val withDeg = pinLineage(reuse(edges).join(deg, "s"))
+      val deg = edges.groupBy("s").agg(count(lit(1)).as("_deg"))
+      val withDeg = pinLineage(edges.join(deg, "s"))
       // Lineage pinning is only needed when the loop is long: each
       // round's plan nests the previous one, so at small fixed `iters`
       // the whole rank recursion compiles into ONE multi-shuffle job
@@ -1355,13 +1343,10 @@ object ops {
       // threshold, exactly like connectedComponents' unbounded loop.
       val pin: DataFrame => DataFrame =
         if (iters > 5) pinLineage(_) else identity
-      var ranks = pin(reuse(edges).select(col("s").as("id")).distinct()
+      var ranks = pin(edges.select(col("s").as("id")).distinct()
         .withColumn("rank", lit(1.0)))
       for (_ <- 1 to iters) {
-        // reuse(): one fresh scan of the pinned edge+degree frame per
-        // iteration — without it the nested plan re-aliases the shared
-        // scan and re-exchanges the O(E) side every round.
-        val next = pin(reuse(withDeg)
+        val next = pin(withDeg
           .join(ranks.withColumnRenamed("id", "s"), "s")
           .select(col("t").as("id"),
             (col("rank") / col("_deg")).as("_c"))
@@ -1398,12 +1383,10 @@ object ops {
       */
     def labelPropagation(a: String, b: String, iters: Int = 2): DataFrame = {
       require(iters >= 1 && iters <= 20, s"iters must be in [1,20]: $iters")
-      // Consumer sites take `reuse(...)` scans so the pinned hash
-      // layout survives relation dedup (see [[reuse]]).
       val edges = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
       val pin: DataFrame => DataFrame =
         if (iters > 5) pinLineage(_) else identity
-      var labels = pin(reuse(edges).select(col("s").as("id")).distinct()
+      var labels = pin(edges.select(col("s").as("id")).distinct()
         .withColumn("label", col("id")))
       for (_ <- 1 to iters) {
         // argmax-by-(count desc, label asc) as min(struct(−count,
@@ -1420,8 +1403,7 @@ object ops {
         // identical multiset as (s, label(t)), so the result is
         // byte-identical while the O(E) side never re-exchanges
         // (joining on `t` re-shuffled the whole edge list per round).
-        // Each round takes a fresh reuse() scan of the pinned edges.
-        val next = pin(reuse(edges)
+        val next = pin(edges
           .join(labels.withColumnRenamed("id", "s"), "s")
           .groupBy(col("t").as("id"), col("label"))
           .agg(count(lit(1)).as("_c"))
@@ -1947,9 +1929,9 @@ object ops {
         .select(col("doc_id"), explode(grams).as("_gs"))
         .select(col("doc_id"), md5(col("_gs")).as("_g"))
         .keyedBy(col("_g")))
-      val dfreq = reuse(inst).distinct()
+      val dfreq = inst.distinct()
         .groupBy("_g").agg(count(lit(1)).as("_df"))
-      reuse(inst).join(dfreq, "_g")
+      inst.join(dfreq, "_g")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_grams"),
           sum(when(col("_df") >= 2, 1L).otherwise(0L)).as("n_dup"))
@@ -1998,10 +1980,10 @@ object ops {
         .select(col("doc_id"), col("n_tokens"), col("start"),
           md5(col("_gs")).as("_g"))
         .keyedBy(col("_g")))
-      val dup = reuse(inst).groupBy("_g").agg(count(lit(1)).as("_c"))
+      val dup = inst.groupBy("_g").agg(count(lit(1)).as("_c"))
         .filter(col("_c") >= 2).select("_g")
       val w = Window.partitionBy("doc_id").orderBy("start")
-      val spans = reuse(inst).join(dup, "_g")
+      val spans = inst.join(dup, "_g")
         .withColumn("_prev", lag(col("start"), 1).over(w))
         .withColumn("_brk",
           when(col("_prev").isNull ||
@@ -3069,12 +3051,8 @@ object ops {
       // ReuseExchange misses — without the pin the scan→join→distinct
       // subtree runs three times (measured 1.8 s → 1.3 s min-of-3 at
       // sf0.1 with it).
-      val pinned =
+      val edges =
         pinKeyed(df.select(src.as("src"), dst.as("dst")).distinct(), col("src"))
-      // One fresh scan per consumer site (degree rollup + both wedge
-      // sides) so the pin's hash layout survives relation dedup —
-      // see [[reuse]].
-      def edges: DataFrame = reuse(pinned)
       val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d").between(2, maxDeg))
         .select(col("src"),
@@ -3111,11 +3089,9 @@ object ops {
     def butterflyCount(apex: Column, leaf: Column,
                        maxDeg: Int = Int.MaxValue): DataFrame = {
       require(maxDeg >= 2, s"maxDeg must be >= 2, got $maxDeg")
-      // same distinct, apex-keyed pin as [[adamicAdar]]; fresh scan per
-      // consumer site (see [[reuse]]).
-      val pinned =
+      // same distinct, apex-keyed pin as [[adamicAdar]].
+      val edges =
         pinKeyed(df.select(apex.as("a"), leaf.as("l")).distinct(), col("a"))
-      def edges: DataFrame = reuse(pinned)
       val deg = edges.groupBy("a").agg(count(lit(1)).as("d"))
       val capped = deg.agg(
         sum(when(col("d") > maxDeg, 1L).otherwise(0L))
@@ -3158,11 +3134,9 @@ object ops {
     def neighborJaccard(src: Column, dst: Column, topK: Int,
                         maxDeg: Int = Int.MaxValue): DataFrame = {
       require(maxDeg >= 2, s"maxDeg must be >= 2, got $maxDeg")
-      // same distinct, apex-keyed pin as [[adamicAdar]]; fresh scan per
-      // consumer site (see [[reuse]]).
-      val pinned =
+      // same distinct, apex-keyed pin as [[adamicAdar]].
+      val edges =
         pinKeyed(df.select(src.as("src"), dst.as("dst")).distinct(), col("src"))
-      def edges: DataFrame = reuse(pinned)
       val degDst = edges.groupBy("dst").agg(count(lit(1)).as("deg"))
       val srcDeg = edges.groupBy("src").agg(count(lit(1)).as("sd"))
       val hub = srcDeg.filter(col("sd").between(2, maxDeg)).select("src")

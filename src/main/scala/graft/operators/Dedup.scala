@@ -243,22 +243,20 @@ object Dedup extends QueryModule {
     // pin: the edge list feeds FIVE consumer sites (two degree legs,
     // the wedge join's both sides, the closure probe) — it is
     // hash-partitioned on the wedge apex `a` so both wedge sides read
-    // the pinned layout shuffle-free, and every site takes a reuse()
-    // scan so the layout survives relation dedup.
+    // the pinned layout shuffle-free.
     val edges = graft.api.ops.pinKeyed(
       d.jaccardPairs(col("doc_id"), col("tokset"), col("lang"),
           threshold = 0.8, maxDf = 1000)
         .select(col("d1").as("a"), col("d2").as("b")),
       col("a"))
-    def E = graft.api.ops.reuse(edges)
-    val deg = E.select(col("a").as("v"))
-      .unionAll(E.select(col("b").as("v")))
+    val deg = edges.select(col("a").as("v"))
+      .unionAll(edges.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
-    val e1 = E.select(col("a").as("u"), col("b").as("v"))
-    val e2 = E.select(col("a").as("u2"), col("b").as("w"))
+    val e1 = edges.select(col("a").as("u"), col("b").as("v"))
+    val e2 = edges.select(col("a").as("u2"), col("b").as("w"))
     val tris = e1.join(e2, col("u") === col("u2") && col("w") > col("v"))
       .select(col("u"), col("v"), col("w"))
-      .join(E.select(col("a").as("v"), col("b").as("w")), Seq("v", "w"))
+      .join(edges.select(col("a").as("v"), col("b").as("w")), Seq("v", "w"))
     val perNode = tris.select(col("u").as("v0"))
       .unionAll(tris.select(col("v").as("v0")))
       .unionAll(tris.select(col("w").as("v0")))

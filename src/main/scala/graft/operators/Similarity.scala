@@ -1104,15 +1104,13 @@ object Similarity extends QueryModule {
     import graft.api.ops._
     val li = Tables(spark, dir, "lineitem")
     // Pinned hash(o) layout: the basket collect (groupBy o) and the
-    // distinct-basket count both consume it shuffle-free; reuse() keeps
-    // the layout for all three consumer sites.
+    // distinct-basket count both consume it shuffle-free.
     val op = graft.api.ops.pinLineage(
       li.select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .keyedBy(col("o")).distinct())
-    def opRef = graft.api.ops.reuse(op)
-    val nB = opRef.select(countDistinct(col("o")).as("n_baskets"))
-    val itemN = opRef.groupBy("p").agg(count(lit(1)).as("n_item"))
-    val pairs = opRef.basketPairs(col("o"), col("p"), maxBasket = 1000)
+    val nB = op.select(countDistinct(col("o")).as("n_baskets"))
+    val itemN = op.groupBy("p").agg(count(lit(1)).as("n_item"))
+    val pairs = op.basketPairs(col("o"), col("p"), maxBasket = 1000)
       .filter(col("n_ab") >= 2)
     val rules = pairs.select(explode(array(
         struct(col("a").as("antecedent"), col("b").as("consequent"),

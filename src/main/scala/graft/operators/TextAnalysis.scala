@@ -1330,9 +1330,8 @@ object TextAnalysis extends QueryModule {
       .select(col("doc_id"), md5(col("_gs")).as("g"))
       .keyedBy(col("g"))
       .distinct())
-    def instRef = graft.api.ops.reuse(inst)
-    val first = instRef.groupBy("g").agg(min("doc_id").as("first_doc"))
-    instRef.join(first, "g")
+    val first = inst.groupBy("g").agg(min("doc_id").as("first_doc"))
+    inst.join(first, "g")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("first_doc") === col("doc_id"), 1L)

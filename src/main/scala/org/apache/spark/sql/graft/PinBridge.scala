@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.{SparkContext, SparkFiles}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, Expression, NamedExpression, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Project, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
@@ -28,33 +28,29 @@ import org.apache.spark.sql.internal.SQLConf
   * (`cloneSession`, `withActive` and `unpersistRDD` are package-private
   * to Spark, hence this package.)
   *
-  * Two Spark gaps defeat the partition-once-iterate-free design this
+  * One Spark gap defeats the partition-once-iterate-free design this
   * engine's iterative operators rely on (verified against the shipped
-  * Spark 4.1.2 bytecode and plans):
+  * Spark 4.1.2 bytecode and plans): `Dataset.checkpoint` records the
+  * PHYSICAL plan's outputPartitioning into the LogicalRDD but keys the
+  * node's output on the ANALYZED attribute ids. The optimizer is free
+  * to rewrite ids inside the plan (RemoveRedundantAliases does, for
+  * any aliased join key), so the recorded partitioning can reference
+  * attributes that are not in the node's own output — EnsureRequirements
+  * then never matches it and every consumer re-exchanges the pinned
+  * frame. [[pin]] rebuilds the LogicalRDD with the physical→analyzed
+  * attribute map applied (positional: the optimizer preserves output
+  * arity and order), dropping any partitioning/ordering it cannot prove
+  * maps onto the output.
   *
-  *  1. `Dataset.checkpoint` records the PHYSICAL plan's
-  *     outputPartitioning into the LogicalRDD but keys the node's
-  *     output on the ANALYZED attribute ids. The optimizer is free to
-  *     rewrite ids inside the plan (RemoveRedundantAliases does, for
-  *     any aliased join key), so the recorded partitioning can
-  *     reference attributes that are not in the node's own output —
-  *     EnsureRequirements then never matches it and every consumer
-  *     re-exchanges the pinned frame. [[pin]] rebuilds the LogicalRDD
-  *     with the physical→analyzed attribute map applied (positional:
-  *     the optimizer preserves output arity and order), dropping any
-  *     partitioning/ordering it cannot prove maps onto the output.
+  * A pin referenced more than once in one query needs nothing more:
+  * DeduplicateRelations re-aliases the later occurrences through
+  * `LogicalRDD.newInstance()`, which in Spark 4.1.2 rewrites the
+  * outputPartitioning (any `Expression` partitioning: HashPartitioning,
+  * PartitioningCollection) through the same old→new attribute map as
+  * the output, ordering and statistics. PropertySpec's aliased-key pin
+  * test fails if an upgrade drops that rewrite.
   *
-  *  2. When one pinned frame is referenced more than once in a single
-  *     query, DeduplicateRelations re-aliases later occurrences via
-  *     `LogicalRDD.newInstance()`, which rewrites output, ordering,
-  *     statistics and constraints — but NOT outputPartitioning (its
-  *     bytecode has rewrite lambdas for SortOrder/Statistics/
-  *     ExpressionSet only). [[refresh]] hands each consumer site its
-  *     own scan with fresh ids and a correctly rewritten partitioning,
-  *     so nothing is left for the dedup to break.
-  *
-  * Beyond the checkpoint itself neither fix moves data; both are
-  * metadata.
+  * Beyond the checkpoint itself the fix moves no data; it is metadata.
   */
 object PinBridge {
 
@@ -249,23 +245,6 @@ object PinBridge {
     }
   }
 
-  /** newInstance gives fresh output attrs + rewritten
-    * ordering/stats/constraints; patch in the one thing it forgets —
-    * the partitioning — using the same old→new map.
-    */
-  private def freshScan(l: LogicalRDD, spark: SparkSession)
-      : (LogicalRDD, Map[Attribute, Attribute]) = {
-    val fresh = l.newInstance()
-    val assoc: Map[Attribute, Attribute] = l.output.zip(fresh.output).toMap
-    val outSet = AttributeSet(fresh.output)
-    val part = remapPartitioning(l.outputPartitioning, assoc, outSet)
-    // The original's origin stats sit in a private second parameter
-    // list; re-derive the TRUE size instead — same source [[pin]] used.
-    (LogicalRDD(fresh.output, fresh.rdd, part, fresh.outputOrdering,
-      fresh.isStreaming, fresh.stream)(spark,
-        trueStats(spark, fresh.rdd)), assoc)
-  }
-
   /** Release a [[pin]] before its query ends: its blocks (async) and
     * its checkpoint files. A pin's lineage is TRUNCATED, so a released
     * pin can never be read again — callers release only pins provably
@@ -284,33 +263,6 @@ object PinBridge {
     rdd.foreach { r =>
       scopeOf(df.sparkSession).pins.remove(r.id)
       drop(r.sparkContext, r.id, r.getCheckpointFile, blocking = false)
-    }
-  }
-
-  def refresh(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[SparkSession]
-    df.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        Dataset.ofRows(spark, freshScan(l, spark)._1)
-      case p @ Project(projList, l: LogicalRDD) =>
-        // A projection over a pinned scan (the `labels`/`half` shape of
-        // the iterative loops): refresh the leaf and re-alias the
-        // projection with fresh ids so two reference sites share no
-        // expression ids at any level. Physical partitioning flows
-        // through the projection alias-aware, so the layout survives.
-        val (fresh, assoc) = freshScan(l, spark)
-        val newProj = projList.map { ne =>
-          val remapped = ne.transform {
-            case a: Attribute => assoc.getOrElse(a, a)
-          }
-          remapped match {
-            case al: Alias => Alias(al.child, al.name)()
-            case a: Attribute => a
-            case other => Alias(other, ne.name)()
-          }
-        }.map(_.asInstanceOf[NamedExpression])
-        Dataset.ofRows(spark, Project(newProj, fresh))
-      case _ => df // not a pinned scan: nothing to refresh
     }
   }
 }

@@ -457,6 +457,8 @@ class ApiSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
       (10L, 11L), (11L, 12L), (12L, 10L)).toDF("a", "b")
     val comp = (1L to 6L).map(_ -> 1L).toMap ++ (10L to 12L).map(_ -> 10L)
+    // A 4-hop path: bfsHops' fifth frontier is empty, 45 hops early.
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b")
     val sc = spark.sparkContext
     // The actions `body` runs, by the call site Spark names each SQL
     // execution after ("pin at …", "isEmpty at …"), and the number of
@@ -495,13 +497,20 @@ class ApiSpec extends SparkSpec {
       ("connectedComponents", () => rows(edges.connectedComponents("a", "b")), comp),
       ("connectedComponentsStar", () => rows(edges.connectedComponentsStar("a", "b")), comp),
       ("kCore", () => rows(edges.kCore("a", "b", k = 2)),
-        Map(10L -> 2L, 11L -> 2L, 12L -> 2L)))
+        Map(10L -> 2L, 11L -> 2L, 12L -> 2L)),
+      ("bfsHops", () => rows(path.bfsHops("a", "b", seed = 1L, maxHops = 50)),
+        (1L to 5L).map(v => v -> (v - 1L)).toMap))
     for ((name, run, expect) <- cases) {
       val (dist, actions, distJobs) = actionsOf(GraftSession.withConf(spark,
         "spark.sql.autoBroadcastJoinThreshold" -> "-1")(run()))
       assert(dist === expect, name)
       assert(actions.count(_.startsWith("pin at")) > 3, s"$name ran no rounds: $actions")
       assert(!actions.exists(_.startsWith("count at")), s"$name: $actions")
+      // bfsHops: the edge pin, then a frontier and a dist pin per hop
+      // up to the 5th frontier, which is empty and ends the rounds.
+      if (name == "bfsHops")
+        assert(actions.count(_.startsWith("pin at")) <= 1 + 2 * 4 + 1,
+          s"$name ran past its empty frontier: $actions")
       // Only the star form may confirm a signature match exactly, once.
       val confirmations = actions.count(_.startsWith("isEmpty at"))
       assert(confirmations <= (if (name == "connectedComponentsStar") 1 else 0),

@@ -13,10 +13,11 @@ class PlanSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
   /** [[plan]] with the LARGE-DATA pin shape forced: a 1-byte pin grain
-    * makes the size-adaptive pin (ops.sizeParts / pinKeyed) take its
-    * keyed-layout branch, and auto-broadcast is disabled so pinned
-    * frames — tiny at test scale, with truthful block-manager stats —
-    * plan the co-partitioned joins they plan at 100 TB. Without the
+    * (the AQE advisory size / 16) makes the size-adaptive pin
+    * (ops.sizeParts / pinKeyed) take its keyed-layout branch, and
+    * auto-broadcast is disabled so pinned frames — tiny at test scale,
+    * with truthful block-manager stats — plan the co-partitioned joins
+    * they plan at 100 TB. Without the
     * forcing, assertions about the pinned layout being consumed
     * shuffle-free test sf0.001's small-pin plan, not the shape that
     * matters (the r13 lesson: these two pins held at bench scale and
@@ -24,7 +25,7 @@ class PlanSpec extends SparkSpec {
     */
   private def planLarge(name: String): String =
     GraftSession.withConf(spark,
-      "spark.graft.pin.targetPartitionBytes" -> "1",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16b",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")(plan(name))
 
   private def countOcc(hay: String, needle: String): Int =
@@ -1030,7 +1031,7 @@ class PlanSpec extends SparkSpec {
     // O(sum deg^2) pair stream itself never shuffles
     assert(p.contains("partial_count"), p)
     // r13: the spine's pinned hash(src) layout survives into all three
-    // consumer scans (reuse() + the PinBridge layout fix), so the
+    // consumer scans (the PinBridge layout fix), so the
     // degree rollup and BOTH wedge-join sides are exchange-free — the
     // pair aggregate's is the only hash exchange left (was 4).
     assert(countOcc(p, "Exchange hashpartitioning") === 1, p)

@@ -1347,15 +1347,18 @@ class PropertySpec extends SparkSpec {
     // checkpointed plan — exactly the gap that made the stock
     // Dataset.checkpoint record a partitioning its own output can't
     // satisfy. The pin must (a) claim a HashPartitioning that maps
-    // onto ITS OWN output attributes, (b) let a keyed consumer plan
-    // with no exchange, (c) return byte-identical rows, and (d) free
-    // its blocks on releasePin.
+    // onto ITS OWN output attributes, (b) let a keyed consumer that
+    // references it twice plan with no exchange, (c) return
+    // byte-identical rows, and (d) free its blocks on releasePin.
     import spark.implicits._
     import graft.api.ops._
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     GraftSession.withConf(spark,
-        "spark.graft.pin.targetPartitionBytes" -> "1") { // force >1 part
+        // a 1-byte pin grain forces >1 part; no broadcast, so the self
+        // join below needs both sides' layout
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16b",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val left = (0L until 200L).map(i => (i, i % 7)).toDF("k", "v")
         .select(col("k").as("kk"), col("v")) // the alias under test
       val right = (0L until 200L by 2L).map(i => (i, i * 3)).toDF("kk", "w")
@@ -1371,9 +1374,14 @@ class PropertySpec extends SparkSpec {
             s"claimed layout references foreign attrs: $h vs ${lrdd.output}")
         case p => fail(s"expected a claimed HashPartitioning, got $p")
       }
-      // (b) a keyed consumer off a reuse() scan plans no exchange
-      val agg = reuse(pinned).groupBy("kk").agg(sum("w").as("sw"))
+      // (b) a self join on the key, then a keyed aggregate, plans no
+      // exchange: relation dedup re-aliases the second reference with
+      // `LogicalRDD.newInstance()`, which in Spark 4.1.2 rewrites the
+      // claimed layout onto the new attributes
+      val agg = pinned.join(pinned.select(col("kk"), col("w").as("w2")), "kk")
+        .groupBy("kk").agg(sum("w2").as("sw"))
       val pp = agg.queryExecution.executedPlan.toString
+      assert(pp.contains("SortMergeJoin"), pp)
       assert(!pp.contains("Exchange hashpartitioning"),
         s"consumer re-exchanged the pinned frame:\n$pp")
       // (c) row identity through the pin
