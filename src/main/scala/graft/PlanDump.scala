@@ -2,6 +2,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.graft.PinBridge
 /** Dev tool: dump formatted physical plans (AQE initial plans) in the
   * GraftSession shape.
   *
@@ -14,8 +15,11 @@ import org.apache.spark.sql.execution.ExplainMode
   *     before/after an optimization.
   */
 object PlanDump {
+  /** The formatted plan of a query built by `SparkEntry.queries`; closes
+    * the query's session fork after, releasing its pins and scratch dir. */
   private def plan(df: DataFrame): String =
-    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    try df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    finally PinBridge.close(df.sparkSession)
 
   def main(args: Array[String]): Unit = {
     require(args.isEmpty || args.length == 3,
@@ -96,7 +100,7 @@ object PlanDump {
       "q_ts_decay" -> "recency decay: 1-row max broadcast (BNLJ), exact-integer partial-agg'd user hash-agg — the only exchange",
       "q_sim_knn_graph" -> "exact kNN graph: anchor batch BROADCAST onto one corpus pass (BNLJ), per-anchor top-k window is the only hash exchange",
       "q_text_hashing_trick" -> "feature hashing: explode reduced map-side into (doc, bucket) partials; norm agg + join reuse doc_id partitioning",
-      "q_graph_lpa" -> "LPA: per round one edge join + two HASH aggs (argmax as min(struct(-count,label)) — no rank-window sort)",
+      "q_graph_lpa" -> "LPA: per round one edge join + a hash count agg, then the argmax as min(struct(-count,label)) — a SortAggregate behind a Sort at both levels, no rank window",
       "q_embed_kmeans" -> "Lloyd k-means: per iteration one (cluster, dim) partial-agg rollup; k*dim cells shuffle, vectors never do",
       "q_embed_pca_power" -> "PCA power iteration: one (i, j) integer Gram rollup, then 64-row frame math",
       "q_text_bpe_encode" -> "BPE encode: merges learn+apply on the vocab-bounded dict; word->count map broadcast onto the corpus",

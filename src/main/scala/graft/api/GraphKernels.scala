@@ -19,16 +19,14 @@ import org.apache.spark.sql.types._
   */
 private[api] object GraphKernels {
 
-  /** True when `pin` can finish in one task: its true bytes (the pin
-    * carries them, see `PinBridge.pin`) are within the session's
-    * broadcast bound, and its ids are integral. A frame the planner
-    * would ship whole to every task is small enough for one task to
-    * finish over; the rule reads no row count and no scale factor, so
-    * on big inputs it fires only once the state has shrunk. */
+  /** True when `pin` can finish in one task: its true bytes are within
+    * the session's broadcast bound ([[ops.withinBroadcast]]), and its
+    * ids are integral. A frame the planner would ship whole to every
+    * task is small enough for one task to finish over; the rule reads
+    * no row count and no scale factor, so on big inputs it fires only
+    * once the state has shrunk. */
   def fits(pin: DataFrame): Boolean =
-    pin.schema.forall(f => integral(f.dataType)) &&
-      ops.broadcastBytes(pin.sparkSession)
-        .exists(pin.queryExecution.optimizedPlan.stats.sizeInBytes <= _)
+    pin.schema.forall(f => integral(f.dataType)) && ops.withinBroadcast(pin)
 
   /** Runs `kernel` in one task over the two columns of the pinned
     * edge frame `edges` and pins the (id, value) pairs it returns,

@@ -400,6 +400,13 @@ object ops {
       .filter(_ > 0)
     catch { case _: NumberFormatException => None }
 
+  /** True when the pinned frame `pin`'s true bytes (the pin carries
+    * them, see `PinBridge.pin`) are within [[broadcastBytes]]: the
+    * frame is one the planner would ship whole to every task. */
+  private[graft] def withinBroadcast(pin: DataFrame): Boolean =
+    broadcastBytes(pin.sparkSession)
+      .exists(pin.queryExecution.optimizedPlan.stats.sizeInBytes <= _)
+
   /** Pins `d` and returns the named aggregates `metrics` over its rows,
     * computed by the pin job itself (`Dataset.observe`): a convergence
     * probe that runs no job of its own. */
@@ -460,6 +467,101 @@ object ops {
     }
   }
 
+  /** The token n-grams of `tokens`, in order, as space-joined strings
+    * (gram i covers tokens i+1 … i+n); an empty array for a document
+    * shorter than n. The one gram builder of the n-gram operators
+    * ([[GraftDataFrameOps.dupNgramStats]], [[GraftDataFrameOps.dupSpans]],
+    * [[GraftDataFrameOps.ngramDecontaminate]], TextAnalysis' novelty
+    * and split-coverage queries). Three rules, measured at sf0.1 on
+    * dupNgramStats, shape how callers use it:
+    * (1) `tokens` is an attribute projected BEHIND the Generate
+    * barrier — higher-order-function lambdas are CodegenFallback with
+    * no subexpression elimination, so passing a `split(...)`
+    * expression re-tokenizes the document n times per gram (6× on
+    * that stage alone);
+    * (2) the lambda does only cheap element_at reads + one concat (n
+    * unrolled at plan time) — the md5 digest runs AFTER the explode as
+    * a top-level codegen'd projection, so only digests shuffle;
+    * (3) the exploded instance table feeds two consumers, so it is
+    * lineage-pinned — (id, digest) pairs, the standard
+    * materialization point of suffix-style dedup — rather than
+    * recomputed per consumer. Net: ~9× end-to-end vs the naive plan.
+    * At corpus scale the pinned instance table is n-grams × 32 B —
+    * large enough that a real cluster sets a checkpoint dir, so the
+    * pin is a fault-tolerant checkpoint() (see [[pinLineage]]).
+    */
+  private[graft] def ngrams(tokens: Column, n: Int): Column =
+    when(size(tokens) >= n,
+      transform(sequence(lit(0), size(tokens) - n),
+        i => concat_ws(" ",
+          (0 until n).map(j =>
+            element_at(tokens, (i + lit(j + 1)).cast("int"))): _*)))
+      .otherwise(array().cast("array<string>"))
+
+  /** One BPE round's winning pair over a (syms, freq) word dict:
+    * adjacent-symbol pair counts weighted by freq — a pure projection +
+    * explode + tiny agg — and the argmax by (count DESC, p1, p2), a
+    * deterministic tie-break, taken with limit(1). Output: one row
+    * (p1, p2, pair_count).
+    */
+  private[graft] def bpeTopPair(dict: DataFrame): DataFrame = {
+    val idx = when(size(col("syms")) >= 2,
+      sequence(lit(1), size(col("syms")) - 1))
+      .otherwise(array().cast("array<int>"))
+    dict
+      .select(col("freq"), explode(transform(idx, i =>
+        struct(element_at(col("syms"), i).as("p1"),
+          element_at(col("syms"), i + 1).as("p2")))).as("pr"))
+      .groupBy(col("pr.p1").as("p1"), col("pr.p2").as("p2"))
+      .agg(sum("freq").as("pair_count"))
+      .orderBy(col("pair_count").desc, col("p1"), col("p2"))
+      .limit(1)
+  }
+
+  /** `dict` with the [[bpeTopPair]] winner `top` merged into every
+    * word's `syms`, its other columns passed through in place: a 1-row
+    * BROADCAST cross join carries the winner into a left-fold
+    * `aggregate` that replays the greedy left-to-right non-overlapping
+    * merge. The fold IS the greedy merge: walking symbols left to
+    * right, a (p1, p2) adjacency collapses to p1||p2 and the merged
+    * symbol is never itself re-matched as p1 within the round (run
+    * "aaa" with pair (a,a) → [aa, a], the canonical non-overlap rule)
+    * — fuzzed against an imperative reference in PropertySpec.
+    */
+  private[graft] def bpeMerge(dict: DataFrame, top: DataFrame): DataFrame = {
+    val merged = aggregate(col("syms"), array().cast("array<string>"),
+      (acc, x) => when(
+        try_element_at(acc, lit(-1)) === col("_p1") && x === col("_p2"),
+        concat(slice(acc, lit(1), size(acc) - 1),
+          array(concat(col("_p1"), col("_p2")))))
+        .otherwise(concat(acc, array(x))))
+    dict.crossJoin(broadcast(top.select(col("p1").as("_p1"),
+        col("p2").as("_p2"))))
+      .select(dict.columns.toSeq.map(c =>
+        if (c == "syms") merged.as("syms") else col(c)): _*)
+  }
+
+  /** The inverted-index overlap join of [[GraftDataFrameOps.jaccardPairs]]
+    * and [[GraftDataFrameOps.containmentPairs]] — the core of a
+    * set-similarity join: from a (blk, did, tok) token table and the
+    * per-doc sizes (did, sz), every pair d1 < d2 sharing at least one
+    * token within a block, with its overlap count. Tokens shuffle once
+    * on (blk, tok); each posting list self-joins, so zero-overlap pairs
+    * never materialize, and one hash agg counts each unordered pair's
+    * overlap once. Output columns: d1, d2, common, sz1, sz2.
+    */
+  private[graft] def tokenOverlap(tok: DataFrame, sizes: DataFrame)
+      : DataFrame = {
+    val a = tok.select(col("blk"), col("tok"), col("did").as("d1"))
+    val b = tok.select(col("blk").as("blk_b"), col("tok").as("tok_b"),
+      col("did").as("d2"))
+    a.join(b, a("blk") === b("blk_b") &&
+        a("tok") === b("tok_b") && a("d1") < b("d2"))
+      .groupBy("d1", "d2").agg(count(lit(1)).as("common"))
+      .join(sizes.select(col("did").as("d1"), col("sz").as("sz1")), "d1")
+      .join(sizes.select(col("did").as("d2"), col("sz").as("sz2")), "d2")
+  }
+
   /** Symmetric adjacency of an undirected `(s, t)` edge list — the one
     * edge build [[GraftDataFrameOps.kCore]], [[GraftDataFrameOps.bfsHops]],
     * [[GraftDataFrameOps.pageRank]] and
@@ -480,21 +582,20 @@ object ops {
     * inside its expansion lambda): degree-oriented wedge closure over
     * a canonical (s1 < s2) pair list, `multiplier` scaling the
     * sampled count back to the full-graph estimate (1 = exact).
-    * Dedupes, checkpoints (the edge list feeds degree, orientation,
-    * and all three count branches), and — while `broadcastEdges` holds
-    * — broadcasts the edge-bytes side of the wedge/closure probes.
-    * The hint bypasses `autoBroadcastJoinThreshold`, so past broadcast
-    * scale (edge list larger than driver / executor broadcast limits)
-    * callers pass `broadcastEdges = false`: the wedge join then
-    * shuffles by apex `u` and the closure join by `(v1, v2)` — the
-    * same algebra, shuffle-planned.
+    * Dedupes, pins (the edge list feeds degree, orientation, and all
+    * three count branches), and — when the pin's true bytes are
+    * within the broadcast bound ([[withinBroadcast]]) — broadcasts the
+    * edge-bytes side of the degree joins and the wedge/closure probes.
+    * The hint is needed because each hinted side is DERIVED from the
+    * pin, so the planner's own estimate of it is no true size. Past
+    * that bound the wedge join shuffles by apex `u` and the closure
+    * join by `(v1, v2)` — the same algebra, shuffle-planned.
     */
   private[graft] def triangleCore(rawPairs: DataFrame,
-                                  multiplier: Long,
-                                  broadcastEdges: Boolean = true): DataFrame = {
-    val hint: DataFrame => DataFrame =
-      if (broadcastEdges) broadcast(_) else identity
+                                  multiplier: Long): DataFrame = {
     val pairs = pinLineage(rawPairs.distinct())
+    val hint: DataFrame => DataFrame =
+      if (withinBroadcast(pairs)) broadcast(_) else identity
     val deg = pairs.select(col("s1").as("s"))
       .unionAll(pairs.select(col("s2").as("s")))
       .groupBy("s").agg(count(lit(1)).as("d"))
@@ -585,15 +686,7 @@ object ops {
             .withColumn("_cut", col("_df") > maxDf).drop("_df")
         }
       val tok = flagged.filter(!col("_cut")).drop("_cut")
-      val a = tok.select(col("blk"), col("tok"), col("did").as("d1"))
-      val b = tok.select(col("blk").as("blk_b"), col("tok").as("tok_b"),
-        col("did").as("d2"))
-      val common = a.join(b, a("blk") === b("blk_b") &&
-          a("tok") === b("tok_b") && a("d1") < b("d2"))
-        .groupBy("d1", "d2").agg(count(lit(1)).as("common"))
-      val pairs = common
-        .join(sizes.select(col("did").as("d1"), col("sz").as("sz1")), "d1")
-        .join(sizes.select(col("did").as("d2"), col("sz").as("sz2")), "d2")
+      val pairs = tokenOverlap(tok, sizes)
         .select(col("d1"), col("d2"),
           round(col("common").cast("double") /
             (col("sz1") + col("sz2") - col("common")), 4).as("jaccard"))
@@ -710,20 +803,11 @@ object ops {
       * shuffle — after which all rounds run on the vocab-sized dict
       * (Heaps' law: ~√N types for N tokens, so 100 TB of text trains
       * on a dict that fits one executor's shuffle partition). Each
-      * round is (a) adjacent-pair counts weighted by freq — a pure
-      * projection + explode + tiny agg, (b) the argmax pair by
-      * (count DESC, p1, p2) — deterministic tie-break, taken with
-      * limit(1), (c) a 1-row BROADCAST cross join carrying the winner
-      * into (d) a left-fold `aggregate` that replays the greedy
-      * left-to-right non-overlapping merge per word. No collect, no
-      * driver state: the k-round loop only stacks plan nodes, so
-      * Catalyst sees one DAG and the winner never leaves the cluster.
-      *
-      * The fold IS the greedy merge: walking symbols left to right,
-      * a (p1, p2) adjacency collapses to p1||p2 and the merged symbol
-      * is never itself re-matched as p1 within the round (run "aaa"
-      * with pair (a,a) → [aa, a], the canonical non-overlap rule) —
-      * fuzzed against an imperative reference in PropertySpec.
+      * round is the freq-weighted argmax pair ([[ops.bpeTopPair]])
+      * merged into every word by the greedy left-to-right fold
+      * ([[ops.bpeMerge]]). No collect, no driver state: the k-round
+      * loop only stacks plan nodes, so Catalyst sees one DAG and the
+      * winner never leaves the cluster.
       *
       * The dict is lineage-pinned per round (each round's plan embeds
       * the previous dict twice — once in the pair agg, once under the
@@ -744,32 +828,12 @@ object ops {
           col("freq")))
       var merges: DataFrame = null
       for (r <- 1 to numMerges) {
-        val idx = when(size(col("syms")) >= 2,
-          sequence(lit(1), size(col("syms")) - 1))
-          .otherwise(array().cast("array<int>"))
-        val top = dict
-          .select(col("freq"), explode(transform(idx, i =>
-            struct(element_at(col("syms"), i).as("p1"),
-              element_at(col("syms"), i + 1).as("p2")))).as("pr"))
-          .groupBy(col("pr.p1").as("p1"), col("pr.p2").as("p2"))
-          .agg(sum("freq").as("pair_count"))
-          .orderBy(col("pair_count").desc, col("p1"), col("p2"))
-          .limit(1)
+        val top = bpeTopPair(dict)
         val round = top.select(lit(r).as("merge_round"), col("p1"),
           col("p2"), concat(col("p1"), col("p2")).as("merged"),
           col("pair_count"))
         merges = if (merges == null) round else merges.unionAll(round)
-        if (r < numMerges) dict = pinLineage(dict
-          .crossJoin(broadcast(top.select(col("p1").as("_p1"),
-            col("p2").as("_p2"))))
-          .select(aggregate(col("syms"), array().cast("array<string>"),
-            (acc, x) => when(
-              try_element_at(acc, lit(-1)) === col("_p1") &&
-                x === col("_p2"),
-              concat(slice(acc, lit(1), size(acc) - 1),
-                array(concat(col("_p1"), col("_p2")))))
-              .otherwise(concat(acc, array(x)))).as("syms"),
-            col("freq")))
+        if (r < numMerges) dict = pinLineage(bpeMerge(dict, top))
       }
       merges.orderBy("merge_round")
     }
@@ -800,29 +864,7 @@ object ops {
           filter(split(col("word"), ""), s => s =!= "").as("syms"),
           col("freq")))
       for (_ <- 1 to numMerges) {
-        val idx = when(size(col("syms")) >= 2,
-          sequence(lit(1), size(col("syms")) - 1))
-          .otherwise(array().cast("array<int>"))
-        val top = dict
-          .select(col("freq"), explode(transform(idx, i =>
-            struct(element_at(col("syms"), i).as("p1"),
-              element_at(col("syms"), i + 1).as("p2")))).as("pr"))
-          .groupBy(col("pr.p1").as("p1"), col("pr.p2").as("p2"))
-          .agg(sum("freq").as("pair_count"))
-          .orderBy(col("pair_count").desc, col("p1"), col("p2"))
-          .limit(1)
-        val next = pinLineage(dict
-          .crossJoin(broadcast(top.select(col("p1").as("_p1"),
-            col("p2").as("_p2"))))
-          .select(col("word"),
-            aggregate(col("syms"), array().cast("array<string>"),
-              (acc, x) => when(
-                try_element_at(acc, lit(-1)) === col("_p1") &&
-                  x === col("_p2"),
-                concat(slice(acc, lit(1), size(acc) - 1),
-                  array(concat(col("_p1"), col("_p2")))))
-                .otherwise(concat(acc, array(x)))).as("syms"),
-            col("freq")))
+        val next = pinLineage(bpeMerge(dict, bpeTopPair(dict)))
         // Unlike bpeMergeTable (whose lazy merge-row union still
         // references every round's dict), nothing here reads round
         // N−1's dict once round N is pinned — release it.
@@ -929,17 +971,8 @@ object ops {
                          threshold: Double): DataFrame = {
       val base = df.select(block.as("blk"), id.as("did"), tokset.as("ts"))
       val sizes = base.select(col("did"), size(col("ts")).as("sz"))
-      val tok = base.select(col("blk"), col("did"),
-        explode(col("ts")).as("tok"))
-      val a = tok.select(col("blk"), col("tok"), col("did").as("d1"))
-      val b = tok.select(col("blk").as("blk_b"), col("tok").as("tok_b"),
-        col("did").as("d2"))
-      val common = a.join(b, a("blk") === b("blk_b") &&
-          a("tok") === b("tok_b") && a("d1") < b("d2"))
-        .groupBy("d1", "d2").agg(count(lit(1)).as("common"))
-      val withSizes = common
-        .join(sizes.select(col("did").as("d1"), col("sz").as("sz1")), "d1")
-        .join(sizes.select(col("did").as("d2"), col("sz").as("sz2")), "d2")
+      val withSizes = tokenOverlap(base.select(col("blk"), col("did"),
+        explode(col("ts")).as("tok")), sizes)
       val fwd = withSizes.select(col("d1").as("inner_id"),
         col("d2").as("outer_id"),
         (col("common").cast("double") / col("sz1")).as("c"))
@@ -1377,8 +1410,9 @@ object ops {
       * is checkpointed and hash-partitioned ONCE on the join key;
       * each round joins the O(nodes) label frame to it, partial-aggs
       * the (node, label) counts, and takes the per-node argmax as a
-      * row_number window — WindowGroupLimit-eligible, shuffling only
-      * label rows. Output: (id, label) — nodes sharing a label after
+      * second aggregate, min(struct(−count, label)) — a SortAggregate
+      * behind a Sort at both levels, shuffling only label rows.
+      * Output: (id, label) — nodes sharing a label after
       * `iters` rounds form the community.
       */
     def labelPropagation(a: String, b: String, iters: Int = 2): DataFrame = {
@@ -1478,18 +1512,14 @@ object ops {
       * est_total = n_triangles). Output: ONE row
       * (n_nodes, n_edges, n_triangles, est_total).
       *
-      * The canonical edge list is localCheckpoint'd — it feeds the
-      * degree table, the orientation, and all count branches; the
-      * wedge/closure probes broadcast it (edge-bytes) while
-      * `broadcastEdges` holds. The hint bypasses
-      * `autoBroadcastJoinThreshold`, so past broadcast scale (an edge
-      * list that exceeds driver/broadcast limits) pass
-      * `broadcastEdges = false` to shuffle the wedge join by apex and
-      * the closure join by (v1, v2) instead — same algebra, same
-      * counts.
+      * The canonical edge list is pinned — it feeds the degree table,
+      * the orientation, and all count branches; the wedge/closure
+      * probes broadcast it (edge-bytes) when its true bytes are within
+      * `spark.sql.autoBroadcastJoinThreshold`, and past that shuffle
+      * the wedge join by apex and the closure join by (v1, v2) — same
+      * algebra, same counts.
       */
-    def triangleCount(a: String, b: String, nColors: Int = 1,
-                      broadcastEdges: Boolean = true): DataFrame = {
+    def triangleCount(a: String, b: String, nColors: Int = 1): DataFrame = {
       require(nColors >= 1 && nColors <= 65536,
         s"nColors must be in [1, 65536], got $nColors")
       val raw = df.select(col(a).as("x"), col(b).as("y"))
@@ -1500,7 +1530,7 @@ object ops {
         if (nColors == 1) raw
         else raw.filter(md5Bucket(col("s1"), nColors) ===
           md5Bucket(col("s2"), nColors))
-      triangleCore(sampled, nColors.toLong * nColors, broadcastEdges)
+      triangleCore(sampled, nColors.toLong * nColors)
     }
 
     /** MinHash/LSH near-dup dedup → per-row keep/discard flag (O(n)
@@ -1885,8 +1915,8 @@ object ops {
       * oracle.
       *
       * Shape: grams are built as a pure per-row projection
-      * (`transform` over an index sequence — no window, no shuffle to
-      * form them), then only `md5(gram)` instances travel: every
+      * ([[ops.ngrams]], whose scaladoc holds the three measured rules
+      * of this stage), then only `md5(gram)` instances travel: every
       * shuffle key is a constant-width digest, never the text, the
       * same ids-only discipline as dedupExact — at n=13 (the paper's
       * choice) a raw-gram shuffle would ship ~13× the corpus. Document
@@ -1897,36 +1927,13 @@ object ops {
       */
     def dupNgramStats(id: Column, tokens: Column, n: Int): DataFrame = {
       require(n >= 2 && n <= 32, s"n must be in [2, 32], got $n")
-      // Three measured-at-sf0.1 performance rules shape this stage:
-      // (1) `tokens` is projected to an attribute BEHIND the Generate
-      // barrier — higher-order-function lambdas are CodegenFallback
-      // with no subexpression elimination, so referencing a
-      // `split(...)` expression n times per gram re-tokenizes the
-      // document n times per gram (6× on this stage alone);
-      // (2) the lambda does only cheap element_at reads + one concat
-      // (n unrolled at plan time) — the md5 digest runs AFTER the
-      // explode as a top-level codegen'd projection;
-      // (3) the instance table feeds TWO consumers (df-count and the
-      // join back), so it's lineage-pinned — (id, digest) pairs,
-      // the standard materialization point of suffix-style dedup —
-      // rather than recomputed per consumer (same discipline as
-      // simhash64's sketch). Net: ~9× end-to-end vs the naive plan.
-      // At corpus scale the pinned instance table is n-grams × 32 B —
-      // large enough that a real cluster sets a checkpoint dir, so
-      // the pin is a fault-tolerant checkpoint() (see pinLineage).
-      val grams = when(size(col("_t")) >= n,
-        transform(sequence(lit(0), size(col("_t")) - n),
-          i => concat_ws(" ",
-            (0 until n).map(j =>
-              element_at(col("_t"), (i + lit(j + 1)).cast("int"))): _*)))
-        .otherwise(array().cast("array<string>"))
       // The pin is hash-partitioned on the digest `_g` — the key of
       // every downstream operation: distinct (hash(_g) clusters the
       // (doc_id, _g) duplicates), the df aggregate, and the join back
       // all run on the pinned layout without re-exchanging the
       // instance table; only the final per-doc rollup shuffles.
       val inst = pinLineage(df.select(id.as("doc_id"), tokens.as("_t"))
-        .select(col("doc_id"), explode(grams).as("_gs"))
+        .select(col("doc_id"), explode(ngrams(col("_t"), n)).as("_gs"))
         .select(col("doc_id"), md5(col("_gs")).as("_g"))
         .keyedBy(col("_g")))
       val dfreq = inst.distinct()
@@ -1965,18 +1972,12 @@ object ops {
       */
     def dupSpans(id: Column, tokens: Column, n: Int): DataFrame = {
       require(n >= 2 && n <= 32, s"n must be in [2, 32], got $n")
-      val grams = when(size(col("_t")) >= n,
-        transform(sequence(lit(0), size(col("_t")) - n),
-          i => concat_ws(" ",
-            (0 until n).map(j =>
-              element_at(col("_t"), (i + lit(j + 1)).cast("int"))): _*)))
-        .otherwise(array().cast("array<string>"))
       // Same digest-keyed pin layout as [[dupNgramStats]]: the dup-gram
       // aggregate and the join back both consume the pinned hash(_g)
       // blocks shuffle-free; only the per-doc island window exchanges.
       val inst = pinLineage(df.select(id.as("doc_id"), tokens.as("_t"))
         .select(col("doc_id"), size(col("_t")).as("n_tokens"),
-          posexplode(grams).as(Seq("start", "_gs")))
+          posexplode(ngrams(col("_t"), n)).as(Seq("start", "_gs")))
         .select(col("doc_id"), col("n_tokens"), col("start"),
           md5(col("_gs")).as("_g"))
         .keyedBy(col("_g")))
@@ -2039,8 +2040,8 @@ object ops {
       * excluded — document-level policy for those belongs upstream.
       *
       * Scale shape: grams are built with the same pure-projection
-      * transform as [[dupNgramStats]] (no window, no shuffle) and only
-      * md5 digests shuffle. The eval side is DISTINCT gram digests of
+      * transform as [[dupNgramStats]] ([[ops.ngrams]]: no window, no
+      * shuffle) and only md5 digests shuffle. The eval side is DISTINCT gram digests of
       * the eval set only — benchmarks are MBs against a TB-scale
       * corpus, so it is explicitly broadcast: the contamination check
       * costs zero extra shuffles of the training corpus (a map-side
@@ -2050,15 +2051,10 @@ object ops {
     def ngramDecontaminate(id: Column, tokens: Column, isEval: Column,
                            n: Int): DataFrame = {
       require(n >= 2 && n <= 32, s"n must be in [2, 32], got $n")
-      val grams = when(size(col("_t")) >= n,
-        transform(sequence(lit(0), size(col("_t")) - n),
-          i => concat_ws(" ",
-            (0 until n).map(j =>
-              element_at(col("_t"), (i + lit(j + 1)).cast("int"))): _*)))
-        .otherwise(array().cast("array<string>"))
       val inst = pinLineage(df
         .select(id.as("doc_id"), isEval.as("_ev"), tokens.as("_t"))
-        .select(col("doc_id"), col("_ev"), explode(grams).as("_gs"))
+        .select(col("doc_id"), col("_ev"),
+          explode(ngrams(col("_t"), n)).as("_gs"))
         .select(col("doc_id"), col("_ev"), md5(col("_gs")).as("_g")))
       val evalGrams = inst.filter(col("_ev")).select("_g").distinct()
         .withColumn("_hit", lit(1L))
@@ -2101,8 +2097,8 @@ object ops {
         .withColumn("contaminated", col("max_cos_eval") >= tau)
     }
 
-    /** One-scan vocabulary heavy-hitters: the string Misra–Gries
-      * summary ([[graft.functions.MisraGriesStrAgg]]) exploded to a
+    /** One-scan vocabulary heavy-hitters: the Misra–Gries summary
+      * over strings ([[graft.functions.MisraGriesAgg]]) exploded to a
       * (term, est) table. ≤k-entry buffer per partition through the
       * shuffle — the bounded-memory alternative to `groupBy(term)`,
       * which must shuffle the full vocabulary. Estimates carry the MG
@@ -2110,7 +2106,7 @@ object ops {
       * f > n/(k+1) present); at k ≥ |vocab| the summary is exact.
       */
     def vocabSketch(term: Column, k: Int): DataFrame =
-      df.select(graft.functions.MisraGriesStrAgg.column(k)(term).as("_mg"))
+      df.select(graft.functions.MisraGriesAgg.column[String](k)(term).as("_mg"))
         .select(explode(col("_mg")).as(Seq("term", "est")))
 
     /** Data-driven language/label ID: build per-label token profiles

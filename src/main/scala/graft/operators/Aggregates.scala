@@ -555,7 +555,7 @@ object Aggregates extends QueryModule {
     * the filter, so they're checkpointed once (vocab-sized, tiny).
     *
     * This is the exact two-pass twin of the one-pass bounded-memory
-    * Misra–Gries summary ([[graft.functions.MisraGriesAgg]],
+    * Misra–Gries summary (`graft.functions.MisraGriesAgg[String]`,
     * QualitySpec): at 100 TB the MG aggregator answers the same
     * question in one scan with k counters per partition; the exact
     * form here is what the oracle can verify.

@@ -136,16 +136,10 @@ object TextAnalysis extends QueryModule {
     import graft.api.ops._
     val d = docs(spark, dir).withHashSplit(col("doc_id"))
       .select(col("lang"), col("split"), split(col("text"), " ").as("t"))
-    val grams = when(size(col("t")) >= 3,
-      transform(sequence(lit(0), size(col("t")) - 3),
-        i => concat_ws(" ",
-          element_at(col("t"), (i + 1).cast("int")),
-          element_at(col("t"), (i + 2).cast("int")),
-          element_at(col("t"), (i + 3).cast("int")))))
-      .otherwise(array().cast("array<string>"))
     // pinned: feeds the train and test legs
     val inst = pinLineage(d
-      .select(col("lang"), col("split"), explode(grams).as("gs"))
+      .select(col("lang"), col("split"),
+        explode(ngrams(col("t"), 3)).as("gs"))
       .select(col("lang"), col("split"), md5(col("gs")).as("g")))
     val train = inst.filter(col("split") === "train")
       .select("lang", "g").distinct()
@@ -1311,12 +1305,6 @@ object TextAnalysis extends QueryModule {
     */
   val textNovelty: Q = (spark, dir) => {
     import graft.api.ops._
-    val n = 3
-    val grams = when(size(col("_t")) >= n,
-      transform(sequence(lit(0), size(col("_t")) - n),
-        i => concat_ws(" ", (0 until n).map(j =>
-          element_at(col("_t"), (i + lit(j + 1)).cast("int"))): _*)))
-      .otherwise(array().cast("array<string>"))
     // ONE exchange keyed on the gram digest `g` does triple duty: the
     // repartition colocates (doc_id, g) so the distinct needs no
     // second exchange (hash(g) clusters every (doc_id, g) duplicate),
@@ -1326,7 +1314,7 @@ object TextAnalysis extends QueryModule {
     // re-exchanged).
     val inst = graft.api.ops.pinLineage(docs(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("_t"))
-      .select(col("doc_id"), explode(grams).as("_gs"))
+      .select(col("doc_id"), explode(ngrams(col("_t"), 3)).as("_gs"))
       .select(col("doc_id"), md5(col("_gs")).as("g"))
       .keyedBy(col("g"))
       .distinct())

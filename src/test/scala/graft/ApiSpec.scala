@@ -830,12 +830,18 @@ class ApiSpec extends SparkSpec {
     val dirty = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (1L, 3L),
       (3L, 3L), (3L, 4L))
     assert(tri(dirty) === ((4L, 4L, 1L, 1L)))
-    // broadcastEdges=false (the past-broadcast-scale path: wedge join
-    // shuffles by apex, closure by pair) — same algebra, same counts.
-    val shuffled = k4.toDF("a", "b")
-      .triangleCount("a", "b", broadcastEdges = false).head
-    assert((shuffled.getLong(0), shuffled.getLong(1), shuffled.getLong(2),
-      shuffled.getLong(3)) === ((4L, 6L, 4L, 4L)))
+    // Past the broadcast bound (here: broadcasting off) the wedge join
+    // shuffles by apex and the closure by pair — same algebra, same
+    // counts, and no broadcast hash join left in the executed plan.
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val q = k4.toDF("a", "b").triangleCount("a", "b")
+      val shuffled = q.collect().head
+      assert((shuffled.getLong(0), shuffled.getLong(1), shuffled.getLong(2),
+        shuffled.getLong(3)) === ((4L, 6L, 4L, 4L)))
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("isFinalPlan=true"), plan)
+      assert(!plan.contains("BroadcastHashJoin"), plan)
+    }
   }
 
   test("pageRank long-loop (checkpointed) branch matches the short-loop result") {

@@ -503,6 +503,30 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("ngrams matches Scala sliding(n) on short, empty and repeated-token docs") {
+    import spark.implicits._
+    import graft.api.ops._
+    // Reference: the windows of sliding(n), and none for a doc shorter
+    // than n (where sliding would yield one short window). A 3-token
+    // alphabet repeats tokens within and across grams.
+    val vocab = Vector("a", "b", "c")
+    val planted = Seq(Seq.empty[String], Seq("a"), Seq("a", "a"),
+      Seq("a", "a", "a"), Seq("b", "a", "b", "a", "b", "a"))
+    val docs = planted ++ (0 until 20).map { d =>
+      val len = sample(Gen.choose(0, 9), 700 + d)
+      (0 until len).map(i => vocab(sample(Gen.choose(0, 2), 700 + d * 31 + i)))
+    }
+    val frame = docs.toDF("t")
+    for (n <- Seq(2, 3, 6)) {
+      val expect = docs.map(t =>
+        if (t.length < n) Seq.empty[String]
+        else t.sliding(n).map(_.mkString(" ")).toSeq)
+      val got = frame.select(ngrams(col("t"), n)).collect()
+        .map(_.getSeq[String](0)).toSeq
+      assert(got === expect, s"n=$n: ngrams != sliding")
+    }
+  }
+
   test("bpeMergeTable matches an imperative BPE trainer on random corpora") {
     import spark.implicits._
     import graft.api.ops._

@@ -418,7 +418,7 @@ class QualitySpec extends SparkSpec {
     val k = 50
     val bound = n / (k + 1)
     val res = spark.createDataset(all).repartition(8)
-      .select(MisraGriesAgg.column(k)(col("value")))
+      .select(MisraGriesAgg.column[Long](k)(col("value")))
       .head.getAs[Map[Long, Long]](0)
     assert(res.size <= k, s"summary exceeded k: ${res.size}")
     val trueCounts = all.groupBy(identity).map { case (x, v) =>
@@ -465,7 +465,7 @@ class QualitySpec extends SparkSpec {
   }
 
   test("string Misra-Gries: MG bounds under forced decrements; exact at k>=vocab") {
-    import graft.functions.MisraGriesStrAgg
+    import graft.functions.MisraGriesAgg
     val toks = Tables(spark, sfDir, "documents")
       .select(explode(split(col("text"), " ")).as("term"))
     val exact = toks.groupBy("term").agg(count(lit(1)).as("n"))
@@ -476,7 +476,7 @@ class QualitySpec extends SparkSpec {
     val k = 8
     val bound = n / (k + 1)
     val res = toks.repartition(8)
-      .select(MisraGriesStrAgg.column(k)(col("term")))
+      .select(MisraGriesAgg.column[String](k)(col("term")))
       .head.getAs[Map[String, Long]](0)
     assert(res.size <= k)
     exact.filter(_._2 > bound).foreach { case (t, f) =>
@@ -489,7 +489,7 @@ class QualitySpec extends SparkSpec {
     // the frequency table — the property q_text_vocab_sketch's exact
     // DuckDB oracle relies on.
     val full = toks.repartition(8)
-      .select(MisraGriesStrAgg.column(math.max(128, exact.size))(col("term")))
+      .select(MisraGriesAgg.column[String](math.max(128, exact.size))(col("term")))
       .head.getAs[Map[String, Long]](0)
     assert(full === exact, "k >= vocab must reproduce exact counts")
   }
