@@ -11,7 +11,7 @@ SF="${1:-/root/testdata/sf0.01}"
 echo "== 1/5 SURVEY.md §2 inventory drift =="
 python3 dev/check_inventory.py
 
-echo "== 2/5 one pin path, one owner per query =="
+echo "== 2/5 one pin path, one owner per query, one testdata reader =="
 if grep -rnE "\.(localCheckpoint|checkpoint)\(" src/main --include=*.scala \
     | grep -v "/PinBridge.scala:"; then
   echo "direct pin above: route it through graft.api.ops.pinLineage"
@@ -22,6 +22,13 @@ fi
 # query allocates belongs to its fork (PinBridge.close releases it).
 if grep -rnE "getPersistentRDDs|/dev/shm" src/main --include=*.scala; then
   echo "global sweep or fixed scratch root above: use the query's fork"
+  exit 1
+fi
+# A testdata read outside Tables infers its schema from the footer with
+# a job of its own on every call; Tables reads each footer once.
+if grep -rnF 'spark.read.parquet(s"$dir/' src/main --include=*.scala \
+    | grep -v "/Tables.scala:"; then
+  echo "testdata read above: load it through graft.Tables"
   exit 1
 fi
 

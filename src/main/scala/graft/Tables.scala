@@ -2,12 +2,21 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table loader + output-normalization helpers shared by every query.
   *
   * All driver testdata is one parquet file per table under an sf dir
   * (TESTDATA.md). Loading goes through here so partition/pushdown config
-  * stays in one place.
+  * stays in one place, and so each file's footer is read once: a plain
+  * `spark.read.parquet` infers the schema with a Spark job per call,
+  * while a read given the schema runs none. The schema is inferred on
+  * the first read of a file identity — the path, the length and
+  * modification time of each file under it, and the
+  * `spark.sql.legacy.parquet.nanosAsLong` setting it is read under —
+  * and given to every later read ([[schemaOf]]). A rewritten file has a
+  * new identity, so its footer is read again. Only schemas are cached,
+  * never frames or data: every query still scans its tables itself.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,8 +24,24 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") events(spark, dir) else
-      spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") events(spark, dir) else read(spark, s"$dir/$name.parquet")
+
+  private val schemas =
+    scala.collection.concurrent.TrieMap.empty[(Seq[(String, Long, Long)], String), StructType]
+
+  /** The schema `spark.read.parquet(path)` infers, read from the footer
+    * once per file identity. */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).toSeq
+      .map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sorted
+    val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    schemas.getOrElseUpdate((files, nanos), spark.read.parquet(path).schema)
+  }
+
+  private def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
 
   /** events.ts has shipped as parquet timestamp[ns] in some testdata
     * generations and timestamp[us] in others, so dispatch on the type
@@ -35,8 +60,7 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    normalizeTs(raw)
+    normalizeTs(read(spark, s"$dir/events.parquet"))
   }
 
   /** Normalize an events frame's `ts` column to TimestampType (µs),

@@ -1,10 +1,10 @@
 package graft.api
 
-import graft.functions.{CentroidAgg, GraftFunctions}
+import graft.functions.{CentroidAgg, GraftFunctions, TopLabel}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** The engine's user-facing, table-agnostic API: every operator takes
   * and returns a `DataFrame`, parameterized by `Column`s, so it runs on
@@ -576,6 +576,56 @@ object ops {
       .unionByName(half.select(col("t").as("s"), col("s").as("t")))
       .distinct(),
       col("s"))
+
+  /** Seeded walks over the undirected graph of the half edge list
+    * `half` (`s`, `t`): the `seeds` positive node ids, first by (md5
+    * of the id as a string, id), each walk `steps` steps; at step k a
+    * walker on node u moves to the neighbour v with the smallest
+    * (md5("k:u:v"), v) — a content-derived coin both engines replay
+    * exactly. Output: (seed, step, node), step 0 on the seed itself.
+    *
+    * Scale: the adjacency ([[symAdjacency]]) is built and pinned once.
+    * When it fits one task ([[GraphKernels.fits]]), the walks run there
+    * in memory (`GraphKernels.walks`). Otherwise each step is one join
+    * of the seed-count-sized frontier (broadcast side) against it, and
+    * the per-seed argmin is min(struct(hash, dst)) — a partial-agg'd
+    * aggregate (map-side combine), NOT a window sort.
+    */
+  private[graft] def randomWalks(half: DataFrame, seeds: Int, steps: Int)
+      : DataFrame = {
+    val edges = symAdjacency(half)
+    val s = edges.schema("s")
+    if (GraphKernels.fits(edges))
+      GraphKernels.finish(edges, StructType(Seq(
+        StructField("seed", s.dataType, s.nullable),
+        StructField("step", IntegerType, nullable = false),
+        StructField("node", s.dataType))))(GraphKernels.walks(seeds, steps))
+    else walkSteps(edges.select(col("s").as("src"), col("t").as("dst")),
+      seeds, steps)
+  }
+
+  private def walkSteps(adj: DataFrame, seeds: Int, steps: Int): DataFrame = {
+    // seeds derive from the checkpointed adjacency (src > 0 ⇔
+    // customer side) — no second fact join for the seed list
+    val start = adj.filter(col("src") > 0).select(col("src").as("cu"))
+      .distinct()
+      .orderBy(md5(col("cu").cast("string")), col("cu"))
+      .limit(seeds)
+      .select(col("cu").as("seed"), col("cu").as("node"))
+    var frontier = start
+    var walk = start.withColumn("step", lit(0))
+    for (s <- 1 to steps) {
+      val h = md5(concat_ws(":", lit(s), col("src"), col("dst")))
+      val nxt = frontier
+        .join(adj, frontier("node") === adj("src"))
+        .groupBy(col("seed"))
+        .agg(min(struct(h.as("h"), col("dst").as("d"))).as("pick"))
+        .select(col("seed"), col("pick.d").as("node"))
+      walk = walk.unionByName(nxt.withColumn("step", lit(s)))
+      frontier = nxt
+    }
+    walk.select(col("seed"), col("step"), col("node"))
+  }
 
   /** Shared core of [[GraftDataFrameOps.triangleCount]] and the
     * scored `q_graph_triangles` (whose edge build pre-filters colors
@@ -1348,24 +1398,38 @@ object ops {
       * (id, rank) — UNROUNDED; callers round for oracle compares.
       *
       * Scale shape: the edge list is symmetrized, deduped and
-      * lineage-pinned once ([[symAdjacency]]) and reused every
-      * iteration (at 100 TB the edge build dominates;
-      * re-deriving it per iteration would rescan the fact table
-      * `iters` times); degrees ride along on the same checkpoint, so
-      * each iteration is exactly one shuffle-join (edges ⋈ ranks on
-      * the source id) + one partial-agg'd sum — the textbook
-      * distributed PageRank step. Ranks are checkpointed per iteration
-      * to cut the lineage (an uncheckpointed loop replans the whole
-      * prefix each time, quadratic plan growth).
+      * lineage-pinned once ([[symAdjacency]]). When that pin fits one
+      * task ([[GraphKernels.fits]]), the same synchronous rounds run
+      * there in memory (`GraphKernels.pageRank`) and nothing else is
+      * built or pinned. Otherwise it is reused every iteration (at
+      * 100 TB the edge build dominates; re-deriving it per iteration
+      * would rescan the fact table `iters` times); degrees ride along
+      * on one more pin, so each iteration is exactly one shuffle-join
+      * (edges ⋈ ranks on the source id) + one partial-agg'd sum — the
+      * textbook distributed PageRank step. Ranks are checkpointed per
+      * iteration past 5 iterations to cut the lineage (an
+      * uncheckpointed loop replans the whole prefix each time,
+      * quadratic plan growth).
       */
     def pageRank(a: String, b: String, iters: Int = 3,
                  damping: Double = 0.85): DataFrame = {
       require(iters >= 1 && iters <= 50, s"iters must be in [1,50]: $iters")
-      // Pin the edges ONCE, keyed on the join key when large enough
-      // (see [[pinKeyed]]), so none of the `iters` joins below
+      val edges = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
+      val t = edges.schema("t")
+      if (GraphKernels.fits(edges))
+        GraphKernels.finish(edges, StructType(Seq(
+          StructField("id", t.dataType, t.nullable),
+          StructField("rank", DoubleType))))(
+          GraphKernels.pageRank(iters, damping))
+      else rankRounds(edges, iters, damping)
+    }
+
+    private def rankRounds(edges: DataFrame, iters: Int, damping: Double)
+        : DataFrame = {
+      // The edges are pinned ONCE, keyed on the join key when large
+      // enough (see [[pinKeyed]]), so none of the `iters` joins below
       // re-exchanges the (large) edge side — only the rank side
       // (O(nodes)) shuffles per iteration.
-      val edges = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
       val deg = edges.groupBy("s").agg(count(lit(1)).as("_deg"))
       val withDeg = pinLineage(edges.join(deg, "s"))
       // Lineage pinning is only needed when the loop is long: each
@@ -1407,30 +1471,39 @@ object ops {
       * fixpoint probe would be wrong here).
       *
       * Scale shape = [[pageRank]]: the (doubled, deduped) edge list
-      * is checkpointed and hash-partitioned ONCE on the join key;
-      * each round joins the O(nodes) label frame to it, partial-aggs
-      * the (node, label) counts, and takes the per-node argmax as a
-      * second aggregate, min(struct(−count, label)) — a SortAggregate
-      * behind a Sort at both levels, shuffling only label rows.
+      * is checkpointed and hash-partitioned ONCE on the join key. When
+      * that pin fits one task ([[GraphKernels.fits]]), the same rounds
+      * run there in memory (`GraphKernels.propagate`). Otherwise each
+      * round joins the O(nodes) label frame to it, partial-aggs the
+      * (node, label) counts, and takes the per-node argmax as a second
+      * aggregate (`TopLabel`), whose two-slot buffer plans as a
+      * HashAggregate at both levels, shuffling only label rows.
       * Output: (id, label) — nodes sharing a label after
       * `iters` rounds form the community.
       */
     def labelPropagation(a: String, b: String, iters: Int = 2): DataFrame = {
       require(iters >= 1 && iters <= 20, s"iters must be in [1,20]: $iters")
       val edges = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
+      val (s, t) = (edges.schema("s"), edges.schema("t"))
+      if (GraphKernels.fits(edges))
+        GraphKernels.finish(edges, StructType(Seq(
+          StructField("id", t.dataType, t.nullable),
+          StructField("label", s.dataType))))(GraphKernels.propagate(iters))
+      else labelRounds(edges, iters)
+    }
+
+    private def labelRounds(edges: DataFrame, iters: Int): DataFrame = {
       val pin: DataFrame => DataFrame =
         if (iters > 5) pinLineage(_) else identity
       var labels = pin(edges.select(col("s").as("id")).distinct()
         .withColumn("label", col("id")))
       for (_ <- 1 to iters) {
-        // argmax-by-(count desc, label asc) as min(struct(−count,
-        // label)) — a second aggregate instead of a row_number window
-        // (measured 2.3 s → 2.1 s LPA, 3.4 s → 2.5 s modularity
-        // min-of-3 at sf0.1). It is NOT a hash aggregate: min over a
-        // struct has no hash-aggregate buffer, so Spark plans it as a
-        // SortAggregate behind a Sort, at both the partial and the
-        // final level; negating the count is safe (it is bounded by
-        // the edge count).
+        // argmax-by-(count desc, label asc) as a second aggregate
+        // instead of a row_number window (measured 2.3 s → 2.1 s LPA,
+        // 3.4 s → 2.5 s modularity min-of-3 at sf0.1, as
+        // min(struct(−count, label))); `TopLabel` keeps the best
+        // (count, label) in two fixed-width slots, so both levels are
+        // hash aggregates rather than a Sort + SortAggregate each.
         // The label join keys on `s` — the key the edge list is
         // hash-partitioned on — and relabels `t`: over a SYMMETRIC
         // edge set {(u,v)} = {(v,u)} the (t, label(s)) pairs are the
@@ -1442,8 +1515,7 @@ object ops {
           .groupBy(col("t").as("id"), col("label"))
           .agg(count(lit(1)).as("_c"))
           .groupBy("id")
-          .agg(min(struct((-col("_c")).as("_nc"), col("label"))).as("_m"))
-          .select(col("id"), col("_m.label").as("label")))
+          .agg(TopLabel.column(col("_c"), col("label")).as("label")))
         // Pinned-rounds path only: release round N−1's label pin once
         // round N is materialized (see pageRank).
         if (iters > 5) releasePin(labels)

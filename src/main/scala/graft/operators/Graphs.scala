@@ -318,39 +318,19 @@ object Graphs extends QueryModule {
     * would make.
     *
     * Scale: the adjacency (distinct edges, both directions) builds
-    * once from one fact join; each step is one join of the
+    * once from one fact join and is pinned. When it fits one task it
+    * is walked there in memory; otherwise each step is one join of the
     * seed-count-sized frontier (broadcast side) against it, and the
     * per-seed argmin is min(struct(hash, dst)) — a partial-agg'd
     * aggregate (map-side combine), NOT a window sort. Steps are a
     * fixed small count, so the loop is O(steps) broadcast joins with
     * driver-held control only; 10⁶ seeds would shuffle the frontier
-    * instead of broadcasting, same plan otherwise.
+    * instead of broadcasting, same plan otherwise. See
+    * [[graft.api.ops.randomWalks]].
     */
-  val graphRandomWalks: Q = (spark, dir) => {
-    val adj = graft.api.ops.symAdjacency(GraphSpine.factHalf(spark, dir))
-      .select(col("s").as("src"), col("t").as("dst"))
-    // seeds derive from the checkpointed adjacency (src > 0 ⇔
-    // customer side) — no second fact join for the seed list
-    val seeds = adj.filter(col("src") > 0).select(col("src").as("cu"))
-      .distinct()
-      .orderBy(md5(col("cu").cast("string")), col("cu"))
-      .limit(10)
-      .select(col("cu").as("seed"), col("cu").as("node"))
-    var frontier = seeds
-    var walk = seeds.withColumn("step", lit(0))
-    for (s <- 1 to 4) {
-      val h = md5(concat_ws(":", lit(s), col("src"), col("dst")))
-      val nxt = frontier
-        .join(adj, frontier("node") === adj("src"))
-        .groupBy(col("seed"))
-        .agg(min(struct(h.as("h"), col("dst").as("d"))).as("pick"))
-        .select(col("seed"), col("pick.d").as("node"))
-      walk = walk.unionByName(nxt.withColumn("step", lit(s)))
-      frontier = nxt
-    }
-    walk.select(col("seed"), col("step"), col("node"))
+  val graphRandomWalks: Q = (spark, dir) =>
+    graft.api.ops.randomWalks(GraphSpine.factHalf(spark, dir), seeds = 10, steps = 4)
       .orderBy("seed", "step")
-  }
 
   /** Bipartite butterfly census over customer↔supplier — the 2×2
     * biclique count that measures co-purchase cohesion WITHOUT the

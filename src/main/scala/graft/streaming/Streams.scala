@@ -164,24 +164,14 @@ object Streams {
     * File-source streams need an explicit schema, and the physical type
     * of `ts` has varied across testdata generations (timestamp[ns] →
     * LongType nanos under `nanosAsLong`; timestamp[us] → TimestampNTZ).
-    * Peek at the footer with a batch read and reuse exactly the schema
-    * Spark infers, then normalize `ts` the same way as the batch path
-    * ([[graft.Tables.normalizeTs]]).
+    * Take exactly the schema a batch read infers, from the footer
+    * schema cache the batch loader keeps ([[graft.Tables.schemaOf]], one
+    * footer read per file identity), then normalize `ts` the same way as
+    * the batch path ([[graft.Tables.normalizeTs]]).
     */
-  /** Footer-schema cache: every drained query builds its own file
-    * stream, and an uncached schema lookup costs a parquet footer read
-    * + session setup per drain — pure fixed overhead across the
-    * ~18-query streaming family. Keyed by dir; testdata regeneration
-    * between JVM runs invalidates naturally (new process, empty map).
-    */
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String,
-      org.apache.spark.sql.types.StructType]
-
   def eventsFileStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = schemaCache.getOrElseUpdate(dir,
-      spark.read.parquet(s"$dir/events.parquet").schema)
+    val fileSchema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     // The file source wants a directory. Driver testdata lays events
     // out as ONE file in the sf dir — glob-filter to just it. A
     // production landing zone (and the ScaleUp rehearsal output) is a

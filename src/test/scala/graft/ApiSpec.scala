@@ -467,7 +467,7 @@ class ApiSpec extends SparkSpec {
     // action is read from its execution, not its stages. Bus delivery
     // is ordered: once a marker job submitted after `body` has been
     // seen, so has everything `body` started.
-    def actionsOf(body: => Map[Long, Long]): (Map[Long, Long], List[String], Int) = {
+    def actionsOf[T](body: => T): (T, List[String], Int) = {
       val actions = new ConcurrentLinkedQueue[String]()
       val jobs = new AtomicInteger()
       val marker = new CountDownLatch(1)
@@ -518,6 +518,21 @@ class ApiSpec extends SparkSpec {
       // With the bound on, the same graph finishes in one task.
       val (one, _, oneJobs) = actionsOf(run())
       assert(one === expect, name)
+      assert(oneJobs < distJobs,
+        s"$name: $oneJobs jobs on the one-task path, $distJobs distributed")
+    }
+    // The fixed-iteration ops run no convergence probe; with the bound
+    // on they too finish in one task, in fewer jobs, with the same
+    // ranks (at 1e-9: float sums follow the partitioning) and labels.
+    val fixed = Seq[(String, () => Map[Long, Long])](
+      ("pageRank", () => edges.pageRank("a", "b", iters = 3).collect()
+        .map(r => r.getLong(0) -> math.round(r.getDouble(1) * 1e9)).toMap),
+      ("labelPropagation", () => rows(edges.labelPropagation("a", "b", iters = 2))))
+    for ((name, run) <- fixed) {
+      val (dist, _, distJobs) = actionsOf(GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(run()))
+      val (one, _, oneJobs) = actionsOf(run())
+      assert(one === dist, name)
       assert(oneJobs < distJobs,
         s"$name: $oneJobs jobs on the one-task path, $distJobs distributed")
     }

@@ -1400,7 +1400,10 @@ class PlanSpec extends SparkSpec {
 
   test("q_graph_random_walks: per-step argmin is an aggregate, " +
       "not a window; no cartesian") {
-    val p = plan("q_graph_random_walks")
+    // The distributed steps: a graph this small is otherwise walked in
+    // one task.
+    val p = GraftSession.withConf(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(plan("q_graph_random_walks"))
     // the per-seed neighbor pick must be min(struct(h,dst)) — a
     // partial-agg'd aggregate with map-side combine — never a
     // sort-the-candidates window

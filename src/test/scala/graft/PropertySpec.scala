@@ -302,15 +302,80 @@ class PropertySpec extends SparkSpec {
       "connectedComponents" -> (_.connectedComponents("a", "b")),
       "connectedComponentsStar" -> (_.connectedComponentsStar("a", "b")),
       "kCore" -> (_.kCore("a", "b", k = 2)),
-      "bfsHops" -> (_.bfsHops("a", "b", seed = 3L, maxHops = 2)))
+      "bfsHops" -> (_.bfsHops("a", "b", seed = 3L, maxHops = 2)),
+      "pageRank" -> (_.pageRank("a", "b")),
+      "labelPropagation" -> (_.labelPropagation("a", "b")))
+    // Ranks are float sums whose order follows the partitioning: they
+    // compare at 1e-9, every other cell exactly.
+    def cells(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(_.toSeq.map { case x: Double => math.rint(x * 1e9); case x => x }).toSet
     for (df <- frames; (name, op) <- graphOps) {
       val one = op(df)
       val dist = distributed(op(df))
       assert(one.schema === dist.schema, s"$name on ${df.schema.simpleString}")
-      assert(one.collect().toSet === dist.collect().toSet, name)
+      assert(cells(one) === cells(dist), name)
     }
     assert(frames.head.connectedComponents("a", "b").schema("id").dataType ===
       org.apache.spark.sql.types.IntegerType)
+  }
+
+  /** A seeded dirty graph over ids 0..n−1: duplicate and reversed
+    * edges, two self-loops, two pendant (degree-1) nodes and one edge
+    * with a null endpoint. */
+  private def dirtyGraph(seed: Int, n: Int): Seq[(Option[Long], Option[Long])] = {
+    val raw = (0 until 30 + 3 * seed).map { i =>
+      (sample(Gen.choose(0, n - 1), seed * 5000 + i).toLong,
+        sample(Gen.choose(0, n - 1), seed * 5000 + i + 777).toLong)
+    }
+    val dirty = raw ++ raw.take(4) ++ raw.take(3).map(_.swap) ++
+      Seq((2L, 2L), (3L, 3L), (0L, 100L + seed), (1L, 200L + seed))
+    dirty.map { case (a, b) => (Option(a), Option(b)) } :+ ((Some(4L), None))
+  }
+
+  test("pageRank is the same on both paths over dirty seeded graphs") {
+    import spark.implicits._
+    import graft.api.ops._
+    // iters = 6 takes the rounds' per-round pins.
+    for (seed <- 1 to 5; iters <- Seq(3, 6)) {
+      val df = dirtyGraph(seed, 20).toDF("a", "b")
+      def ranks() = df.pageRank("a", "b", iters = iters).collect()
+        .map(r => Option(r.get(0)) -> r.getDouble(1)).toMap
+      val (one, dist) = (ranks(), distributed(ranks()))
+      assert(one.keySet === dist.keySet, s"seed=$seed iters=$iters")
+      assert(one.keySet.contains(None), s"seed=$seed: no null-endpoint rank")
+      for ((id, r) <- dist) {
+        assert(math.abs(one(id) - r) <= 1e-9, s"seed=$seed iters=$iters id=$id")
+        assert(math.floor(one(id) * 10000 + 0.5) === math.floor(r * 10000 + 0.5),
+          s"seed=$seed iters=$iters id=$id: 4dp")
+      }
+    }
+  }
+
+  test("labelPropagation is the same on both paths over dirty seeded graphs") {
+    import spark.implicits._
+    import graft.api.ops._
+    for (seed <- 1 to 5; iters <- Seq(1, 2, 6)) {
+      val df = dirtyGraph(seed, 20).toDF("a", "b")
+      def labels() = df.labelPropagation("a", "b", iters = iters).collect()
+        .map(_.toSeq).sortBy(_.toString)
+      val one = labels()
+      assert(one === distributed(labels()), s"seed=$seed iters=$iters")
+      assert(one.exists(_.head == null), s"seed=$seed: no null-endpoint label")
+    }
+  }
+
+  test("randomWalks is the same on both paths over dirty seeded graphs") {
+    import spark.implicits._
+    // Seeds 1..5 over 20 nodes, 4 seeds of 6 steps: walks that reach
+    // a pendant or the null endpoint end there.
+    for (seed <- 1 to 5) {
+      val half = dirtyGraph(seed, 20).toDF("s", "t")
+      def walks() = graft.api.ops.randomWalks(half, seeds = 4, steps = 6)
+        .collect().map(_.toSeq).sortBy(r => (r(0).toString, r(1).toString))
+      val one = walks()
+      assert(one.length > 4, s"seed=$seed: no step taken")
+      assert(one === distributed(walks()), s"seed=$seed")
+    }
   }
 
   test("triangleCount(exact) matches brute force on seeded random graphs") {

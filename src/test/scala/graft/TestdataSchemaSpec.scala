@@ -67,6 +67,60 @@ class TestdataSchemaSpec extends SparkSpec {
     assert(yr > 2000 && yr < 2100, s"events ts year $yr")
   }
 
+  test("a table's footer is read once, and again once it is rewritten") {
+    import spark.implicits._
+    import java.nio.file.{Files, StandardCopyOption}
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // Jobs `body` starts; a marker job submitted after it shows that the
+    // listener bus has delivered them all.
+    def jobsOf[T](body: => T): (T, Int) = {
+      val jobs = new AtomicInteger()
+      val marker = new CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(_.getProperty("graft.test.marker") != null))
+            marker.countDown()
+          else jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try {
+        val out = body
+        sc.setLocalProperty("graft.test.marker", "end")
+        try sc.parallelize(Seq(1), 1).count()
+        finally sc.setLocalProperty("graft.test.marker", null)
+        assert(marker.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+        (out, jobs.get)
+      } finally sc.removeSparkListener(listener)
+    }
+    val dir = Files.createTempDirectory("graft-tables")
+    // One parquet file named like a testdata table: `$dir/t.parquet`.
+    def write(df: org.apache.spark.sql.DataFrame): Unit = {
+      val tmp = dir.resolve("tmp")
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, dir.resolve("t.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    }
+    try {
+      write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+      val (first, firstJobs) = jobsOf(Tables(spark, dir.toString, "t"))
+      assert(firstJobs > 0, "the first read infers the schema from the footer")
+      val (again, againJobs) = jobsOf(Tables(spark, dir.toString, "t"))
+      assert(againJobs === 0, "the second read of the same file read its footer")
+      assert(again.schema === first.schema)
+      assert(again.orderBy("k").as[(Long, String)].collect() === Array((1L, "a"), (2L, "b")))
+      write(Seq((3L, 0.5, 7)).toDF("k", "x", "y"))
+      val rewritten = Tables(spark, dir.toString, "t")
+      assert(rewritten.columns.toSeq === Seq("k", "x", "y"))
+      assert(rewritten.as[(Long, Double, Int)].collect() === Array((3L, 0.5, 7)))
+    } finally {
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.delete(p))
+    }
+  }
+
   test("normalizeTs dispatches on LongType nanos and TimestampNTZ alike") {
     import spark.implicits._
     val usWanted = 1700000000000000L // 2023-11-14 22:13:20 UTC in µs
