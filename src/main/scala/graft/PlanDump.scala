@@ -100,7 +100,7 @@ object PlanDump {
       "q_ts_decay" -> "recency decay: 1-row max broadcast (BNLJ), exact-integer partial-agg'd user hash-agg — the only exchange",
       "q_sim_knn_graph" -> "exact kNN graph: anchor batch BROADCAST onto one corpus pass (BNLJ), per-anchor top-k window is the only hash exchange",
       "q_text_hashing_trick" -> "feature hashing: explode reduced map-side into (doc, bucket) partials; norm agg + join reuse doc_id partitioning",
-      "q_graph_lpa" -> "LPA: per round one edge join + a hash count agg, then the argmax as top_label(count, label) — a hash aggregate at both levels, no sort, no rank window",
+      "q_graph_lpa" -> "LPA: per round one edge join + a hash count agg, then the argmax as min(struct(-count,label)) — a SortAggregate behind a Sort at both levels, no rank window",
       "q_embed_kmeans" -> "Lloyd k-means: per iteration one (cluster, dim) partial-agg rollup; k*dim cells shuffle, vectors never do",
       "q_embed_pca_power" -> "PCA power iteration: one (i, j) integer Gram rollup, then 64-row frame math",
       "q_text_bpe_encode" -> "BPE encode: merges learn+apply on the vocab-bounded dict; word->count map broadcast onto the corpus",

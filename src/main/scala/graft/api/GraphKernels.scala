@@ -36,22 +36,24 @@ private[api] object GraphKernels {
     pin.schema.forall(f => integral(f.dataType)) && ops.withinBroadcast(pin)
 
   /** Runs `kernel` in one task over the two columns of the pinned
-    * edge frame `edges`, a null endpoint passed as None, and pins the
-    * rows it returns, typed as `schema`: the distributed path's output,
-    * so an int id comes back as an int. A kernel emits each row as a
-    * tuple whose id cells are `Long`s (None for a null id); every
-    * other cell passes through as it is. */
+    * edge frame `edges`, a null endpoint passed as None, and types the
+    * rows it returns as `schema`: the distributed path's output, so an
+    * int id comes back as an int. A kernel emits each row as a tuple
+    * whose id cells are `Long`s (None for a null id); every other cell
+    * passes through as it is. The frame is not pinned: an op whose
+    * distributed path returns a pin pins it too ([[ops.pinLineage]]),
+    * so a result read once costs no job of its own. */
   def finish(edges: DataFrame, schema: StructType)(
       kernel: Iterator[(Option[Long], Option[Long])] => Iterator[Product]): DataFrame = {
     val cells = schema.fields.map(f => cell(f.dataType))
     val Array(a, b) = edges.columns
     def opt(r: Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
-    ops.pinLineage(edges
+    edges
       .select(col(a).cast(LongType), col(b).cast(LongType))
       .coalesce(1)
       .mapPartitions(rows => kernel(rows.map(r => (opt(r, 0), opt(r, 1))))
         .map(p => Row.fromSeq(p.productIterator.zip(cells)
-          .map { case (v, f) => f(v) }.toSeq)))(Encoders.row(schema)))
+          .map { case (v, f) => f(v) }.toSeq)))(Encoders.row(schema))
   }
 
   private def integral(dt: DataType): Boolean = dt match {
@@ -196,10 +198,13 @@ private[api] object GraphKernels {
   def walks(seeds: Int, steps: Int)(
       edges: Iterator[(Option[Long], Option[Long])]): Iterator[(Long, Int, Option[Long])] = {
     val adj = targets(edges)
-    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map(b => f"${b & 0xff}%02x").mkString
-    val starts = adj.keys.filter(_ > 0).toSeq.sortBy(cu => (md5(cu.toString), cu)).take(seeds)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hex = java.util.HexFormat.of()
+    def md5(s: String) =
+      hex.formatHex(md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    // Each key hashed once: a sort would rehash it at every comparison.
+    val starts = adj.keys.filter(_ > 0).toSeq.map(cu => (md5(cu.toString), cu))
+      .sorted.take(seeds).map(_._2)
     starts.iterator.flatMap { seed =>
       val rows = mutable.ArrayBuffer((seed, 0, Option(seed)))
       var at = Option(seed)

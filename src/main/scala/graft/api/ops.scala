@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.functions.{CentroidAgg, GraftFunctions, TopLabel}
+import graft.functions.{CentroidAgg, GraftFunctions}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1076,9 +1076,9 @@ object ops {
         .distinct().keyedBy(col("t")))
       val s = edges.schema("s")
       if (GraphKernels.fits(edges))
-        GraphKernels.finish(edges, StructType(Seq(
+        pinLineage(GraphKernels.finish(edges, StructType(Seq(
           StructField("id", s.dataType, s.nullable),
-          StructField("comp", s.dataType))))(GraphKernels.components)
+          StructField("comp", s.dataType))))(GraphKernels.components))
       else propagateMinLabels(edges, maxIter)
     }
 
@@ -1211,9 +1211,9 @@ object ops {
         if (done) e.select(col("u").as("id"), col("v").as("comp"))
           .unionByName(e.select(col("v").as("id"), col("v").as("comp")))
           .groupBy("id").agg(min("comp").as("comp"))
-        else GraphKernels.finish(e, StructType(Seq(
+        else pinLineage(GraphKernels.finish(e, StructType(Seq(
           StructField("id", LongType), StructField("comp", LongType))))(
-          GraphKernels.components)
+          GraphKernels.components))
       verts.join(lbl, Seq("id"), "left")
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
     }
@@ -1248,10 +1248,10 @@ object ops {
       val edges0 = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
       val s = edges0.schema("s")
       if (GraphKernels.fits(edges0))
-        GraphKernels.finish(edges0, StructType(Seq(
+        pinLineage(GraphKernels.finish(edges0, StructType(Seq(
           StructField("id", s.dataType, s.nullable),
           StructField("deg", LongType, nullable = false))))(
-          GraphKernels.peel(k, maxRounds))
+          GraphKernels.peel(k, maxRounds)))
       else peelRounds(edges0, k, maxRounds)
     }
 
@@ -1348,10 +1348,10 @@ object ops {
       val edges = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
       // Integral ids widen to the long seed, as in the rounds' union.
       if (GraphKernels.fits(edges))
-        GraphKernels.finish(edges, StructType(Seq(
+        pinLineage(GraphKernels.finish(edges, StructType(Seq(
           StructField("id", LongType, edges.schema("t").nullable),
           StructField("dist", LongType, nullable = false))))(
-          GraphKernels.bfs(seed, maxHops))
+          GraphKernels.bfs(seed, maxHops)))
       else expandHops(edges, seed, maxHops)
     }
 
@@ -1476,8 +1476,8 @@ object ops {
       * run there in memory (`GraphKernels.propagate`). Otherwise each
       * round joins the O(nodes) label frame to it, partial-aggs the
       * (node, label) counts, and takes the per-node argmax as a second
-      * aggregate (`TopLabel`), whose two-slot buffer plans as a
-      * HashAggregate at both levels, shuffling only label rows.
+      * aggregate, min(struct(−count, label)) — a SortAggregate behind
+      * a Sort at both levels, shuffling only label rows.
       * Output: (id, label) — nodes sharing a label after
       * `iters` rounds form the community.
       */
@@ -1498,12 +1498,15 @@ object ops {
       var labels = pin(edges.select(col("s").as("id")).distinct()
         .withColumn("label", col("id")))
       for (_ <- 1 to iters) {
-        // argmax-by-(count desc, label asc) as a second aggregate
-        // instead of a row_number window (measured 2.3 s → 2.1 s LPA,
-        // 3.4 s → 2.5 s modularity min-of-3 at sf0.1, as
-        // min(struct(−count, label))); `TopLabel` keeps the best
-        // (count, label) in two fixed-width slots, so both levels are
-        // hash aggregates rather than a Sort + SortAggregate each.
+        // argmax-by-(count desc, label asc) as min(struct(−count,
+        // label)) — a second aggregate instead of a row_number window
+        // (measured 2.3 s → 2.1 s LPA, 3.4 s → 2.5 s modularity
+        // min-of-3 at sf0.1). It is NOT a hash aggregate: min over a
+        // struct has no hash-aggregate buffer, so Spark plans it as a
+        // SortAggregate behind a Sort, at both the partial and the
+        // final level; negating the count is safe (it is bounded by
+        // the edge count). A two-slot declarative argmax that plans as
+        // a HashAggregate measured no faster at sf0.1.
         // The label join keys on `s` — the key the edge list is
         // hash-partitioned on — and relabels `t`: over a SYMMETRIC
         // edge set {(u,v)} = {(v,u)} the (t, label(s)) pairs are the
@@ -1515,7 +1518,8 @@ object ops {
           .groupBy(col("t").as("id"), col("label"))
           .agg(count(lit(1)).as("_c"))
           .groupBy("id")
-          .agg(TopLabel.column(col("_c"), col("label")).as("label")))
+          .agg(min(struct((-col("_c")).as("_nc"), col("label"))).as("_m"))
+          .select(col("id"), col("_m.label").as("label")))
         // Pinned-rounds path only: release round N−1's label pin once
         // round N is materialized (see pageRank).
         if (iters > 5) releasePin(labels)

@@ -245,11 +245,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  /** Runs `body` with the one-task finish of the iterative graph ops
-    * off: with no broadcast bound, no pin is small enough for it. */
-  private def distributed[T](body: => T): T =
-    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
-
   private def withCheckpointDir[T](body: => T): T = {
     val dir = java.nio.file.Files.createTempDirectory("graft-pins")
     spark.sparkContext.setCheckpointDir(dir.toString)
@@ -305,15 +300,25 @@ class PropertySpec extends SparkSpec {
       "bfsHops" -> (_.bfsHops("a", "b", seed = 3L, maxHops = 2)),
       "pageRank" -> (_.pageRank("a", "b")),
       "labelPropagation" -> (_.labelPropagation("a", "b")))
-    // Ranks are float sums whose order follows the partitioning: they
-    // compare at 1e-9, every other cell exactly.
-    def cells(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(_.toSeq.map { case x: Double => math.rint(x * 1e9); case x => x }).toSet
+    // Each op emits one row per id. Ranks are float sums whose order
+    // follows the partitioning: they compare within 1e-9, every other
+    // cell exactly.
+    def byId(d: org.apache.spark.sql.DataFrame) = {
+      val rows = d.collect()
+      val m = rows.map(r => Option(r.get(0)) -> r.toSeq.tail).toMap
+      assert(m.size === rows.length, "one row per id")
+      m
+    }
     for (df <- frames; (name, op) <- graphOps) {
       val one = op(df)
       val dist = distributed(op(df))
       assert(one.schema === dist.schema, s"$name on ${df.schema.simpleString}")
-      assert(cells(one) === cells(dist), name)
+      val (o, d) = (byId(one), byId(dist))
+      assert(o.keySet === d.keySet, name)
+      for ((id, cs) <- d; (x, y) <- o(id).zip(cs)) (x, y) match {
+        case (x: Double, y: Double) => assert(math.abs(x - y) <= 1e-9, s"$name id=$id")
+        case _ => assert(x === y, s"$name id=$id")
+      }
     }
     assert(frames.head.connectedComponents("a", "b").schema("id").dataType ===
       org.apache.spark.sql.types.IntegerType)
@@ -511,9 +516,11 @@ class PropertySpec extends SparkSpec {
           v -> counts.toSeq.minBy { case (l, c) => (-c, l) }._1
         }
       }
-      val got = dirty.toDF("a", "b").labelPropagation("a", "b", iters = iters)
+      def got() = dirty.toDF("a", "b").labelPropagation("a", "b", iters = iters)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === labels, s"seed=$seed iters=$iters: LPA != reference")
+      assert(got() === labels, s"seed=$seed iters=$iters: LPA != reference")
+      assert(distributed(got()) === labels,
+        s"seed=$seed iters=$iters: distributed LPA != reference")
     }
   }
 
