@@ -3369,17 +3369,28 @@ object ops {
     }
 
     /** Consumer side: unwrap the DEK from the attributes map, decrypt
-      * `value`, recompute and compare the HMAC. Adds (payload BINARY,
-      * verified BOOLEAN). One stateless codegen'd map stage.
+      * `value`, recompute the HMAC and compare it with the `sig`
+      * attribute on bytes. Adds (payload BINARY, verified BOOLEAN). One
+      * stateless codegen'd map stage.
+      *
+      * Tampering is rejected row by row: a wrapped DEK or a payload that
+      * does not decrypt, or a signature that does not match, gives
+      * `verified = false` and `payload = null` for that row only, so no
+      * unauthenticated plaintext leaves the opener. The DEK is unwrapped
+      * once per row, into a column dropped at the end: CollapseProject
+      * keeps it in a Project of its own, as two expressions read it.
       */
     def openEnvelope(kek: Array[Byte]): DataFrame = {
-      val rowDek = GraftFunctions.unwrap_dek(lit(kek),
-        unbase64(element_at(col("attributes"), "wrapped_dek")))
-      df.withColumn("payload",
-          GraftFunctions.aes_ecb_decrypt(col("value"), rowDek))
-        .withColumn("verified",
-          base64(GraftFunctions.hmac_sha256(rowDek, col("payload")))
-            === element_at(col("attributes"), "sig"))
+      import GraftFunctions._
+      val (dek, pt, ok) = (col("_env_dek"), col("_env_pt"), col("_env_ok"))
+      df.withColumn("_env_dek", try_eval(unwrap_dek(lit(kek),
+          unbase64(element_at(col("attributes"), "wrapped_dek")))))
+        .withColumn("_env_pt", try_eval(aes_ecb_decrypt(col("value"), dek)))
+        .withColumn("_env_ok", sig_matches(hmac_sha256(dek, pt),
+          element_at(col("attributes"), "sig")))
+        .withColumn("payload", when(ok, pt))
+        .withColumn("verified", ok)
+        .drop("_env_dek", "_env_pt", "_env_ok")
     }
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * built-in re-runs `Cipher.getInstance` (a locked JCE provider
   * lookup) for every value, which both dominates small-payload
   * encryption and ANTI-scales under executor parallelism; this
-  * expression reuses a thread-local Cipher (see
+  * expression reuses a per-thread keyed Cipher (see
   * [[CryptoCodecs.aesEcbEncrypt]]) and fuses into WholeStageCodegen
   * via its static forwarder.
   */
@@ -44,9 +44,10 @@ case class AesEcbEncrypt(left: Expression, right: Expression)
 }
 
 /** Inverse of [[AesEcbEncrypt]] — bit-compatible with the built-in
-  * `aes_decrypt(data, key, 'ECB')`, same thread-local-Cipher hot path.
+  * `aes_decrypt(data, key, 'ECB')`, same keyed-Cipher hot path.
   * Throws on malformed ciphertext like the built-in non-`try_` form;
-  * tamper-tolerant flows keep using `try_aes_decrypt`.
+  * `openEnvelope` wraps it in `GraftFunctions.try_eval`, so a tampered
+  * DEK or payload reads null for that row instead of failing the job.
   */
 case class AesEcbDecrypt(left: Expression, right: Expression)
     extends BinaryExpression {

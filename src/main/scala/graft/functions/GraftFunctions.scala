@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TryEval}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
@@ -43,10 +43,10 @@ object GraftFunctions {
     Bridge.column(BloomMightContain(Bridge.expression(key), serialized))
 
   /** Deterministic AES/ECB/PKCS5Padding — bit-compatible with the
-    * built-in `aes_encrypt(data, key, 'ECB')` but with a thread-local
-    * Cipher instead of a per-row locked provider lookup (the built-in
-    * measured ~25 µs/row and anti-scaled under parallelism on the
-    * envelope pipeline).
+    * built-in `aes_encrypt(data, key, 'ECB')` but with a per-thread
+    * keyed Cipher ([[CryptoCodecs]]) instead of a per-row locked
+    * provider lookup (the built-in measured ~25 µs/row and anti-scaled
+    * under parallelism on the envelope pipeline).
     */
   def aes_ecb_encrypt(data: Column, key: Column): Column =
     Bridge.column(
@@ -66,6 +66,18 @@ object GraftFunctions {
   /** Inverse of wrap_dek. */
   def unwrap_dek(kek: Column, wrapped: Column): Column =
     aes_ecb_decrypt(wrapped, kek)
+
+  /** Whether the base64 signature `sig` decodes to `mac` (constant-time
+    * byte compare); false, never null, on a null or malformed input.
+    */
+  private[graft] def sig_matches(mac: Column, sig: Column): Column =
+    Bridge.column(SigMatches(Bridge.expression(mac), Bridge.expression(sig)))
+
+  /** `c`, or null where evaluating it throws — the try semantics of
+    * `try_aes_decrypt`, for the engine's own expressions.
+    */
+  private[graft] def try_eval(c: Column): Column =
+    Bridge.column(TryEval(Bridge.expression(c)))
 
   /** SQL-name registration so `spark.sql("... hmac_sha256(k, d) ...")`
     * works; every [[graft.GraftSession]] injects it as a session

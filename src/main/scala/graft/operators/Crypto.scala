@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   * Scale notes: all queries are pure per-row map pipelines — zero
   * shuffles, one WholeStageCodegen span over the scan (hmac_sha256 is
   * a codegen'd Catalyst expression, not a UDF). The reference's
-  * per-message KMS RPC + DEK cache disappears: the KEK is local, so
-  * unwrap is CPU-only AES and needs no executor-side cache.
+  * per-message KMS RPC disappears: the KEK is local, so unwrap is
+  * CPU-only AES. Its DEK cache becomes the per-thread keyed Cipher/Mac
+  * cache of [[graft.functions.CryptoCodecs]].
   */
 object Crypto extends QueryModule {
 

@@ -165,6 +165,27 @@ class PlanSpec extends SparkSpec {
     assert(s.contains("CryptoCodecs.hmacSha256"), s.take(500))
   }
 
+  test("q_msg_pipeline unwraps each DEK once, keyed by the KEK, inside codegen") {
+    val qe = SparkEntry.queries("q_msg_pipeline")(spark, sfDir).queryExecution
+    val decrypts = qe.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case d: graft.functions.AesEcbDecrypt => d
+    }))
+    // One unwrap (keyed by the KEK literal) and one payload decrypt
+    // (keyed by the unwrapped DEK's column).
+    assert(decrypts.size === 2, qe.optimizedPlan.toString)
+    assert(decrypts.count(_.right.foldable) === 1, qe.optimizedPlan.toString)
+    val p = qe.executedPlan.toString
+    assert(countOcc(p, "aes_ecb_decrypt(") === 2, p)
+    assert(countOcc(p, "sig_matches(hmac_sha256(") === 1, p)
+    val s = GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      SparkEntry.queries("q_msg_pipeline")(spark, sfDir).queryExecution
+        .explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
+    }
+    assert(s.contains("CryptoCodecs.aesEcbDecrypt"), s.take(500))
+    assert(s.contains("CryptoCodecs.sigMatches"), s.take(500))
+  }
+
   test("q_sim_cosine_topk cosine fuses into whole-stage codegen") {
     val s = GraftSession.withConf(spark,
         "spark.sql.adaptive.enabled" -> "false") {
