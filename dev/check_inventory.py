@@ -6,10 +6,10 @@ The scored surface is what `SparkEntry.queries` registers — extracted
 statically from the `queries: Map[String, Q] = Map(...)` registry
 blocks each QueryModule declares (the exact maps SparkEntry
 concatenates). Extraction is anchored to those blocks — NOT to every
-`"q_*" ->` pair in src/main — because oracle maps and PlanDump's
-plan-notes picks use the same arrow syntax, and an orphaned entry
-there must not keep a removed query counted as scored (r9 ADVICE
-finding). Round-8 verdict finding: §2 had drifted 9 queries behind
+`"q_*" ->` pair in src/main — because the oracle maps use the same
+arrow syntax, and an orphaned entry there must not keep a removed
+query counted as scored (r9 ADVICE finding). Round-8 verdict
+finding: §2 had drifted 9 queries behind
 the scored inventory; this check makes that a red gate stage instead
 of a judge finding. Dev-only tool.
 """

@@ -8,10 +8,10 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 
-echo "== 1/5 SURVEY.md §2 inventory drift =="
+echo "== 1/6 SURVEY.md §2 inventory drift =="
 python3 dev/check_inventory.py
 
-echo "== 2/5 one pin path, one owner per query, one testdata reader =="
+echo "== 2/6 one pin path, one owner per query, one testdata reader =="
 if grep -rnE "\.(localCheckpoint|checkpoint)\(" src/main --include=*.scala \
     | grep -v "/PinBridge.scala:"; then
   echo "direct pin above: route it through graft.api.ops.pinLineage"
@@ -32,13 +32,18 @@ if grep -rnF 'spark.read.parquet(s"$dir/' src/main --include=*.scala \
   exit 1
 fi
 
-echo "== 3/5 sbt test =="
+echo "== 3/6 sbt test =="
 sbt -batch test
 
-echo "== 4/5 Verify @ $SF =="
-sbt -batch "runMain graft.Verify $SF target/verify_out"
+# Plans embed the shuffle partition count, which is the core count:
+# plans/golden.tsv holds the plans of a 4-core session.
+echo "== 4/6 Verify @ $SF =="
+SPARK_GRAFT_CPUS=4 sbt -batch "runMain graft.Verify $SF target/verify_out"
 
-echo "== 5/5 DuckDB oracle differential =="
+echo "== 5/6 plans match plans/golden.tsv =="
+python3 dev/check_plans.py target/verify_out
+
+echo "== 6/6 DuckDB oracle differential =="
 python3 dev/check_oracle.py "$SF" target/verify_out
 
 echo "GATE GREEN"

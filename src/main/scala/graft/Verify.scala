@@ -1,7 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.ExplainMode
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB differential compare. Each query's
+  * formatted plan (the AQE initial plan, before the write runs) goes to
+  * `<outDir>/_plans/<name>.txt`; `dev/check_plans.py` hashes those
+  * against `plans/golden.tsv`. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // Optional 3rd arg: comma-separated query-name filter (iterating on
@@ -10,15 +14,21 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val queries = SparkEntry.select(args.lift(2))
     val spark = GraftSession()
-    new java.io.File(outDir).mkdirs()
+    // Plans an earlier run left in the same dir are not this run's.
+    val planDir = Paths.get(outDir, "_plans")
+    Option(planDir.toFile.listFiles).foreach(_.foreach(_.delete()))
+    Files.createDirectories(planDir)
     // A query that throws must be LOUD: it is recorded in
     // verify_errors.json, counted on stdout, and fails the exit code —
     // otherwise a crashing query silently vanishes from the driver's
     // CORRECTNESS compare (round 7 lost 33 queries exactly this way).
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     queries.foreach { case (name, fn) =>
-      GraftSession.runQuery(fn(spark, sfDir))(_.coalesce(1).write
-        .mode("overwrite").parquet(s"$outDir/$name"))._2.foreach { e =>
+      GraftSession.runQuery(fn(spark, sfDir)) { df =>
+        Files.writeString(planDir.resolve(s"$name.txt"),
+          df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }._2.foreach { e =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
       }

@@ -40,9 +40,9 @@ private[api] object GraphKernels {
     * rows it returns as `schema`: the distributed path's output, so an
     * int id comes back as an int. A kernel emits each row as a tuple
     * whose id cells are `Long`s (None for a null id); every other cell
-    * passes through as it is. The frame is not pinned: an op whose
-    * distributed path returns a pin pins it too ([[ops.pinLineage]]),
-    * so a result read once costs no job of its own. */
+    * passes through as it is. The frame is not pinned, so a result
+    * read once costs no job of its own; the two components forms pin
+    * it ([[ops.pinLineage]]). */
   def finish(edges: DataFrame, schema: StructType)(
       kernel: Iterator[(Option[Long], Option[Long])] => Iterator[Product]): DataFrame = {
     val cells = schema.fields.map(f => cell(f.dataType))

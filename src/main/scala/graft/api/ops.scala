@@ -1248,10 +1248,10 @@ object ops {
       val edges0 = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
       val s = edges0.schema("s")
       if (GraphKernels.fits(edges0))
-        pinLineage(GraphKernels.finish(edges0, StructType(Seq(
+        GraphKernels.finish(edges0, StructType(Seq(
           StructField("id", s.dataType, s.nullable),
           StructField("deg", LongType, nullable = false))))(
-          GraphKernels.peel(k, maxRounds)))
+          GraphKernels.peel(k, maxRounds))
       else peelRounds(edges0, k, maxRounds)
     }
 
@@ -1348,10 +1348,10 @@ object ops {
       val edges = symAdjacency(df.select(col(a).as("s"), col(b).as("t")))
       // Integral ids widen to the long seed, as in the rounds' union.
       if (GraphKernels.fits(edges))
-        pinLineage(GraphKernels.finish(edges, StructType(Seq(
+        GraphKernels.finish(edges, StructType(Seq(
           StructField("id", LongType, edges.schema("t").nullable),
           StructField("dist", LongType, nullable = false))))(
-          GraphKernels.bfs(seed, maxHops)))
+          GraphKernels.bfs(seed, maxHops))
       else expandHops(edges, seed, maxHops)
     }
 
@@ -2905,21 +2905,22 @@ object ops {
       * them. On a mostly-novel 100 TB/day feed the anti-join shuffles
       * ~1% of incoming instead of all of it; the base side ships as
       * `-n·ln(fpp)/ln²2` filter bits (~1.2 MB/million keys), not as
-      * rows. The filter build is one deliberate action over the
-      * base's distinct fingerprints (same documented exception as
+      * rows. The filter is sized for the base's distinct fingerprint
+      * count at fpp 0.01, so it grows with the base rather than with
+      * a guessed bound: counting and building are two deliberate
+      * actions over those fingerprints (same documented exception as
       * [[bloomSemiJoin]]); the incoming scan runs twice (once per
       * branch of the union) — scans are the cheap leg, shuffles the
       * expensive one. Fingerprints dedupe EXACTLY on `key`: pick it
       * per policy (full-text digest, prefix digest, normalized-text
       * digest) — near-dup policies belong to the MinHash/SimHash ops.
       */
-    def incrementalNew(base: DataFrame, key: Column, baseKey: Column,
-                       expectedItems: Long = 1L << 20,
-                       fpp: Double = 0.01): DataFrame = {
+    def incrementalNew(base: DataFrame, key: Column, baseKey: Column)
+        : DataFrame = {
       val baseKeys = base.select(baseKey.cast("string").as("_bkey"))
         .distinct()
       val sketch = baseKeys.select(xxhash64(col("_bkey")).as("_bh"))
-        .stat.bloomFilter("_bh", expectedItems, fpp)
+        .stat.bloomFilter("_bh", baseKeys.count().max(1L), 0.01)
       val bos = new java.io.ByteArrayOutputStream()
       sketch.writeTo(bos)
       val d = df.withColumn("_key", key.cast("string"))

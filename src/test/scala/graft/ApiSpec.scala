@@ -648,6 +648,26 @@ class ApiSpec extends SparkSpec {
     assert(got === Seq(3L, 500L, 997L))
   }
 
+  test("incrementalNew equals the plain anti join even with false positives") {
+    import spark.implicits._
+    // A 20k-key base sizes the filter at fpp 0.01, so about 1% of the
+    // 20k incoming keys it does not hold still probe positive; the
+    // exact anti join must drop none of them.
+    val base = (1L to 40000L by 2).toDF("b")
+    val incoming = (1L to 40000L).map(i => (i, s"r$i")).toDF("k", "v")
+    val sketch = base.select(xxhash64(col("b").cast("string")).as("h"))
+      .stat.bloomFilter("h", 20000L, 0.01)
+    val falsePositives = incoming.filter(col("k") % 2 === 0)
+      .select(xxhash64(col("k").cast("string"))).as[Long].collect()
+      .count(sketch.mightContainLong)
+    assert(falsePositives > 0, "no key probed positive: the exact leg is untested")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val got = rows(incoming.incrementalNew(base, col("k"), col("b")))
+    assert(got === rows(incoming.join(base, col("k") === col("b"), "left_anti")))
+    assert(got.map(_._1) === (2L to 40000L by 2))
+  }
+
   test("weightedSample is deterministic and weight-biased") {
     import spark.implicits._
     // 500 light rows (w=1) vs 500 heavy (w=50), one stratum, k=100:
